@@ -17,10 +17,10 @@ Apache Avro 1.11 specification ("Object Container Files" +
   readers must verify it to resynchronize (and this one refuses on
   mismatch rather than resyncing silently);
 - codecs: ``null``; ``deflate`` = RAW DEFLATE (RFC 1951, no zlib
-  wrapper) decoded by this repo's hand inflater; ``snappy`` = raw
-  snappy block PLUS a 4-byte BIG-endian CRC32 of the uncompressed
-  bytes (spec quirk: the CRC is inside the block, after the
-  compressed payload) decoded by the hand snappy decoder;
+  wrapper) decoded by stdlib zlib; ``snappy`` = raw snappy block
+  PLUS a 4-byte BIG-endian CRC32 of the uncompressed bytes (spec
+  quirk: the CRC is inside the block, after the compressed payload)
+  decoded by the hand snappy decoder;
 - primitive encodings: long/int = zigzag varint (the SAME zigzag the
   protobuf codec pins), string/bytes = long length + payload,
   double = 8-byte little-endian IEEE 754, boolean = one byte 0/1,
@@ -248,9 +248,7 @@ def _iter_avro_blocks(payload: bytes):
         elif codec == "bzip2":
             from .bzip2 import decode_bz2
 
-            body = decode_bz2(body)
-            if len(body) > _MAX_BLOCK:
-                raise ValueError("avro bzip2 block exceeds size cap")
+            body = decode_bz2(body, max_output=_MAX_BLOCK)
         total_out += len(body)
         if total_out > _MAX_TOTAL:
             # per-block caps alone let many small blocks expand a

@@ -1,354 +1,41 @@
-"""Full bzip2 decode, by hand, pinned against the stdlib producer.
+"""bzip2 decode through the stdlib ``bz2`` (libbz2).
 
 Web archives (Wikipedia dumps, Common Crawl-era corpora, mail
-archives) still ship .bz2 everywhere, and unlike gzip (RFC 1952,
-already decoded in :mod:`.zipscan`), bzip2 is a genuinely different
-stack: Huffman coding with per-50-symbol table SWITCHING, move-to-
-front + zero-run (RLE2) coding, the Burrows-Wheeler transform, a
-byte-level RLE1, and two CRC layers.  All format facts are public
-(the bzip2 source's documentation and the widely published format
-specification):
+archives) still ship .bz2 everywhere. Decoding, including the block
+and stream CRCs, runs in libbz2; this module adds the repo's contract
+around it:
 
-- stream header ``BZh`` + level digit 1-9 (block size = level *
-  100 kB); everything after is a BIT stream, MSB first — blocks are
-  NOT byte-aligned;
-- block magic 48 bits ``0x314159265359`` (pi), 32-bit block CRC, a
-  deprecated ``randomized`` bit (files using it are a documented
-  ValueError boundary), 24-bit BWT origin pointer;
-- symbol map: 16-bit range bitmap, then one 16-bit bitmap per used
-  range; the Huffman alphabet is the used byte values' MTF indices
-  plus RUNA/RUNB (zero-run digits, bijective base 2) and EOB;
-- 3-bit group count (2-6), 15-bit selector count; selectors are
-  MTF-coded unary values picking the Huffman table per 50 symbols;
-- per-group code lengths: 5-bit start, then {1,inc/dec} delta bits
-  per symbol (lengths 1..20); canonical codes decode via the
-  classic limit/base/perm tables;
-- decode pipeline: Huffman+selectors -> RLE2/MTF -> the BWT last
-  column -> inverse BWT (counting sort + permutation walk) ->
-  RLE1 (4 equal bytes + count byte) -> original block;
-- block CRCs use the NON-reflected CRC-32 (poly 0x04C11DB7, the
-  bit-reversed cousin of zlib's), and the stream CRC folds block
-  CRCs with a rotate-left;
-- stream footer 48 bits ``0x177245385090`` (sqrt pi) + stream CRC.
+- exactly ONE stream is decoded: bytes after the first stream footer
+  are ignored, as ``bz2.BZ2Decompressor`` does (``bz2.decompress``
+  would concatenate streams);
+- ``max_output`` bounds decompression bombs and raises before the
+  output is allocated;
+- a truncated stream is an error, never a partial result;
+- only ``ValueError`` escapes (permissive-quarantine contract).
 
-The SYNTHESIZER is stdlib :mod:`bz2` — the same independent-producer
-pin as zipfile/tarfile/sqlite3: every table switch, run shape, and
-CRC this decoder handles comes from real third-party bytes.
+The synthesizer is the stdlib compressor as well, so every block size
+and run shape the queries decode comes from real libbz2 bytes.
 """
 
 from __future__ import annotations
 
+import bz2
+
 import numpy as np
 
-_BLOCK_MAGIC = 0x314159265359
-_STREAM_MAGIC = 0x177245385090
-_RUNA = 0
-_RUNB = 1
 
-
-def _crc_table() -> list[int]:
-    table = []
-    for i in range(256):
-        c = i << 24
-        for _ in range(8):
-            c = ((c << 1) ^ 0x04C11DB7) if c & 0x80000000 else (c << 1)
-            c &= 0xFFFFFFFF
-        table.append(c)
-    return table
-
-
-_CRC = _crc_table()
-
-
-def bz2_crc32(data: bytes, crc: int = 0xFFFFFFFF) -> int:
-    """bzip2's CRC-32: same polynomial as zlib but MSB-first
-    (non-reflected), init and final-xor 0xFFFFFFFF."""
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC[((crc >> 24) ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
-
-
-class _Bits:
-    """MSB-first bit reader; bzip2 blocks are not byte-aligned."""
-
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, data: bytes, byte_pos: int):
-        self.data = data
-        self.pos = byte_pos
-        self.acc = 0
-        self.n = 0
-
-    def read(self, k: int) -> int:
-        while self.n < k:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated bzip2 bit stream")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= k
-        out = (self.acc >> self.n) & ((1 << k) - 1)
-        self.acc &= (1 << self.n) - 1
-        return out
-
-
-def _read_lengths(bits: _Bits, n_syms: int) -> list[int]:
-    cur = bits.read(5)
-    out = []
-    for _ in range(n_syms):
-        while True:
-            if not 1 <= cur <= 20:
-                raise ValueError(f"bzip2 code length {cur} out of range")
-            if not bits.read(1):
-                break
-            cur += -1 if bits.read(1) else 1
-        out.append(cur)
+def decode_bz2(payload: bytes, max_output: int = 1 << 28) -> bytes:
+    """Decompress the first .bz2 stream of ``payload``."""
+    d = bz2.BZ2Decompressor()
+    try:
+        out = d.decompress(payload, max_output + 1)
+    except (OSError, EOFError) as exc:
+        raise ValueError(f"bzip2 stream: {exc}") from None
+    if len(out) > max_output:
+        raise ValueError(f"bzip2 output exceeds cap of {max_output} bytes")
+    if not d.eof:
+        raise ValueError("truncated bzip2 stream")
     return out
-
-
-class _Huff:
-    """Canonical-code decoder via the classic limit/base/perm tables
-    (exactly the structure the reference implementation documents)."""
-
-    __slots__ = ("limit", "base", "perm", "min_len", "max_len")
-
-    def __init__(self, lengths: list[int]):
-        self.min_len = min(lengths)
-        self.max_len = max(lengths)
-        self.perm = [
-            s
-            for ln in range(self.min_len, self.max_len + 1)
-            for s, sl in enumerate(lengths)
-            if sl == ln
-        ]
-        count = [0] * (self.max_len + 2)
-        for ln in lengths:
-            count[ln] += 1
-        self.limit = [0] * (self.max_len + 2)
-        self.base = [0] * (self.max_len + 2)
-        code = 0
-        total = 0
-        for ln in range(self.min_len, self.max_len + 1):
-            code += count[ln]
-            total += count[ln]
-            self.limit[ln] = code - 1
-            code <<= 1
-            self.base[ln + 1] = code - total
-
-    def decode(self, bits: _Bits) -> int:
-        ln = self.min_len
-        code = bits.read(ln)
-        while code > self.limit[ln]:
-            ln += 1
-            if ln > self.max_len:
-                raise ValueError("invalid bzip2 huffman code")
-            code = (code << 1) | bits.read(1)
-        idx = code - self.base[ln]
-        if not 0 <= idx < len(self.perm):
-            raise ValueError("bzip2 huffman code out of table")
-        return self.perm[idx]
-
-
-def _decode_block(bits: _Bits, max_block: int) -> tuple[bytes, int]:
-    """One block, already past the magic: returns (data, block CRC
-    read from the header)."""
-    stored_crc = bits.read(32)
-    if bits.read(1):
-        raise ValueError("randomized bzip2 blocks are unsupported "
-                         "(deprecated by the format)")
-    orig_ptr = bits.read(24)
-
-    # symbol map: which byte values occur in this block
-    ranges = bits.read(16)
-    used = []
-    for r in range(16):
-        if ranges & (0x8000 >> r):
-            bitmap = bits.read(16)
-            for b in range(16):
-                if bitmap & (0x8000 >> b):
-                    used.append(r * 16 + b)
-    if not used:
-        raise ValueError("bzip2 block with empty symbol map")
-    n_syms = len(used) + 2  # RUNA, RUNB, used[2:]..., EOB
-
-    n_groups = bits.read(3)
-    if not 2 <= n_groups <= 6:
-        raise ValueError(f"bzip2 group count {n_groups} out of range")
-    n_selectors = bits.read(15)
-    if n_selectors == 0:
-        raise ValueError("bzip2 block with zero selectors")
-    mtf_groups = list(range(n_groups))
-    selectors = []
-    for _ in range(n_selectors):
-        j = 0
-        while bits.read(1):
-            j += 1
-            if j >= n_groups:
-                raise ValueError("bzip2 selector out of range")
-        g = mtf_groups.pop(j)
-        mtf_groups.insert(0, g)
-        selectors.append(g)
-
-    tables = [_Huff(_read_lengths(bits, n_syms)) for _ in range(n_groups)]
-
-    # Huffman decode + RLE2 + MTF, straight into the BWT last column.
-    # r14: the canonical decode runs INLINE on a local MSB-first
-    # accumulator (the per-symbol method pair was the kernel's top
-    # profile line, 450k calls per 60 payloads); the output rides a
-    # plain list (numpy scalar stores are ~5x slower than list
-    # appends at this granularity).
-    eob = n_syms - 1
-    mtf = list(used)
-    out_l: list[int] = []
-    run = 0
-    run_bit = 0
-    sel_idx = -1
-    to_go = 0
-    data = bits.data
-    ndata = len(data)
-    pos = bits.pos
-    acc = bits.acc
-    nb = bits.n
-    huff = tables[selectors[0]]
-    limit = huff.limit
-    base = huff.base
-    perm = huff.perm
-    min_len = huff.min_len
-    max_len = huff.max_len
-    nperm = len(perm)
-    while True:
-        if to_go == 0:
-            sel_idx += 1
-            if sel_idx >= len(selectors):
-                raise ValueError("bzip2 block ran out of selectors")
-            huff = tables[selectors[sel_idx]]
-            limit = huff.limit
-            base = huff.base
-            perm = huff.perm
-            min_len = huff.min_len
-            max_len = huff.max_len
-            nperm = len(perm)
-            to_go = 50
-        to_go -= 1
-        # inline canonical decode (MSB-first)
-        ln = min_len
-        while nb < ln:
-            if pos >= ndata:
-                raise ValueError("truncated bzip2 bit stream")
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nb += 8
-        nb -= ln
-        code = (acc >> nb) & ((1 << ln) - 1)
-        acc &= (1 << nb) - 1
-        while code > limit[ln]:
-            ln += 1
-            if ln > max_len:
-                raise ValueError("invalid bzip2 huffman code")
-            if not nb:
-                if pos >= ndata:
-                    raise ValueError("truncated bzip2 bit stream")
-                acc = data[pos]
-                pos += 1
-                nb = 8
-            nb -= 1
-            code = (code << 1) | ((acc >> nb) & 1)
-            acc &= (1 << nb) - 1
-        idx = code - base[ln]
-        if not 0 <= idx < nperm:
-            raise ValueError("bzip2 huffman code out of table")
-        sym = perm[idx]
-        if sym <= _RUNB:
-            run += (1 + sym) << run_bit
-            run_bit += 1
-            continue
-        if run:
-            if len(out_l) + run > max_block:
-                raise ValueError("bzip2 zero-run overflows block size")
-            out_l.extend([mtf[0]] * run)
-            run = 0
-            run_bit = 0
-        if sym == eob:
-            break
-        # MTF decode: symbol k means the k-th most recent byte
-        v = mtf.pop(sym - 1)
-        mtf.insert(0, v)
-        if len(out_l) >= max_block:
-            raise ValueError("bzip2 block overflows declared size")
-        out_l.append(v)
-    bits.pos = pos
-    bits.acc = acc
-    bits.n = nb
-    n_out = len(out_l)
-
-    bwt = np.array(out_l, dtype=np.uint8)
-    if orig_ptr >= n_out:
-        raise ValueError("bzip2 BWT origin pointer past block end")
-
-    # inverse BWT: counting sort of the last column, then walk the
-    # successor permutation from orig_ptr (vectorized table build,
-    # O(n) walk)
-    counts = np.bincount(bwt, minlength=256)
-    starts = np.zeros(256, dtype=np.int64)
-    starts[1:] = np.cumsum(counts)[:-1]
-    order = np.argsort(bwt, kind="stable").tolist()
-    bwt_l = out_l
-    decoded = bytearray(n_out)
-    j = order[orig_ptr]
-    # the successor walk is inherently sequential; list indexing is
-    # ~5x numpy scalar indexing here (r14 measurement)
-    for k in range(n_out):
-        decoded[k] = bwt_l[j]
-        j = order[j]
-    block = bytes(decoded)
-
-    # RLE1: 4 identical bytes are followed by a count of extras
-    plain = bytearray()
-    i = 0
-    n = len(block)
-    while i < n:
-        b = block[i]
-        run_len = 1
-        while run_len < 4 and i + run_len < n and block[i + run_len] == b:
-            run_len += 1
-        plain += block[i : i + run_len]
-        i += run_len
-        if run_len == 4:
-            if i >= n:
-                raise ValueError("bzip2 RLE1 run missing its count byte")
-            plain += bytes([b]) * block[i]
-            i += 1
-    data = bytes(plain)
-    if bz2_crc32(data) != stored_crc:
-        raise ValueError("bzip2 block CRC mismatch")
-    return data, stored_crc
-
-
-def decode_bz2(payload: bytes) -> bytes:
-    """Decompress a complete .bz2 stream (all blocks), verifying
-    every block CRC and the folded stream CRC.  Raises ``ValueError``
-    on any malformed structure (permissive-quarantine contract)."""
-    if len(payload) < 10 or payload[:3] != b"BZh":
-        raise ValueError("not a bzip2 stream (missing BZh magic)")
-    level = payload[3] - ord("0")
-    if not 1 <= level <= 9:
-        raise ValueError(f"bad bzip2 level byte {payload[3]:#x}")
-    max_block = level * 100_000
-    bits = _Bits(payload, 4)
-    out = bytearray()
-    combined = 0
-    while True:
-        magic = bits.read(48)
-        if magic == _STREAM_MAGIC:
-            stored = bits.read(32)
-            if stored != combined:
-                raise ValueError("bzip2 stream CRC mismatch")
-            return bytes(out)
-        if magic != _BLOCK_MAGIC:
-            raise ValueError(f"bad bzip2 block magic {magic:#x}")
-        data, crc = _decode_block(bits, max_block)
-        out += data
-        combined = (((combined << 1) | (combined >> 31)) ^ crc) & 0xFFFFFFFF
 
 
 def scan_bz2(payload: bytes) -> dict:
@@ -375,12 +62,10 @@ def synth_bz2_plan(seed: int) -> dict:
 
 
 def synth_bz2(seed: int) -> bytes:
-    """A REAL .bz2 stream from the stdlib compressor (independent
-    producer).  compresslevel rotates 1..9 by seed so every block-size
-    header occurs; the data's 6-byte runs exercise RLE1 and its
-    modular byte ladder keeps 200+ symbols in the Huffman alphabet."""
-    import bz2
-
+    """A REAL .bz2 stream from the stdlib compressor. compresslevel
+    rotates 1..9 by seed so every block-size header occurs; the data's
+    6-byte runs exercise RLE1 and its modular byte ladder keeps 200+
+    symbols in the Huffman alphabet."""
     n = synth_bz2_plan(seed)["n_bytes"]
     data = bytes(((i // 6) * 13 + seed) % 250 for i in range(n))
     return bz2.compress(data, compresslevel=1 + seed % 9)

@@ -1,19 +1,11 @@
-"""Hand-rolled DEFLATE (RFC 1951) inflater.
+"""Raw DEFLATE (RFC 1951) decode through the stdlib ``zlib``.
 
-Completes the by-hand decompression family: bzip2 is fully decoded in
-``bzip2.py``, and DEFLATE — the algorithm under gzip, ZIP, PNG, and
-half the web — was the remaining stdlib-delegated kernel (PNG and the
-gzip reader use ``zlib``). This module decodes raw DEFLATE streams
-from first principles: LSB-first bit reading, stored blocks (LEN/NLEN
-verification), fixed Huffman, and dynamic Huffman with the
-code-length-code machinery (symbols 16/17/18 run-length coding of the
-code lengths themselves), then LZ77 back-reference copy with
-overlapping-match semantics.
-
-Producer pinning: the stdlib ``zlib`` COMPRESSOR (levels 0-9, default
-and Z_FIXED strategies, flush-split multi-block streams) writes the
-streams; this decoder shares no code with it. Tables below are the
-published RFC 1951 §3.2.5-3.2.7 constants.
+The ORC, PDF and NPZ readers and the ``deflate_stream_decode`` query
+all feed raw DEFLATE bodies (the gzip/zlib/ZIP wrappers stripped)
+through :func:`inflate`. Decoding runs in zlib's C inflater; this
+module adds the repo's contract around it: a ``max_output`` bound that
+raises before the output is allocated, and a truncated stream (no
+final block) is an error rather than a partial result.
 
 Error contract: only ``ValueError`` escapes (quarantine contract,
 fuzz-pinned like every other parser).
@@ -21,306 +13,23 @@ fuzz-pinned like every other parser).
 
 from __future__ import annotations
 
-# RFC 1951 §3.2.5 — length codes 257..285: (extra bits, base length)
-_LEN_EXTRA = (
-    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
-    3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0,
-)
-_LEN_BASE = (
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
-    35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258,
-)
-# distance codes 0..29
-_DIST_EXTRA = (
-    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
-    7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13,
-)
-_DIST_BASE = (
-    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-    257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-    8193, 12289, 16385, 24577,
-)
-# §3.2.7 — the order code-length-code lengths are transmitted in
-_CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
-_MAXBITS = 15
-
-
-class _Huffman:
-    """Canonical decoder TABLES over code LENGTHS (RFC 1951 §3.2.2):
-    codes of each length are consecutive integers starting where the
-    previous length's codes left off, doubled. Decoding walks one
-    bit at a time through the per-length (count, symbols)
-    formulation — the walk itself is inlined in :func:`inflate`'s
-    hot loop and in :func:`_decode` (r14: the per-bit method-call
-    pair cost ~60 % of every ORC/PDF/npz inflate)."""
-
-    __slots__ = ("count", "symbols")
-
-    def __init__(self, lengths: list[int]):
-        count = [0] * (_MAXBITS + 1)
-        for ln in lengths:
-            if ln < 0 or ln > _MAXBITS:
-                raise ValueError(f"huffman code length {ln} out of range")
-            count[ln] += 1
-        count[0] = 0
-        # a complete code consumes exactly all left-capacity; an
-        # OVER-subscribed one is undecodable garbage
-        cap = 1
-        for ln in range(1, _MAXBITS + 1):
-            cap = (cap << 1) - count[ln]
-            if cap < 0:
-                raise ValueError("over-subscribed huffman code")
-        offs = [0] * (_MAXBITS + 1)
-        for ln in range(1, _MAXBITS):
-            offs[ln + 1] = offs[ln] + count[ln]
-        symbols = [0] * (offs[_MAXBITS] + count[_MAXBITS])
-        for sym, ln in enumerate(lengths):
-            if ln:
-                symbols[offs[ln]] = sym
-                offs[ln] += 1
-        self.count = count
-        self.symbols = symbols
-
-
-def _readk(data: bytes, st: list, k: int) -> int:
-    """Pull ``k`` LSB-first bits through the accumulator state
-    ``st = [bytepos, buf, cnt]`` (cold paths: headers, dynamic-table
-    parsing; the literal/match loop inlines the same logic)."""
-    bytepos, buf, cnt = st
-    n = len(data)
-    while cnt < k:
-        if bytepos >= n:
-            raise ValueError("deflate stream truncated")
-        buf |= data[bytepos] << cnt
-        bytepos += 1
-        cnt += 8
-    st[0] = bytepos
-    st[1] = buf >> k
-    st[2] = cnt - k
-    return buf & ((1 << k) - 1)
-
-
-def _decode(data: bytes, st: list, huff: _Huffman) -> int:
-    """Canonical-walk decode against ``huff`` (cold paths)."""
-    bytepos, buf, cnt = st
-    n = len(data)
-    count = huff.count
-    code = first = index = 0
-    for ln in range(1, _MAXBITS + 1):
-        if not cnt:
-            if bytepos >= n:
-                raise ValueError("deflate stream truncated")
-            buf = data[bytepos]
-            bytepos += 1
-            cnt = 8
-        code |= buf & 1
-        buf >>= 1
-        cnt -= 1
-        c = count[ln]
-        t = code - first
-        if t < c:
-            st[0] = bytepos
-            st[1] = buf
-            st[2] = cnt
-            return huff.symbols[index + t]
-        index += c
-        first = (first + c) << 1
-        code <<= 1
-    raise ValueError("invalid huffman code (no symbol at any length)")
-
-
-def _fixed_tables() -> tuple[_Huffman, _Huffman]:
-    lit = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-    dist = [5] * 30
-    return _Huffman(lit), _Huffman(dist)
-
-
-_FIXED: tuple[_Huffman, _Huffman] | None = None
-
-
-def _dynamic_tables(data: bytes, st: list) -> tuple[_Huffman, _Huffman]:
-    """§3.2.7: the block header carries the code lengths of a
-    code-length code, which then decodes the (run-length-coded)
-    lengths of the literal/length and distance codes."""
-    hlit = _readk(data, st, 5) + 257
-    hdist = _readk(data, st, 5) + 1
-    hclen = _readk(data, st, 4) + 4
-    if hlit > 286 or hdist > 30:
-        raise ValueError(f"dynamic header out of range (hlit={hlit}, hdist={hdist})")
-    clc_lengths = [0] * 19
-    for i in range(hclen):
-        clc_lengths[_CLC_ORDER[i]] = _readk(data, st, 3)
-    clc = _Huffman(clc_lengths)
-    lengths: list[int] = []
-    while len(lengths) < hlit + hdist:
-        sym = _decode(data, st, clc)
-        if sym < 16:
-            lengths.append(sym)
-        elif sym == 16:
-            if not lengths:
-                raise ValueError("length repeat with no previous length")
-            lengths.extend([lengths[-1]] * (3 + _readk(data, st, 2)))
-        elif sym == 17:
-            lengths.extend([0] * (3 + _readk(data, st, 3)))
-        else:  # 18
-            lengths.extend([0] * (11 + _readk(data, st, 7)))
-    if len(lengths) > hlit + hdist:
-        raise ValueError("code-length runs overflow the declared counts")
-    if lengths[256] == 0:
-        raise ValueError("dynamic block gives end-of-block no code")
-    return _Huffman(lengths[:hlit]), _Huffman(lengths[hlit:])
+import zlib
 
 
 def inflate(data: bytes, max_output: int = 1 << 26) -> bytes:
     """Decode one raw DEFLATE stream (what ``zlib.compressobj(...,
-    wbits=-15)`` emits; gzip/zlib/ZIP wrappers strip to this).
-    ``max_output`` bounds decompression-bomb blowup.
-
-    r14: the bit reader is a local-variable accumulator
-    ``(bytepos, buf, cnt)`` and the literal/match loop decodes with
-    the canonical walk INLINED — the previous per-bit
-    ``read(1)``/``decode`` method pair dominated every consumer's
-    profile (605k calls per 100 ORC payloads)."""
-    global _FIXED
-    n = len(data)
-    out = bytearray()
-    st = [0, 0, 0]  # bytepos, buf (LSB-first unconsumed bits), cnt
-    final = 0
-    while not final:
-        final = _readk(data, st, 1)
-        btype = _readk(data, st, 2)
-        if btype == 3:
-            raise ValueError("reserved deflate block type 3")
-        if btype == 0:  # stored
-            bytepos, buf, cnt = st
-            drop = cnt & 7  # byte-align: discard the partial byte
-            buf >>= drop
-            cnt -= drop
-            hdr_pos = bytepos - (cnt >> 3)  # whole bytes still cached
-            if hdr_pos + 4 > n:
-                raise ValueError("stored block header truncated")
-            ln = data[hdr_pos] | (data[hdr_pos + 1] << 8)
-            nln = data[hdr_pos + 2] | (data[hdr_pos + 3] << 8)
-            if ln != (~nln & 0xFFFF):
-                raise ValueError("stored block LEN/NLEN mismatch")
-            start = hdr_pos + 4
-            if start + ln > n:
-                raise ValueError("stored block data truncated")
-            out += data[start : start + ln]
-            st = [start + ln, 0, 0]
-        else:
-            if btype == 1:
-                if _FIXED is None:
-                    _FIXED = _fixed_tables()
-                lit, dist = _FIXED
-            else:
-                lit, dist = _dynamic_tables(data, st)
-            bytepos, buf, cnt = st
-            lcount = lit.count
-            lsyms = lit.symbols
-            dcount = dist.count
-            dsyms = dist.symbols
-            while True:
-                # inline canonical walk over the literal/length code
-                code = first = index = 0
-                ln_ = 1
-                while True:
-                    if not cnt:
-                        if bytepos >= n:
-                            raise ValueError("deflate stream truncated")
-                        buf = data[bytepos]
-                        bytepos += 1
-                        cnt = 8
-                    code |= buf & 1
-                    buf >>= 1
-                    cnt -= 1
-                    c = lcount[ln_]
-                    t = code - first
-                    if t < c:
-                        sym = lsyms[index + t]
-                        break
-                    index += c
-                    first = (first + c) << 1
-                    code <<= 1
-                    ln_ += 1
-                    if ln_ > _MAXBITS:
-                        raise ValueError(
-                            "invalid huffman code (no symbol at any length)"
-                        )
-                if sym < 256:
-                    out.append(sym)
-                    continue
-                if sym == 256:
-                    break
-                if sym > 285:
-                    raise ValueError(f"invalid length symbol {sym}")
-                i = sym - 257
-                k = _LEN_EXTRA[i]
-                while cnt < k:
-                    if bytepos >= n:
-                        raise ValueError("deflate stream truncated")
-                    buf |= data[bytepos] << cnt
-                    bytepos += 1
-                    cnt += 8
-                length = _LEN_BASE[i] + (buf & ((1 << k) - 1))
-                buf >>= k
-                cnt -= k
-                # inline walk over the distance code
-                code = first = index = 0
-                ln_ = 1
-                while True:
-                    if not cnt:
-                        if bytepos >= n:
-                            raise ValueError("deflate stream truncated")
-                        buf = data[bytepos]
-                        bytepos += 1
-                        cnt = 8
-                    code |= buf & 1
-                    buf >>= 1
-                    cnt -= 1
-                    c = dcount[ln_]
-                    t = code - first
-                    if t < c:
-                        dsym = dsyms[index + t]
-                        break
-                    index += c
-                    first = (first + c) << 1
-                    code <<= 1
-                    ln_ += 1
-                    if ln_ > _MAXBITS:
-                        raise ValueError(
-                            "invalid huffman code (no symbol at any length)"
-                        )
-                if dsym > 29:
-                    raise ValueError(f"invalid distance symbol {dsym}")
-                k = _DIST_EXTRA[dsym]
-                while cnt < k:
-                    if bytepos >= n:
-                        raise ValueError("deflate stream truncated")
-                    buf |= data[bytepos] << cnt
-                    bytepos += 1
-                    cnt += 8
-                distance = _DIST_BASE[dsym] + (buf & ((1 << k) - 1))
-                buf >>= k
-                cnt -= k
-                if distance > len(out):
-                    raise ValueError(
-                        f"back-reference distance {distance} before start"
-                    )
-                # overlapping copies (distance < length) repeat the
-                # window byte-serially — the LZ77 semantics
-                if distance >= length:
-                    out += out[-distance : len(out) - distance + length]
-                else:
-                    # overlapping copy == periodic repeat of the
-                    # last ``distance`` bytes, batched
-                    pat = bytes(out[len(out) - distance :])
-                    out += (pat * (length // distance + 1))[:length]
-            st = [bytepos, buf, cnt]
-        if len(out) > max_output:
-            raise ValueError(f"inflated output exceeds {max_output} bytes")
-    return bytes(out)
+    wbits=-15)`` emits). Bytes after the final block are ignored.
+    ``max_output`` bounds decompression-bomb blowup."""
+    d = zlib.decompressobj(-15)
+    try:
+        out = d.decompress(data, max_output + 1)
+    except zlib.error as exc:
+        raise ValueError(f"deflate stream: {exc}") from None
+    if len(out) > max_output:
+        raise ValueError(f"inflated output exceeds {max_output} bytes")
+    if not d.eof:
+        raise ValueError("deflate stream truncated")
+    return out
 
 
 def synth_deflate_plan(seed: int) -> dict:
@@ -340,10 +49,7 @@ def synth_deflate_plan(seed: int) -> dict:
 
 
 def synth_deflate(seed: int) -> bytes:
-    """Raw DEFLATE stream written by the STDLIB zlib COMPRESSOR —
-    the independent producer this decoder is pinned against."""
-    import zlib
-
+    """Raw DEFLATE stream written by the stdlib zlib compressor."""
     plan = synth_deflate_plan(seed)
     strategy = zlib.Z_FIXED if plan["fixed"] else zlib.Z_DEFAULT_STRATEGY
     co = zlib.compressobj(plan["level"], zlib.DEFLATED, -15, 9, strategy)
@@ -351,7 +57,7 @@ def synth_deflate(seed: int) -> bytes:
 
 
 def decode_deflate(payload: bytes) -> dict:
-    """Hand-inflate + content features (the query surface)."""
+    """Inflate + content features (the query surface)."""
     content = inflate(payload)
     return {
         "n_bytes": len(content),

@@ -1,37 +1,17 @@
-"""Full LZMA / LZMA2 / .xz decode, by hand.
+"""LZMA / LZMA2 / .xz decode through the stdlib ``lzma`` (liblzma).
 
-Round 8 built the .xz CONTAINER triage (``xz_scan.py``) and left the
-block payload as a documented boundary ("range coding is a different
-project").  This module closes it: a complete LZMA range decoder —
-the third distinct entropy stack in the codec family after Huffman
-(DEFLATE/bzip2/JPEG) and none (RLE) — written from the public LZMA
-specification (lzma-specification.txt, Igor Pavlov, public domain)
-and the tukaani.org .xz file-format spec:
+The container TRIAGE (``xz_scan.py``) walks .xz skeletons by hand;
+full decode runs in liblzma, which also verifies every header CRC and
+the per-block CRC32 / CRC64 / SHA-256 check. This module adds the
+repo's contract around it:
 
-- the binary RANGE CODER: 32-bit range/code registers, 11-bit
-  adaptive probabilities (init 1024, shift-5 update), byte-at-a-time
-  normalization below 2^24;
-- the LZMA match model: 12-state machine, pos-state and literal
-  context masks (lc/lp/pb), bit-tree and reverse-bit-tree decoders,
-  matched-literal decoding against the byte at distance rep0, the
-  4-slot rep-distance cache, 6-bit distance slots with aligned /
-  direct bit tails, and the 0xFFFFFFFF end marker;
-- the LZMA2 chunk layer: control-byte framing (end / uncompressed /
-  compressed), 21-bit unpacked sizes, per-chunk range-decoder
-  restarts, and the three reset levels (state, state+props,
-  state+props+dict);
-- the legacy .lzma (alone) header: props byte, u32le dict size,
-  u64le size with the "unknown → end marker" sentinel;
-- full .xz: the round-8 container walk locates blocks, this module
-  decodes their LZMA2 filter payloads and VERIFIES the declared
-  integrity check of the recovered plaintext — CRC32 (zlib),
-  CRC64-xz (ECMA-182 polynomial, reflected, hand-tabled: stdlib has
-  no crc64) and SHA-256.
-
-Every decoder here is pinned against the STDLIB ``lzma`` producer
-(an independent implementation — liblzma) across the lc/lp/pb grid,
-all four .xz check types, concatenated streams, and empty /
-incompressible / long-match payloads in ``tests/test_lzma_codec.py``.
+- :func:`decode_xz` decodes every concatenated stream, skips the
+  4-byte-aligned null padding between streams, and rejects any other
+  trailing bytes (``lzma.decompress`` stops at the first stream after
+  padding and ignores trailing junk, so it is not used);
+- each ``max_output`` bound raises before the output is allocated;
+- a truncated stream is an error, never a partial result;
+- only ``ValueError`` escapes (quarantine contract).
 
 Parity note: the reference (trongnghia2406/DataWarehouseProject) has
 no codec layer at all (MySQL ETL, ``etl/load_*.py``); this extends
@@ -41,415 +21,27 @@ crawl corpus actually ships in.
 
 from __future__ import annotations
 
-import hashlib
-import struct
-import zlib
+import lzma
 
-_TOP = 1 << 24
-_MASK32 = 0xFFFFFFFF
-_INIT_PROB = 1024  # 2048 / 2
-
-# ---------------------------------------------------------------------------
-# CRC64-xz (ECMA-182 polynomial 0x42F0E1EBA9EA3693, reflected form
-# 0xC96C5795D7870F42, init/xorout all-ones) — the .xz check type 4.
-# ---------------------------------------------------------------------------
-
-_CRC64_POLY = 0xC96C5795D7870F42
+# Raw LZMA2 carries no dictionary size; liblzma's largest preset
+# dictionary is 64 MiB, so this covers every preset's streams.
+_RAW_LZMA2 = [{"id": lzma.FILTER_LZMA2, "dict_size": 1 << 26}]
+# Header-declared dictionaries larger than any preset needs are
+# rejected instead of allocated.
+_MEMLIMIT = 1 << 27
 
 
-def _crc64_table() -> list[int]:
-    table = []
-    for byte in range(256):
-        crc = byte
-        for _ in range(8):
-            crc = (crc >> 1) ^ (_CRC64_POLY if crc & 1 else 0)
-        table.append(crc)
-    return table
-
-
-_CRC64_TABLE = _crc64_table()
-
-
-def crc64_xz(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFFFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC64_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-# ---------------------------------------------------------------------------
-# Range decoder
-# ---------------------------------------------------------------------------
-
-
-class _RangeDecoder:
-    """The LZMA binary range decoder: 32-bit Range/Code, adaptive
-    11-bit probabilities, normalize-below-2^24.  Initialized from 5
-    bytes (first must be 0) at a position inside ``data``."""
-
-    __slots__ = ("data", "pos", "range", "code")
-
-    def __init__(self, data: bytes, pos: int):
-        if pos + 5 > len(data):
-            raise ValueError("truncated range-coder init")
-        if data[pos] != 0:
-            raise ValueError("range-coder first byte not 0")
-        self.data = data
-        self.code = int.from_bytes(data[pos + 1 : pos + 5], "big")
-        self.pos = pos + 5
-        self.range = _MASK32
-
-    def _next_byte(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("range decoder ran past input")
-        b = self.data[self.pos]
-        self.pos += 1
-        return b
-
-    def decode_bit(self, probs: list[int], i: int) -> int:
-        prob = probs[i]
-        bound = (self.range >> 11) * prob
-        if self.code < bound:
-            probs[i] = prob + ((2048 - prob) >> 5)
-            self.range = bound
-            bit = 0
-        else:
-            probs[i] = prob - (prob >> 5)
-            self.code -= bound
-            self.range -= bound
-            bit = 1
-        if self.range < _TOP:
-            self.range = (self.range << 8) & _MASK32
-            self.code = ((self.code << 8) | self._next_byte()) & _MASK32
-        return bit
-
-    def decode_direct(self, n: int) -> int:
-        res = 0
-        for _ in range(n):
-            self.range >>= 1
-            self.code = (self.code - self.range) & _MASK32
-            t = 0 - (self.code >> 31)
-            self.code = (self.code + (self.range & t)) & _MASK32
-            if self.range < _TOP:
-                self.range = (self.range << 8) & _MASK32
-                self.code = ((self.code << 8) | self._next_byte()) & _MASK32
-            res = ((res << 1) + t + 1) & _MASK32
-        return res
-
-    def decode_tree(self, probs: list[int], base: int, nbits: int) -> int:
-        m = 1
-        for _ in range(nbits):
-            m = (m << 1) | self.decode_bit(probs, base + m)
-        return m - (1 << nbits)
-
-    def decode_tree_reverse(self, probs: list[int], base: int, nbits: int) -> int:
-        m = 1
-        sym = 0
-        for i in range(nbits):
-            bit = self.decode_bit(probs, base + m)
-            m = (m << 1) | bit
-            sym |= bit << i
-        return sym
-
-    def is_finished(self) -> bool:
-        return self.code == 0
-
-
-# ---------------------------------------------------------------------------
-# LZMA stream decoder (one props/state instance)
-# ---------------------------------------------------------------------------
-
-_NUM_STATES = 12
-_NUM_POS_STATES_MAX = 16
-_MATCH_MIN_LEN = 2
-_ALIGN_BITS = 4
-_END_POS_MODEL_INDEX = 14
-_FULL_DISTANCES = 1 << (_END_POS_MODEL_INDEX >> 1)  # 128
-
-
-class _LenDecoder:
-    """Choice/choice2 + 3-bit low/mid trees per pos-state + 8-bit
-    high tree; returns the length EXTRA (0-based, add MATCH_MIN)."""
-
-    def __init__(self):
-        self.choice = [_INIT_PROB, _INIT_PROB]
-        self.low = [_INIT_PROB] * (_NUM_POS_STATES_MAX * 8)
-        self.mid = [_INIT_PROB] * (_NUM_POS_STATES_MAX * 8)
-        self.high = [_INIT_PROB] * 256
-
-    def decode(self, rc: _RangeDecoder, pos_state: int) -> int:
-        if not rc.decode_bit(self.choice, 0):
-            return rc.decode_tree(self.low, pos_state * 8, 3)
-        if not rc.decode_bit(self.choice, 1):
-            return 8 + rc.decode_tree(self.mid, pos_state * 8, 3)
-        return 16 + rc.decode_tree(self.high, 0, 8)
-
-
-class LzmaDecoder:
-    """Decodes one LZMA sequence into a shared output ``bytearray``
-    (which doubles as the dictionary).  Props and state survive
-    across LZMA2 chunks until a reset asks otherwise."""
-
-    def __init__(self, lc: int, lp: int, pb: int):
-        if lc > 8 or lp > 4 or pb > 4:
-            raise ValueError(f"bad lc/lp/pb {lc}/{lp}/{pb}")
-        self.lc, self.lp, self.pb = lc, lp, pb
-        self.reset_state()
-
-    @classmethod
-    def from_props_byte(cls, props: int) -> "LzmaDecoder":
-        if props >= 9 * 5 * 5:
-            raise ValueError(f"bad LZMA props byte {props}")
-        lc = props % 9
-        props //= 9
-        return cls(lc, props % 5, props // 5)
-
-    def reset_state(self) -> None:
-        self.state = 0
-        self.rep0 = self.rep1 = self.rep2 = self.rep3 = 0
-        self.is_match = [_INIT_PROB] * (_NUM_STATES * _NUM_POS_STATES_MAX)
-        self.is_rep = [_INIT_PROB] * _NUM_STATES
-        self.is_rep_g0 = [_INIT_PROB] * _NUM_STATES
-        self.is_rep_g1 = [_INIT_PROB] * _NUM_STATES
-        self.is_rep_g2 = [_INIT_PROB] * _NUM_STATES
-        self.is_rep0_long = [_INIT_PROB] * (_NUM_STATES * _NUM_POS_STATES_MAX)
-        self.pos_slot = [_INIT_PROB] * (4 * 64)
-        self.spec_pos = [_INIT_PROB] * (_FULL_DISTANCES - _END_POS_MODEL_INDEX + 1)
-        self.align = [_INIT_PROB] * (1 << _ALIGN_BITS)
-        self.len_dec = _LenDecoder()
-        self.rep_len_dec = _LenDecoder()
-        self.literal = [_INIT_PROB] * (0x300 << (self.lc + self.lp))
-
-    def _decode_distance(self, rc: _RangeDecoder, length: int) -> int:
-        len_state = min(length - _MATCH_MIN_LEN, 3)
-        slot = rc.decode_tree(self.pos_slot, len_state * 64, 6)
-        if slot < 4:
-            return slot
-        n_direct = (slot >> 1) - 1
-        dist = (2 | (slot & 1)) << n_direct
-        if slot < _END_POS_MODEL_INDEX:
-            dist += rc.decode_tree_reverse(
-                self.spec_pos, dist - slot, n_direct
-            )
-        else:
-            dist = (dist + (rc.decode_direct(n_direct - _ALIGN_BITS) << _ALIGN_BITS)) & _MASK32
-            dist = (dist + rc.decode_tree_reverse(self.align, 0, _ALIGN_BITS)) & _MASK32
-        return dist
-
-    def decode(
-        self,
-        rc: _RangeDecoder,
-        out: bytearray,
-        limit: int | None,
-        allow_eos: bool = True,
-        dict_start: int = 0,
-        hard_cap: int | None = None,
-    ) -> bool:
-        """Decode until ``len(out) == limit`` (LZMA2 chunk mode) or —
-        with ``limit=None`` — until the end marker.  ``dict_start``
-        is the LZMA2 dictionary-reset fence: positions and match
-        distances are relative to it (a reset does NOT discard prior
-        output, it only forbids reaching back across it).  Returns
-        True if the 0xFFFFFFFF end marker was consumed."""
-        pb_mask = (1 << self.pb) - 1
-        lp_mask = (1 << self.lp) - 1
-        lc = self.lc
-        # r14: the range coder runs on LOCALS (rng/code/rpos) with
-        # decode_bit inlined — the per-bit method call dominated the
-        # xz kernel profile (460k calls per 60 payloads). State syncs
-        # back into ``rc`` only around the per-MATCH helper calls
-        # (length/distance trees), which are rare next to literals.
-        data = rc.data
-        ndata = len(data)
-        rng = rc.range
-        code = rc.code
-        rpos = rc.pos
-        is_match = self.is_match
-        literal = self.literal
-        while limit is None or len(out) < limit:
-            if hard_cap is not None and len(out) > hard_cap:
-                # end-marker-terminated streams have no declared size;
-                # the cap is the only defense against a bomb here
-                raise ValueError("LZMA output exceeds cap")
-            pos = len(out) - dict_start
-            pos_state = pos & pb_mask
-            idx = self.state * _NUM_POS_STATES_MAX + pos_state
-            prob = is_match[idx]
-            bound = (rng >> 11) * prob
-            if code < bound:
-                is_match[idx] = prob + ((2048 - prob) >> 5)
-                rng = bound
-                bit = 0
-            else:
-                is_match[idx] = prob - (prob >> 5)
-                code -= bound
-                rng -= bound
-                bit = 1
-            if rng < _TOP:
-                rng = (rng << 8) & _MASK32
-                if rpos >= ndata:
-                    raise ValueError("range decoder ran past input")
-                code = ((code << 8) | data[rpos]) & _MASK32
-                rpos += 1
-            if not bit:
-                prev = out[-1] if pos > 0 else 0
-                lit_base = (
-                    ((pos & lp_mask) << lc) + (prev >> (8 - lc))
-                ) * 0x300
-                symbol = 1
-                if self.state >= 7:
-                    if self.rep0 >= pos:
-                        raise ValueError("LZMA matched-literal before start")
-                    match_byte = out[len(out) - self.rep0 - 1]
-                    while symbol < 0x100:
-                        match_bit = (match_byte >> 7) & 1
-                        match_byte = (match_byte << 1) & 0xFF
-                        idx = lit_base + ((1 + match_bit) << 8) + symbol
-                        prob = literal[idx]
-                        bound = (rng >> 11) * prob
-                        if code < bound:
-                            literal[idx] = prob + ((2048 - prob) >> 5)
-                            rng = bound
-                            bit = 0
-                        else:
-                            literal[idx] = prob - (prob >> 5)
-                            code -= bound
-                            rng -= bound
-                            bit = 1
-                        if rng < _TOP:
-                            rng = (rng << 8) & _MASK32
-                            if rpos >= ndata:
-                                raise ValueError(
-                                    "range decoder ran past input"
-                                )
-                            code = ((code << 8) | data[rpos]) & _MASK32
-                            rpos += 1
-                        symbol = (symbol << 1) | bit
-                        if match_bit != bit:
-                            break
-                while symbol < 0x100:
-                    idx = lit_base + symbol
-                    prob = literal[idx]
-                    bound = (rng >> 11) * prob
-                    if code < bound:
-                        literal[idx] = prob + ((2048 - prob) >> 5)
-                        rng = bound
-                        symbol <<= 1
-                    else:
-                        literal[idx] = prob - (prob >> 5)
-                        code -= bound
-                        rng -= bound
-                        symbol = (symbol << 1) | 1
-                    if rng < _TOP:
-                        rng = (rng << 8) & _MASK32
-                        if rpos >= ndata:
-                            raise ValueError("range decoder ran past input")
-                        code = ((code << 8) | data[rpos]) & _MASK32
-                        rpos += 1
-                out.append(symbol & 0xFF)
-                s = self.state
-                self.state = 0 if s < 4 else (s - 3 if s < 10 else s - 6)
-                continue
-            # match path — the per-match bits stay inline; the
-            # length/distance TREES go through the shared helpers
-            # with the range state synced around them
-            prob = self.is_rep[self.state]
-            bound = (rng >> 11) * prob
-            if code < bound:
-                self.is_rep[self.state] = prob + ((2048 - prob) >> 5)
-                rng = bound
-                rep_bit = 0
-            else:
-                self.is_rep[self.state] = prob - (prob >> 5)
-                code -= bound
-                rng -= bound
-                rep_bit = 1
-            if rng < _TOP:
-                rng = (rng << 8) & _MASK32
-                if rpos >= ndata:
-                    raise ValueError("range decoder ran past input")
-                code = ((code << 8) | data[rpos]) & _MASK32
-                rpos += 1
-            rc.range = rng
-            rc.code = code
-            rc.pos = rpos
-            if rep_bit:
-                if pos == 0:
-                    raise ValueError("LZMA rep match at stream start")
-                if not rc.decode_bit(self.is_rep_g0, self.state):
-                    if not rc.decode_bit(
-                        self.is_rep0_long,
-                        self.state * _NUM_POS_STATES_MAX + pos_state,
-                    ):
-                        # SHORTREP: single byte at rep0
-                        self.state = 9 if self.state < 7 else 11
-                        if self.rep0 >= pos:
-                            raise ValueError("LZMA shortrep before start")
-                        out.append(out[len(out) - self.rep0 - 1])
-                        rng = rc.range
-                        code = rc.code
-                        rpos = rc.pos
-                        continue
-                    dist = self.rep0
-                else:
-                    if not rc.decode_bit(self.is_rep_g1, self.state):
-                        dist = self.rep1
-                    else:
-                        if not rc.decode_bit(self.is_rep_g2, self.state):
-                            dist = self.rep2
-                        else:
-                            dist = self.rep3
-                            self.rep3 = self.rep2
-                        self.rep2 = self.rep1
-                    self.rep1 = self.rep0
-                    self.rep0 = dist
-                length = (
-                    self.rep_len_dec.decode(rc, pos_state) + _MATCH_MIN_LEN
-                )
-                self.state = 8 if self.state < 7 else 11
-            else:
-                self.rep3, self.rep2, self.rep1 = (
-                    self.rep2,
-                    self.rep1,
-                    self.rep0,
-                )
-                length = self.len_dec.decode(rc, pos_state) + _MATCH_MIN_LEN
-                self.state = 7 if self.state < 7 else 10
-                dist = self._decode_distance(rc, length)
-                if dist == _MASK32:
-                    if not allow_eos:
-                        raise ValueError("unexpected LZMA end marker")
-                    if not rc.is_finished():
-                        raise ValueError(
-                            "LZMA end marker with nonzero range code"
-                        )
-                    return True
-                self.rep0 = dist
-            rng = rc.range
-            code = rc.code
-            rpos = rc.pos
-            if self.rep0 >= pos:
-                raise ValueError("LZMA match distance beyond output")
-            if limit is not None and len(out) + length > limit:
-                raise ValueError("LZMA match overruns chunk limit")
-            src = len(out) - self.rep0 - 1
-            dist = self.rep0 + 1
-            if dist >= length:  # non-overlapping: slice copy
-                out += out[src : src + length]
-            else:
-                # overlapping copy == periodic repeat of the last
-                # ``dist`` bytes (LZ77 semantics), batched
-                pat = bytes(out[src:])
-                out += (pat * (length // dist + 1))[:length]
-        rc.range = rng
-        rc.code = code
-        rc.pos = rpos
-        return False
-
-
-# ---------------------------------------------------------------------------
-# LZMA2 chunk layer
-# ---------------------------------------------------------------------------
+def _decompress(dec: lzma.LZMADecompressor, data: bytes, max_output: int,
+                what: str) -> bytes:
+    try:
+        out = dec.decompress(data, max_output + 1)
+    except (lzma.LZMAError, EOFError) as exc:
+        raise ValueError(f"{what}: {exc}") from None
+    if len(out) > max_output:
+        raise ValueError(f"{what} output exceeds cap of {max_output} bytes")
+    if not dec.eof:
+        raise ValueError(f"truncated {what} input")
+    return out
 
 
 def decode_lzma2(
@@ -459,343 +51,31 @@ def decode_lzma2(
     max_output: int = 1 << 28,
 ) -> bytes:
     """Decode an LZMA2 chunk sequence ``data[pos:end]`` (the .xz
-    LZMA2 filter payload, ending with the 0x00 terminator).
-    ``max_output`` bounds decompression bombs: a few KB of chunks can
-    declare GBs, and MemoryError is not a quarantinable error."""
-    try:
-        return _decode_lzma2(data, pos, end, max_output)
-    except (IndexError, struct.error) as exc:
-        raise ValueError(f"truncated LZMA2 input: {exc}") from exc
-
-
-def _decode_lzma2(
-    data: bytes,
-    pos: int = 0,
-    end: int | None = None,
-    max_output: int = 1 << 28,
-) -> bytes:
-    if end is None:
-        end = len(data)
-    out = bytearray()
-    dict_start = 0
-    dec: LzmaDecoder | None = None
-    need_dict_reset = True
-    need_props = True
-    while True:
-        if pos >= end:
-            raise ValueError("LZMA2 ran out of chunks without terminator")
-        control = data[pos]
-        pos += 1
-        if control == 0:
-            break
-        if control < 0x80:
-            if control > 2:
-                raise ValueError(f"bad LZMA2 control byte {control:#x}")
-            # uncompressed chunk: 1 = with dict reset, 2 = without
-            if pos + 2 > end:
-                raise ValueError("truncated LZMA2 uncompressed header")
-            size = struct.unpack_from(">H", data, pos)[0] + 1
-            pos += 2
-            if pos + size > end:
-                raise ValueError("truncated LZMA2 uncompressed chunk")
-            if len(out) + size > max_output:
-                raise ValueError("LZMA2 output exceeds cap")
-            if control == 1:
-                need_dict_reset = False
-                dict_start = len(out)
-            elif need_dict_reset:
-                raise ValueError("LZMA2 first chunk lacks dict reset")
-            out += data[pos : pos + size]
-            pos += size
-            # an uncompressed chunk invalidates decoder STATE but not props
-            if dec is not None:
-                dec.reset_state()
-            continue
-        # compressed chunk
-        if pos + 4 > end:
-            raise ValueError("truncated LZMA2 compressed header")
-        unpacked = (((control & 0x1F) << 16) | struct.unpack_from(">H", data, pos)[0]) + 1
-        packed = struct.unpack_from(">H", data, pos + 2)[0] + 1
-        pos += 4
-        reset = (control >> 5) & 0x03
-        if reset == 3:
-            need_dict_reset = False
-            dict_start = len(out)
-        elif need_dict_reset:
-            raise ValueError("LZMA2 first chunk lacks dict reset")
-        if reset >= 2:
-            if pos >= end:
-                raise ValueError("truncated LZMA2 props byte")
-            dec = LzmaDecoder.from_props_byte(data[pos])
-            pos += 1
-            need_props = False
-        elif reset == 1:
-            if dec is None or need_props:
-                raise ValueError("LZMA2 state reset before props")
-            dec.reset_state()
-        elif dec is None or need_props:
-            raise ValueError("LZMA2 chunk with no decoder props yet")
-        if pos + packed > end:
-            raise ValueError("truncated LZMA2 compressed chunk")
-        if len(out) + unpacked > max_output:
-            raise ValueError("LZMA2 output exceeds cap")
-        rc = _RangeDecoder(data, pos)
-        target = len(out) + unpacked
-        dec.decode(rc, out, target, allow_eos=False, dict_start=dict_start)
-        if len(out) != target:
-            raise ValueError("LZMA2 chunk produced wrong size")
-        if rc.pos != pos + packed:
-            raise ValueError(
-                f"LZMA2 chunk consumed {rc.pos - pos} of {packed} bytes"
-            )
-        pos += packed
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Legacy .lzma (LZMA_Alone) container
-# ---------------------------------------------------------------------------
+    LZMA2 filter payload, ending with the 0x00 terminator)."""
+    dec = lzma.LZMADecompressor(lzma.FORMAT_RAW, filters=_RAW_LZMA2)
+    return _decompress(dec, data[pos:end], max_output, "LZMA2")
 
 
 def decode_lzma_alone(payload: bytes, max_output: int = 1 << 28) -> bytes:
     """Decode the 13-byte-header legacy ``.lzma`` format (stdlib
-    ``lzma.FORMAT_ALONE``): props byte, u32le dict size, u64le
-    uncompressed size (all-ones = unknown → end-marker terminated).
-    ``max_output`` bounds decompression bombs."""
-    if len(payload) < 13:
-        raise ValueError("lzma-alone shorter than its header")
-    try:
-        return _decode_lzma_alone(payload, max_output)
-    except (IndexError, struct.error) as exc:
-        raise ValueError(f"truncated lzma-alone input: {exc}") from exc
-
-
-def _decode_lzma_alone(payload: bytes, max_output: int = 1 << 28) -> bytes:
-    dec = LzmaDecoder.from_props_byte(payload[0])
-    (usize,) = struct.unpack_from("<Q", payload, 5)
-    rc = _RangeDecoder(payload, 13)
-    out = bytearray()
-    if usize == 0xFFFFFFFFFFFFFFFF:
-        dec.decode(rc, out, None, allow_eos=True, hard_cap=max_output)
-    elif usize > max_output:
-        raise ValueError("lzma-alone declared size exceeds cap")
-    else:
-        # known size: decode exactly that many bytes.  The format
-        # permits a trailing end marker even then, but liblzma (the
-        # producer this is pinned against) never emits one for known
-        # sizes, so any trailing marker bytes are left unconsumed
-        dec.decode(rc, out, usize, allow_eos=False)
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Full .xz decode: container walk (round-8 triage) + LZMA2 + checks
-# ---------------------------------------------------------------------------
-
-_XZ_MAGIC = b"\xfd7zXZ\x00"
-_CHECK_SIZES = {0: 0, 1: 4, 4: 8, 10: 32}
-_FILTER_LZMA2 = 0x21
-
-
-def _xz_varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    for shift in range(0, 63, 7):
-        if pos >= len(data):
-            raise ValueError("truncated xz varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-    raise ValueError("xz varint too long")
-
-
-def _decode_block(
-    payload: bytes, pos: int, check_type: int, max_output: int = 1 << 28
-) -> tuple[bytes, int]:
-    """Decode ONE .xz block starting at ``pos`` (block header first).
-    Returns (plaintext, position after the check field)."""
-    hsize = (payload[pos] + 1) * 4
-    bh = payload[pos : pos + hsize]
-    if len(bh) < hsize:
-        raise ValueError("truncated xz block header")
-    (bh_crc,) = struct.unpack_from("<I", bh, hsize - 4)
-    if zlib.crc32(bh[: hsize - 4]) != bh_crc:
-        raise ValueError("xz block-header CRC mismatch")
-    flags = bh[1]
-    if flags & 0x3C:
-        raise ValueError("reserved xz block flags")
-    n_filters = (flags & 0x03) + 1
-    p = 2
-    comp_size = unc_size = None
-    if flags & 0x40:
-        comp_size, p = _xz_varint(bh, p)
-    if flags & 0x80:
-        unc_size, p = _xz_varint(bh, p)
-    lzma2_dict_props = None
-    for _ in range(n_filters):
-        fid, p = _xz_varint(bh, p)
-        psize, p = _xz_varint(bh, p)
-        props = bh[p : p + psize]
-        p += psize
-        if fid == _FILTER_LZMA2:
-            if psize != 1:
-                raise ValueError("LZMA2 filter props must be 1 byte")
-            lzma2_dict_props = props[0]
-        else:
-            raise ValueError(f"unsupported xz filter id {fid:#x}")
-    if lzma2_dict_props is None:
-        raise ValueError("xz block without LZMA2 filter")
-    if lzma2_dict_props & 0xC0:
-        raise ValueError("reserved LZMA2 dict-size props bits")
-    data_start = pos + hsize
-    comp_end = len(payload) if comp_size is None else data_start + comp_size
-    plain = decode_lzma2(payload, data_start, comp_end, max_output)
-    if unc_size is not None and len(plain) != unc_size:
-        raise ValueError("xz block uncompressed size mismatch")
-    # locate the true end of compressed data: the LZMA2 terminator
-    # position is what decode_lzma2 consumed; recompute by rescanning
-    # sizes (cheap: chunk headers only)
-    q = data_start
-    declared = 0  # cross-check chunk-declared sizes vs decoded bytes
-    while True:
-        c = payload[q]
-        q += 1
-        if c == 0:
-            break
-        if c < 0x80:
-            size = struct.unpack_from(">H", payload, q)[0] + 1
-            q += 2 + size
-            declared += size
-        else:
-            unp = (((c & 0x1F) << 16)
-                   | struct.unpack_from(">H", payload, q)[0]) + 1
-            pk = struct.unpack_from(">H", payload, q + 2)[0] + 1
-            q += 4
-            if (c >> 5) & 0x03 >= 2:
-                q += 1
-            q += pk
-            declared += unp
-    if declared != len(plain):
-        raise ValueError(
-            f"LZMA2 chunk sizes declare {declared} bytes, "
-            f"decoded {len(plain)}"
-        )
-    used = q - data_start
-    if comp_size is not None and used != comp_size:
-        raise ValueError("xz block compressed size mismatch")
-    # pad to 4, then the check of the PLAINTEXT
-    pad = (-(hsize + used)) % 4
-    if any(payload[q : q + pad]):
-        raise ValueError("non-null xz block padding")
-    q += pad
-    csize = _CHECK_SIZES[check_type]
-    check = payload[q : q + csize]
-    if len(check) < csize:
-        raise ValueError("truncated xz block check")
-    if check_type == 1:
-        if zlib.crc32(plain) != struct.unpack("<I", check)[0]:
-            raise ValueError("xz CRC32 check mismatch")
-    elif check_type == 4:
-        if crc64_xz(plain) != struct.unpack("<Q", check)[0]:
-            raise ValueError("xz CRC64 check mismatch")
-    elif check_type == 10:
-        if hashlib.sha256(plain).digest() != check:
-            raise ValueError("xz SHA-256 check mismatch")
-    return plain, q + csize
+    ``lzma.FORMAT_ALONE``), known or unknown (end-marker) size."""
+    dec = lzma.LZMADecompressor(lzma.FORMAT_ALONE, memlimit=_MEMLIMIT)
+    return _decompress(dec, payload, max_output, "lzma-alone")
 
 
 def decode_xz(payload: bytes, max_output: int = 1 << 28) -> bytes:
-    """Decode a complete .xz file (all streams, all blocks), verifying
-    every skeleton CRC32 (via the round-8 triage walk in spirit) AND
-    the per-block plaintext integrity check.  Truncation anywhere —
-    mid-header, mid-chunk, mid-check — surfaces as ValueError (the
-    quarantine contract), never IndexError/struct.error;
-    ``max_output`` bounds decompression bombs (MemoryError is not a
-    quarantinable error)."""
-    try:
-        return _decode_xz(payload, max_output)
-    except (IndexError, struct.error) as exc:
-        raise ValueError(f"truncated xz input: {exc}") from exc
-
-
-def _decode_xz(payload: bytes, max_output: int = 1 << 28) -> bytes:
-    if payload[:6] != _XZ_MAGIC:
-        raise ValueError("not an xz file")
+    """Decode a complete .xz file: all streams, all blocks, every
+    integrity check verified."""
     out = bytearray()
-    pos = 0
-    n = len(payload)
-    while pos < n:
-        # stream header
-        header = payload[pos : pos + 12]
-        if len(header) < 12 or header[:6] != _XZ_MAGIC:
-            raise ValueError("bad xz stream header")
-        flags = header[6:8]
-        (hcrc,) = struct.unpack_from("<I", header, 8)
-        if zlib.crc32(flags) != hcrc:
-            raise ValueError("xz stream-header CRC mismatch")
-        if flags[0] != 0 or flags[1] & 0xF0:
-            raise ValueError("reserved xz stream flags")
-        check_type = flags[1]
-        if check_type not in _CHECK_SIZES:
-            raise ValueError(f"unknown xz check type {check_type}")
-        pos += 12
-        # blocks until the index indicator (0x00 where a block-header
-        # size byte would be)
-        sizes = []
-        while payload[pos] != 0:
-            bstart = pos
-            plain, pos = _decode_block(payload, pos, check_type, max_output)
-            out += plain
-            if len(out) > max_output:
-                raise ValueError("xz output exceeds cap")
-            sizes.append((pos - bstart, len(plain)))
-            # unpadded size excludes the padding BUT includes the check
-        # index: verify it matches what we decoded
-        istart = pos
-        pos += 1
-        n_rec, pos = _xz_varint(payload, pos)
-        if n_rec != len(sizes):
-            raise ValueError("xz index record count mismatch")
-        for padded_span, unc in sizes:
-            unpadded, pos = _xz_varint(payload, pos)
-            rec_unc, pos = _xz_varint(payload, pos)
-            if rec_unc != unc:
-                raise ValueError("xz index uncompressed-size mismatch")
-            # the index's unpadded size covers header+data+check but
-            # NOT the block padding; our span includes the padding
-            if unpadded + (-unpadded) % 4 != padded_span:
-                raise ValueError("xz index unpadded-size mismatch")
-        while (pos - istart) % 4:
-            if payload[pos]:
-                raise ValueError("non-null xz index padding")
-            pos += 1
-        (icrc,) = struct.unpack_from("<I", payload, pos)
-        if zlib.crc32(payload[istart:pos]) != icrc:
-            raise ValueError("xz index CRC mismatch")
-        pos += 4
-        # stream footer
-        footer = payload[pos : pos + 12]
-        if len(footer) < 12 or footer[10:12] != b"YZ":
-            raise ValueError("bad xz stream footer")
-        (fcrc,) = struct.unpack_from("<I", footer, 0)
-        if zlib.crc32(footer[4:10]) != fcrc:
-            raise ValueError("xz footer CRC mismatch")
-        (backward,) = struct.unpack_from("<I", footer, 4)
-        if (backward + 1) * 4 != pos - istart:
-            raise ValueError("xz footer backward-size mismatch")
-        if footer[8:10] != flags:
-            raise ValueError("xz header/footer flags disagree")
-        pos += 12
-        # inter-stream padding (4-aligned nulls)
-        while pos + 4 <= n and not any(payload[pos : pos + 4]):
-            pos += 4
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Synthesis (stdlib producer) for the corpus query
-# ---------------------------------------------------------------------------
+    rest = payload
+    while True:
+        dec = lzma.LZMADecompressor(lzma.FORMAT_XZ, memlimit=_MEMLIMIT)
+        out += _decompress(dec, rest, max_output - len(out), "xz")
+        rest = dec.unused_data
+        while rest[:4] == b"\0\0\0\0":
+            rest = rest[4:]
+        if not rest:
+            return bytes(out)
 
 
 def synth_xz_text_plan(seed: int) -> dict:
@@ -821,9 +101,7 @@ def _plan_text(seed: int, lo: int, hi: int) -> bytes:
 
 def synth_xz_text(seed: int) -> bytes:
     """REAL .xz bytes from the stdlib producer over the deterministic
-    text plan — the independent-compressor pin for `xz_full_decode`."""
-    import lzma
-
+    text plan (the `xz_full_decode` corpus)."""
     plan = synth_xz_text_plan(seed)
     n, split = plan["n_lines"], plan["split"]
     parts = [(0, n)] if split is None else [(0, split), (split, n)]

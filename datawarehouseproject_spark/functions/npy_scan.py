@@ -4,12 +4,11 @@ Numpy's ``.npy`` (NEP 1 / ``numpy.lib.format``, public) is the
 de-facto tensor interchange file of ML corpora — dataset shards,
 embedding dumps, cached features — and ``.npz`` is simply a ZIP of
 ``.npy`` members (STORED by ``np.savez``, DEFLATE by
-``np.savez_compressed``).  This reader composes three existing
-by-hand layers instead of trusting any library on the read side:
+``np.savez_compressed``).  This reader composes three layers:
 
 - the ZIP central-directory walk (``functions/zipscan.py``) locates
   members (plus the local-header skip to the data);
-- the hand-rolled DEFLATE inflater (``functions/inflate.py``)
+- the raw DEFLATE decoder (``functions/inflate.py``, stdlib zlib)
   decompresses ``savez_compressed`` members;
 - a new NPY header parser: ``\\x93NUMPY`` magic, version 1/2 header
   length (u2/u4 little-endian), and the header DICT read with a
@@ -148,7 +147,7 @@ def parse_npy(data: bytes) -> dict:
 
 def scan_npz(payload: bytes) -> dict:
     """Walk one .npz container: hand-rolled ZIP central directory ->
-    per-member local-header skip -> (hand inflate if DEFLATE) ->
+    per-member local-header skip -> (inflate if DEFLATE) ->
     :func:`parse_npy`, aggregated over all members.  Member CRC32s
     are verified against the central directory."""
     from .inflate import inflate

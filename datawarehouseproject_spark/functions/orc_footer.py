@@ -21,8 +21,8 @@ COMPRESSED footers (round 10) decode through ORC's chunk framing —
 every compressed stream is a run of chunks, each led by a 3-byte
 little-endian header ``(chunk_length << 1) | is_original`` where
 ``is_original=1`` stores the chunk raw — composed with the codec
-family this repo already hand-rolls: zlib = RAW DEFLATE
-(:mod:`.inflate`), snappy (:mod:`.snappy`), lz4 BLOCK format
+family: zlib = RAW DEFLATE (:mod:`.inflate`, stdlib zlib), snappy
+(:mod:`.snappy`), lz4 BLOCK format
 (:mod:`.lz4_codec`), zstd (:mod:`.zstd_codec`).  LZO stays a
 documented boundary (no decoder in the family, and no producer in
 this container).  The engine's normal ORC read path

@@ -24,7 +24,8 @@ Documented boundaries for the BASE scan (ValueError -> quarantine):
 compressed stripes, PRESENT streams (nullable columns), dictionary
 encodings, and non-int/string types. Round 11 closes the first
 three in :func:`scan_orc_rich`: ZLIB/SNAPPY chunk-framed streams
-(decompressed by this repo's hand inflate/snappy), PRESENT boolean
+(decompressed by :mod:`.inflate` and the hand snappy codec), PRESENT
+boolean
 streams (Byte RLE over bit-packed booleans), and DICTIONARY_V2
 strings — all producer-pinned by pyarrow. Non-int/string types
 remain out of scope (the engine's real ORC path is
@@ -446,10 +447,10 @@ _MAX_STREAM_OUT = 1 << 26
 def _orc_decompress(blob: bytes, codec: int, what: str) -> bytes:
     """ORC compressed-stream framing: a sequence of chunks, each with
     a 3-byte little-endian header ``(length << 1) | is_original``
-    followed by ``length`` bytes — raw deflate for ZLIB, raw snappy
-    block for SNAPPY (both decoded by THIS repo's hand codecs, so the
-    independent pyarrow producer pins them again here).  codec 0
-    passes through."""
+    followed by ``length`` bytes — raw deflate for ZLIB (stdlib
+    zlib via :mod:`.inflate`), raw snappy block for SNAPPY (this
+    repo's hand codec, which the independent pyarrow producer pins
+    again here).  codec 0 passes through."""
     if codec == 0:
         return blob
     if codec == _ORC_ZLIB:

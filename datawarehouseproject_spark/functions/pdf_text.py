@@ -13,10 +13,9 @@ reference):
   references, booleans/null;
 - document walk: catalog -> page tree -> per-page ``/Contents``
   (single ref or array, ``/Length`` possibly indirect);
-- content streams are **FlateDecode**, decompressed by THIS repo's
-  hand-rolled DEFLATE inflater (:mod:`.inflate`) through the
-  zlib-container wrapper below (header check + Adler-32 verify) —
-  no zlib on the read side;
+- content streams are **FlateDecode**, decompressed by the raw
+  DEFLATE decoder (:mod:`.inflate`) through the zlib-container
+  wrapper below (header check + Adler-32 verify);
 - text operators ``Tj``, ``'`` and ``TJ`` (string elements shown,
   kerning numbers skipped) with full literal-string unescaping.
 
@@ -45,6 +44,7 @@ components. Error contract: only ValueError escapes (fuzz-pinned).
 from __future__ import annotations
 
 import re
+import zlib
 
 from .inflate import inflate
 
@@ -66,11 +66,7 @@ def zlib_inflate(data: bytes, max_output: int = 1 << 26) -> bytes:
     if flg & 0x20:
         raise ValueError("zlib preset dictionary unsupported")
     out = inflate(data[2:-4], max_output=max_output)
-    a, b = 1, 0
-    for byte in out:
-        a = (a + byte) % 65521
-        b = (b + a) % 65521
-    if ((b << 16) | a) != int.from_bytes(data[-4:], "big"):
+    if zlib.adler32(out) != int.from_bytes(data[-4:], "big"):
         raise ValueError("zlib Adler-32 mismatch")
     return out
 

@@ -413,8 +413,7 @@ def _huf_decode_stream(
     mask = (1 << max_bits) - 1
     # r15: the backward reads run on LOCALS with _BackBits.read's
     # zero-padding semantics inlined — the per-symbol method call was
-    # the kernel profile's second-hottest line (same treatment as
-    # inflate.py's bit accumulator in r14)
+    # the kernel profile's second-hottest line
     value = back.value
     avail = back.avail
     n = max_bits  # initial peek window (zero-padded at the tail)

@@ -36,7 +36,13 @@ def dense_ids(
         "__pid", F.spark_partition_id()
     )
     w_local = Window.partitionBy("__pid").orderBy(F.col(order_col).asc())
-    local = ranged.withColumn("__lrank", F.row_number().over(w_local))
+    # localCheckpoint: the ranks and the per-partition counts must come
+    # from ONE evaluation of the range repartition. Evaluated twice,
+    # the two can land rows in different partitions (the range bounds
+    # are sampled), which duplicated or skipped ids.
+    local = ranged.withColumn(
+        "__lrank", F.row_number().over(w_local)
+    ).localCheckpoint(eager=False)
 
     counts = local.groupBy("__pid").agg(F.count("*").alias("__n"))
     w_prefix = (

@@ -1195,7 +1195,7 @@ def synthesize_pdf_incremental_media(
 def extract_pdf_text_features(media: DataFrame, permissive: bool = False) -> DataFrame:
     """Full PDF reader walk per payload
     (:func:`..functions.pdf_text.extract_pdf_text`): xref table,
-    object tokenizer, page tree, hand-inflated content streams,
+    object tokenizer, page tree, inflated content streams,
     Tj/'/TJ text operators."""
 
     def loader():
@@ -1270,10 +1270,9 @@ def synthesize_deflate_media(ids: DataFrame, id_col: str = "doc_id") -> DataFram
 
 
 def extract_deflate_content(media: DataFrame, permissive: bool = False) -> DataFrame:
-    """HAND-ROLLED RFC 1951 inflate per payload
-    (:func:`..functions.inflate.inflate`): stored/fixed/dynamic
-    blocks, code-length-code machinery, LZ77 overlap copies — no
-    zlib on the decode side."""
+    """RFC 1951 inflate per payload through the stdlib zlib
+    decompressor (:func:`..functions.inflate.inflate`): bounded
+    output, truncation rejected."""
 
     def loader():
         from ..functions.inflate import decode_deflate
@@ -1972,7 +1971,7 @@ def synthesize_npz_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def extract_npz_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
     """NPY/NPZ tensor read from raw bytes per payload
     (:func:`..functions.npy_scan.scan_npz`): hand-rolled ZIP walk ->
-    hand inflate -> regex-grammar NPY header (no eval) -> struct
+    inflate -> regex-grammar NPY header (no eval) -> struct
     data decode with the fortran-order remap pinned by a
     position-weighted checksum."""
 
@@ -2052,10 +2051,10 @@ def synthesize_xz_text_media(
 
 
 def extract_xz_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
-    """FULL .xz decode per payload — the hand-rolled LZMA range
-    decoder + LZMA2 chunk layer + verified per-block plaintext checks
-    (:func:`..functions.lzma_codec.decode_xz`); closes the round-8
-    triage-only boundary of :func:`extract_xz_scan`.  Returns the
+    """FULL .xz decode per payload through liblzma, every stream and
+    per-block plaintext check verified
+    (:func:`..functions.lzma_codec.decode_xz`); the full-decode
+    companion of the triage-only :func:`extract_xz_scan`.  Returns the
     recovered plaintext so the STATS stay JVM-side (the
     Python-narrow / JVM-wide split of ``pdf_corpus_text_stats``)."""
 
@@ -2096,9 +2095,8 @@ BZ2_SCAN_SCHEMA = T.StructType(
 def extract_bz2_decode(
     media: DataFrame, permissive: bool = False
 ) -> DataFrame:
-    """Full bzip2 decode per payload — Huffman groups, MTF/RLE2,
-    inverse BWT, RLE1, both CRC layers
-    (:func:`..functions.bzip2.scan_bz2`)."""
+    """Full bzip2 decode per payload through libbz2, block and
+    stream CRCs verified (:func:`..functions.bzip2.scan_bz2`)."""
 
     def loader():
         from ..functions.bzip2 import scan_bz2

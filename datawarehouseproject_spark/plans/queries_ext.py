@@ -3410,27 +3410,17 @@ def q_xz_container_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "mapInPandas", "xz", "lzma", "codec"),
 )
 def q_xz_full_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL .xz decode, value-checked (round 9) — closes the round-8
-    boundary that `xz_container_scan` documented ("full LZMA2 decode
-    is out of scope: range coding is a different project").  The
-    hand-rolled stack in ``functions/lzma_codec.py`` is the third
-    distinct entropy machine in the codec family after Huffman
-    (DEFLATE/bzip2/JPEG) and RLE: the adaptive binary RANGE CODER
-    (11-bit probabilities, shift-5 update, byte-wise normalization),
-    the 12-state LZMA match model (lc/lp/pb contexts, matched
-    literals, the 4-deep rep-distance cache, slot/aligned/direct
-    distance tails), and the LZMA2 chunk layer (21-bit unpacked
-    sizes, per-chunk range restarts, the three reset levels) — plus
-    verification of every container CRC32 AND the per-block
-    plaintext check (CRC32 / hand-tabled CRC64-xz / SHA-256,
-    rotating by document).  Odd documents ship as two concatenated
-    streams.  The producer is STDLIB liblzma (independent
+    """FULL .xz decode, value-checked — the full-decode companion of
+    the container triage in `xz_container_scan`.
+    ``functions/lzma_codec.py`` decodes through liblzma, which
+    verifies every container CRC32 AND the per-block plaintext check
+    (CRC32 / CRC64 / SHA-256, rotating by document).  Odd documents
+    ship as two concatenated streams.  The producer is STDLIB liblzma (independent
     implementation); Python only decodes payload -> text, and the
     line split / value extraction / aggregation all run JVM-side
     (the narrow-Python/wide-JVM split of ``pdf_corpus_text_stats``).
-    The oracle recomputes every stat from the synthesis plan, so one
-    mis-stepped probability update or rep-distance rotation breaks
-    the value hash."""
+    The oracle recomputes every stat from the synthesis plan, so any
+    wrong recovered byte breaks the value hash."""
     _utc(spark)
     from ..operators.multimodal import (
         extract_xz_decode,
@@ -4083,11 +4073,11 @@ def q_arrow_ipc_value_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_npz_tensor_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NPY/NPZ tensor files read from raw bytes (round 9) — the
     de-facto tensor interchange format of ML corpora (dataset
-    shards, embedding dumps), and a COMPOSITION of three existing
-    by-hand layers plus one new one: the ZIP central-directory walk
-    (``zipscan.py``) locates members, the hand DEFLATE inflater
-    (``inflate.py``) opens ``savez_compressed`` ones, member CRC32s
-    are verified, and the new NPY reader (``npy_scan.py``) parses
+    shards, embedding dumps), and a COMPOSITION of existing layers
+    plus one new one: the ZIP central-directory walk
+    (``zipscan.py``) locates members, the DEFLATE decoder
+    (``inflate.py``, stdlib zlib) opens ``savez_compressed`` ones,
+    member CRC32s are verified, and the new NPY reader (``npy_scan.py``) parses
     the header dict with a strict regex grammar — never ``eval``,
     the same untrusted-input posture as `pickle_opcode_scan` — then
     decodes the tensor DATA with ``struct`` iteration, independent
@@ -4212,19 +4202,12 @@ def q_pickle_opcode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bz2_corpus_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL bzip2 decode, value-checked (round 8): the other archive
     codec web corpora actually ship (Wikipedia dumps, mail archives)
-    — and unlike gzip's LZ77, a completely different stack decoded
-    end-to-end by hand in ``functions/bzip2.py``: MSB-first
-    non-byte-aligned bit stream, Huffman tables SWITCHED every 50
-    symbols via MTF-coded selectors, delta-coded canonical code
-    lengths, move-to-front + bijective-base-2 zero runs (RLE2), the
-    inverse Burrows-Wheeler transform (counting sort + permutation
-    walk from the 24-bit origin pointer), byte-level RLE1, and both
-    CRC layers (the non-reflected CRC-32 per block, rotate-left
-    folded per stream) VERIFIED.  One real .bz2 per document from the
+    — decoded in ``functions/bzip2.py`` through libbz2, with the
+    block and stream CRCs verified.  One real .bz2 per document from the
     STDLIB compressor (independent producer), levels rotating 1..9;
     the oracle recomputes plaintext length, byte sum, and distinct
-    count from the data formula — so a single mis-stepped Huffman
-    switch, BWT walk, or RLE1 count breaks the hash."""
+    count from the data formula — so any wrong recovered byte breaks
+    the hash."""
     _utc(spark)
     from ..operators.multimodal import (
         extract_bz2_decode,
@@ -4461,8 +4444,9 @@ def q_orc_compressed_footer_scan(
     default to a compressed footer, framed as ORC chunk runs
     (3-byte ``(len << 1) | is_original`` headers) whose payloads are
     RAW DEFLATE / snappy / lz4 block / zstd — all four from this
-    repo's hand-rolled codec family (``inflate.py``, ``snappy.py``,
-    ``lz4_codec.py``, ``zstd_codec.py``), composed by
+    repo's codec family (``inflate.py`` over stdlib zlib, and the
+    hand-rolled ``snappy.py``, ``lz4_codec.py``, ``zstd_codec.py``),
+    composed by
     ``orc_footer.py:_decompress_orc_stream``.  pyarrow writes the
     fixture rotating all four codecs by seed, so one query pins the
     chunk framing against every codec; LZO stays a loud boundary."""
@@ -6906,10 +6890,8 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real PDF object tokenizer (dicts, arrays, names, literal
     strings with nesting/escape/octal, hex strings, indirect refs,
     indirect /Length resolution), catalog -> page tree -> /Contents
-    walk, and FlateDecode content streams decompressed by THIS
-    REPO'S hand-rolled DEFLATE inflater through a verified zlib
-    container (header check + Adler-32) — zlib never touches the
-    read side. Text comes from the Tj / ' / TJ show operators in
+    walk, and FlateDecode content streams decompressed through a
+    verified zlib container (header check + Adler-32). Text comes from the Tj / ' / TJ show operators in
     operator order (TJ kerning numbers skipped), and the oracle
     recomputes the ENTIRE extracted string per document, so the
     value hash pins unescaping, hex decode, stream inflation, and
@@ -7067,7 +7049,7 @@ def q_pdf_corpus_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF -> corpus COMPOSITION: the document pipeline a 100 TB
     ingest actually runs. Python does only the NARROW step — the
     per-payload PDF reader walk (`pdf_text_extract`: xref, object
-    tokenizer, hand-inflated FlateDecode streams, text operators) —
+    tokenizer, inflated FlateDecode streams, text operators) —
     then every WIDE step (tokenize by regexp split, empty filter,
     explode, distinct/numeric/length rollups) runs JVM-side in
     whole-stage codegen. The same Python-narrow/JVM-wide handoff as
@@ -7198,9 +7180,9 @@ def q_orc_stripe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_orc_rich_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production ORC profile (round 11 — VERDICT r10 item 5):
     ZLIB/SNAPPY-COMPRESSED footers, stripe footers and streams
-    (3-byte chunk headers, decompressed by THIS repo's hand
-    inflate/snappy codecs — the independent pyarrow producer pins
-    them yet again), PRESENT streams for nullable columns (Byte RLE
+    (3-byte chunk headers, decompressed by ``inflate.py`` and the
+    hand snappy codec — the independent pyarrow producer pins them
+    yet again), PRESENT streams for nullable columns (Byte RLE
     over MSB-first bit-packed booleans; popcount fenced against the
     DATA value count), and DICTIONARY_V2 strings
     (``dictionary_key_size_threshold=1`` forces the encoding; the
@@ -7255,20 +7237,16 @@ def q_orc_rich_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("codec", "deflate", "decompression", "mapInPandas"),
 )
 def q_deflate_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAND-ROLLED DEFLATE decode (RFC 1951) — the algorithm under
-    gzip, ZIP, PNG, and HTTP content-encoding, decoded from first
-    principles with no zlib on the read side
-    (``functions/inflate.py``): LSB-first bit reading, stored blocks
-    with LEN/NLEN verification, fixed Huffman, dynamic Huffman
-    including the code-length-code run-length machinery, and LZ77
-    back-references with overlapping-copy semantics. The PRODUCER is
+    """DEFLATE decode (RFC 1951) — the algorithm under gzip, ZIP,
+    PNG, and HTTP content-encoding — through the stdlib zlib
+    decompressor with a bounded output and truncation rejected
+    (``functions/inflate.py``). The PRODUCER is
     the stdlib zlib compressor rotating levels 0-9 (level 0 emits
     stored blocks) and forcing Z_FIXED strategy on every 4th stream,
     so all three block types are exercised in every batch; the
     oracle recomputes byte counts/sums/endpoints from the synthesis
     formulas, so a value match proves the recovered BYTES, not just
-    that something decompressed. Completes the by-hand decompression
-    family begun with bzip2 (``bz2_corpus_decode``)."""
+    that something decompressed."""
     from ..operators.multimodal import (
         extract_deflate_content,
         synthesize_deflate_media,

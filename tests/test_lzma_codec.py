@@ -1,8 +1,7 @@
-"""Full LZMA / LZMA2 / .xz decoder — functions/lzma_codec.py
-(round 9): range coder + 12-state match model + LZMA2 chunk layer +
-container checks, pinned against the stdlib lzma (liblzma) producer.
-Closes the round-8 boundary documented in functions/xz_scan.py
-("full LZMA2 decode is out of scope")."""
+"""LZMA / LZMA2 / .xz decode — functions/lzma_codec.py: the
+multi-stream, bounded, ValueError-only contract around liblzma,
+pinned against the stdlib lzma producer. Full decode beyond the
+container triage of functions/xz_scan.py."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ import random
 import pytest
 
 from datawarehouseproject_spark.functions.lzma_codec import (
-    crc64_xz,
     decode_lzma2,
     decode_lzma_alone,
     decode_xz,
@@ -33,13 +31,6 @@ _SHAPES = [
 def _random_bytes(n: int, seed: int = 1) -> bytes:
     rnd = random.Random(seed)
     return bytes(rnd.randrange(256) for _ in range(n))
-
-
-def test_crc64_xz_known_vector():
-    # public check value for the ECMA-182 reflected CRC-64 ("CRC-64/XZ"):
-    # crc64("123456789") == 0x995DC9BBDF1939FA
-    assert crc64_xz(b"123456789") == 0x995DC9BBDF1939FA
-    assert crc64_xz(b"") == 0
 
 
 def test_xz_all_check_types_round_trip():
@@ -103,6 +94,15 @@ def test_concatenated_xz_streams_with_padding():
     assert decode_xz(a + b) == b"s1 " * 100 + b"s2 " * 100
     # four-byte null stream padding between streams is legal
     assert decode_xz(a + b"\x00" * 4 + b) == b"s1 " * 100 + b"s2 " * 100
+
+
+def test_trailing_junk_after_xz_stream_raises():
+    # lzma.decompress silently ignores trailing bytes; decode_xz must not
+    a = stdlzma.compress(b"s1 " * 100, check=stdlzma.CHECK_CRC32)
+    for junk in (b"junk", b"\x00\x00", b"\x00" * 4 + b"\x01\x02\x03\x04"):
+        with pytest.raises(ValueError):
+            decode_xz(a + junk)
+    assert decode_xz(a + b"\x00" * 8) == b"s1 " * 100
 
 
 def test_incompressible_data_uses_uncompressed_chunks():
@@ -219,5 +219,9 @@ def test_output_cap_bounds_decompression_bombs():
     if stdlzma.decompress(unknown, format=stdlzma.FORMAT_ALONE) == bomb:
         with pytest.raises(ValueError, match="cap"):
             decode_lzma_alone(unknown, max_output=1 << 16)
+    # a header-declared 4 GiB dictionary is refused, not allocated
+    small = stdlzma.compress(b"abc" * 100, format=stdlzma.FORMAT_ALONE)
+    with pytest.raises(ValueError):
+        decode_lzma_alone(small[:1] + b"\xff\xff\xff\xff" + small[5:])
     # and the caps do not fire on in-bounds output
     assert decode_xz(xz, max_output=1 << 21) == bomb

@@ -451,24 +451,10 @@ def round9_kernels() -> None:
         "sec": round(secs, 4),
     }))
 
-    import bz2 as stdbz2
-
-    from datawarehouseproject_spark.functions.bzip2 import decode_bz2
     from datawarehouseproject_spark.functions.xz_scan import (
         scan_xz,
         synth_xz,
     )
-
-    text = ("the quick brown fox jumps over the lazy dog. " * 10000).encode()
-    payload = stdbz2.compress(text, 9)
-    secs, out = _timeit(decode_bz2, payload)
-    assert out == text
-    print(json.dumps({
-        "kernel": "bzip2_full_decode",
-        "media": f"{len(text)} bytes text, level 9",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
 
     xzs = [synth_xz(s) for s in range(2000)]
     secs, n = _timeit(lambda: sum(scan_xz(p)["n_blocks"] for p in xzs))
@@ -508,11 +494,8 @@ def round9_kernels() -> None:
 
 
 def round10_kernels() -> None:
-    """This session's readers: hand-rolled DEFLATE inflate, MIME
-    message parse, PDF text extraction, ORC stripe RLEv2 decode."""
-    import zlib
-
-    from datawarehouseproject_spark.functions.inflate import inflate
+    """MIME message parse, PDF text extraction, ORC stripe RLEv2
+    decode."""
     from datawarehouseproject_spark.functions.mime_mail import (
         parse_mime_message,
         synth_email,
@@ -525,31 +508,6 @@ def round10_kernels() -> None:
         extract_pdf_text,
         synth_pdf,
     )
-
-    text = ("the quick brown fox jumps over the lazy dog. " * 10000).encode()
-    co = zlib.compressobj(9, zlib.DEFLATED, -15)
-    payload = co.compress(text) + co.flush()
-    secs, out = _timeit(inflate, payload)
-    assert out == text
-    print(json.dumps({
-        "kernel": "deflate_hand_inflate",
-        "media": f"{len(text)} bytes text, level 9",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
-
-    rng2 = np.random.RandomState(7)
-    blob = rng2.randint(0, 256, 400_000, dtype=np.uint8).tobytes()
-    co = zlib.compressobj(9, zlib.DEFLATED, -15)
-    stored = co.compress(blob) + co.flush()  # incompressible -> stored
-    secs, out = _timeit(lambda: inflate(stored, max_output=1 << 24))
-    assert out == blob
-    print(json.dumps({
-        "kernel": "deflate_hand_inflate_stored",
-        "media": f"{len(blob)} incompressible bytes (stored blocks)",
-        "mb_per_s": round(len(blob) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
 
     mails = [synth_email(s) for s in range(2000)]
     secs, n = _timeit(
@@ -582,51 +540,6 @@ def round10_kernels() -> None:
         "media": f"{sum(map(len, orcs))} bytes, 200 files, {n} int values"
                  " (+ as many strings)",
         "values_per_s": int(2 * n / secs),
-        "sec": round(secs, 4),
-    }))
-
-
-def round11_kernels() -> None:
-    """This session's readers: the hand-rolled LZMA range decoder
-    (.xz full decode) — compressible text, incompressible data
-    (LZMA2 uncompressed chunks), and the legacy .lzma container."""
-    import lzma as stdlzma
-
-    from datawarehouseproject_spark.functions.lzma_codec import (
-        decode_lzma_alone,
-        decode_xz,
-    )
-
-    text = ("the quick brown fox jumps over the lazy dog. " * 10000).encode()
-    xz = stdlzma.compress(text, check=stdlzma.CHECK_CRC64)
-    secs, out = _timeit(decode_xz, xz)
-    assert out == text
-    print(json.dumps({
-        "kernel": "lzma_xz_decode_text",
-        "media": f"{len(text)} bytes text -> {len(xz)} xz (CRC64)",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
-
-    rng = np.random.RandomState(11)
-    blob = rng.randint(0, 256, 400_000, dtype=np.uint8).tobytes()
-    xzb = stdlzma.compress(blob, preset=0, check=stdlzma.CHECK_CRC32)
-    secs, out = _timeit(decode_xz, xzb)
-    assert out == blob
-    print(json.dumps({
-        "kernel": "lzma_xz_decode_incompressible",
-        "media": f"{len(blob)} random bytes (uncompressed chunks)",
-        "mb_per_s": round(len(blob) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
-
-    alone = stdlzma.compress(text, format=stdlzma.FORMAT_ALONE)
-    secs, out = _timeit(decode_lzma_alone, alone)
-    assert out == text
-    print(json.dumps({
-        "kernel": "lzma_alone_decode",
-        "media": f"{len(text)} bytes text, legacy .lzma header",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
         "sec": round(secs, 4),
     }))
 
@@ -1422,7 +1335,6 @@ if __name__ == "__main__":
     round8b_kernels()
     round9_kernels()
     round10_kernels()
-    round11_kernels()
     round11b_kernels()
     round12_kernels()
     round12b_kernels()
