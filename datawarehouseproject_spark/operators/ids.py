@@ -87,7 +87,10 @@ def running_total(
         .orderBy(F.col(order_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = ranged.withColumn("__lcum", F.sum(value_col).over(w_local))
+    # one evaluation of the range repartition, as in dense_ids
+    local = ranged.withColumn(
+        "__lcum", F.sum(value_col).over(w_local)
+    ).localCheckpoint(eager=False)
 
     totals = local.groupBy("__pid").agg(F.sum(value_col).alias("__n"))
     w_prefix = (
@@ -132,7 +135,10 @@ def running_max(
         .orderBy(F.col(order_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
     )
-    local = ranged.withColumn("__lmax", F.max(value_col).over(w_local))
+    # one evaluation of the range repartition, as in dense_ids
+    local = ranged.withColumn(
+        "__lmax", F.max(value_col).over(w_local)
+    ).localCheckpoint(eager=False)
 
     totals = local.groupBy("__pid").agg(F.max(value_col).alias("__pmax"))
     w_prefix = (

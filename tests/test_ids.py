@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from datawarehouseproject_spark.operators.ids import dense_ids
+from datawarehouseproject_spark.operators.ids import (
+    dense_ids,
+    running_max,
+    running_total,
+)
 from test_analytics_queries import SF_DIR as SMOKE_SF_DIR
 
 
@@ -31,6 +35,38 @@ def test_dense_ids_offset_and_density(spark):
     got = {r["k"]: r["nid"] for r in
            dense_ids(df, "k", id_col="nid", offset=100).collect()}
     assert got == {"a": 101, "b": 102, "c": 103, "d": 104}
+
+
+def test_running_total_and_max_are_stable_over_sampled_bounds(spark):
+    """Regression: running_total and running_max once took local values
+    and per-partition totals from two evaluations of one range
+    repartition. Over skewed keys whose row order follows a shuffle,
+    the sampled range bounds differ between evaluations, and the two
+    evaluations run apart whenever the caller keeps a column the totals
+    branch prunes. Every evaluation must equal a global window."""
+    df = (
+        spark.range(0, 24_000, numPartitions=6)
+        .repartition(5)
+        .selectExpr(
+            # unique keys, most of them crowded into the low range
+            "cast(pow(id % 4000, 3) as long) * 8 + cast(id / 4000 as long) AS k",
+            # rising with k, so a wrong carry-in shows in the prefix max
+            "(id % 4000) * 16 + id * 7919 % 13 AS v",
+            "repeat('x', cast(id % 7 as int)) AS pad",
+        )
+    )
+    w = Window.orderBy("k")
+    total = df.withColumn(
+        "out", F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    prev_max = df.withColumn(
+        "out", F.max("v").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    )
+    for op, oracle in ((running_total, total), (running_max, prev_max)):
+        want = sorted(map(tuple, oracle.select("k", "pad", "out").collect()))
+        for _ in range(3):
+            got = op(df, "k", "v", out_col="out", num_partitions=8)
+            assert sorted(map(tuple, got.select("k", "pad", "out").collect())) == want
 
 
 # The DuckDB-oracle scale sits next to the smoke scale; the defect
