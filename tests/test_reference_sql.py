@@ -10,6 +10,7 @@ the reference's captured output.
 
 from __future__ import annotations
 
+import os
 import re
 from decimal import Decimal
 
@@ -23,6 +24,9 @@ from datawarehouseproject_spark.plans.mysql_shim import translate
 from tests.test_golden_replay import _rows  # golden dump parser
 
 DUMP = "/root/reference/sql_script/db_staging.sql"
+pytestmark = pytest.mark.skipif(
+    not os.path.exists(DUMP), reason=f"reference dump {DUMP} is absent"
+)
 
 
 def _reference_query_text() -> str:
