@@ -337,8 +337,9 @@ def decode_arrow_values(payload: bytes) -> dict:
     in the spec's preorder layout (int: validity+data, utf8:
     validity+offsets+data), validity bitmaps are LSB-first, buffer
     offsets are body-relative, and compressed bodies (BodyCompression,
-    field 3) decode per-buffer through the hand lz4-frame/zstd
-    decoders (round 13 — this was the round-12 loud boundary).
+    field 3) decode per-buffer through the lz4-frame (hand) and zstd
+    (libzstd) decoders (round 13 — this was the round-12 loud
+    boundary).
     Returns exact integer sums and
     utf8 char counts over the NON-NULL slots only — null-slot data
     bytes are unspecified by the spec and must not leak into stats."""
@@ -422,10 +423,10 @@ def _walk_batch_header(
     BUFFER — each constituent buffer compressed independently); per
     the spec's BUFFER layout every non-empty buffer starts with an
     int64le uncompressed length, with ``-1`` marking a buffer the
-    writer left raw.  Both codecs decode through the repo's hand
-    decoders (:mod:`.lz4_codec`, :mod:`.zstd_codec`) — no library
-    shortcut — and the declared uncompressed length is verified
-    against the decoder's output (drift = quarantine)."""
+    writer left raw.  lz4 decodes through the hand decoder
+    (:mod:`.lz4_codec`), zstd through :func:`.zstd_codec.decode_zstd`
+    (libzstd); the declared uncompressed length caps the decoder's
+    output and is verified against it (drift = quarantine)."""
     codec = None
     comp_pos = fb.field(header, 3)
     if comp_pos is not None:
@@ -481,11 +482,11 @@ def _walk_batch_header(
         if codec == 0:
             from .lz4_codec import decode_lz4_frame
 
-            out = decode_lz4_frame(raw[8:], max_output=1 << 28)
+            out = decode_lz4_frame(raw[8:], max_output=decoded_len)
         else:
             from .zstd_codec import decode_zstd
 
-            out = decode_zstd(raw[8:], max_output=1 << 28)
+            out = decode_zstd(raw[8:], max_output=decoded_len)
         if len(out) != decoded_len:
             raise ValueError(
                 "arrow buffer decoded length disagrees with prefix"

@@ -775,8 +775,8 @@ def synth_avro_complex_plan(seed: int) -> dict:
     RECURSIVE linked list (``Node{v, next:[null,Node]}``) of depth
     ``i%4`` whose node k carries ``(i*3+k) % 100``; and the
     container codec rotates ``(seed>>1)%3`` through null / deflate /
-    zstandard (the zstd blocks compressed by pyarrow's codec, an
-    independent producer, decoded by the HAND zstd decoder)."""
+    zstandard (the zstd blocks compressed by pyarrow's codec and
+    decoded by :func:`.zstd_codec.decode_zstd`)."""
     n = 10 + seed % 20
     return {
         "n_records": n,

@@ -27,9 +27,10 @@ here is public Apache Parquet format spec:
   length and compress levels+values together; V2 pages store level
   byte lengths in the header and NEVER compress the levels;
 - **codecs**: UNCOMPRESSED=0 passes through, GZIP=2 is RFC 1952
-  (stdlib zlib, ``wbits=31``); anything else (snappy, zstd, lz4)
-  raises ValueError — a documented boundary, not a silent wrong
-  answer.
+  (stdlib zlib, ``wbits=31``), SNAPPY=1 and ZSTD=6 decode through
+  :mod:`.snappy` and :mod:`.zstd_codec`; gzip and zstd stop at the
+  header's uncompressed size.  Anything else (lz4, brotli) raises
+  ValueError — a documented boundary, not a silent wrong answer.
 
 The SYNTHESIZER is pyarrow — the same genuinely-independent-producer
 pin as :func:`.parquet_footer.synth_parquet` — rotating all four
@@ -359,11 +360,20 @@ def _read_page_header(data: bytes, pos: int) -> tuple[dict, int]:
 def _decompress(codec: int, raw: bytes, expect: int) -> bytes:
     if codec == _CODEC_NONE:
         return raw
+    if expect is None or expect < 0:
+        raise ValueError(f"compressed page declares size {expect}")
     if codec == _CODEC_GZIP:
+        inflater = zlib.decompressobj(31)
         try:
-            out = zlib.decompress(raw, wbits=31)
+            out = inflater.decompress(raw, expect + 1)
         except zlib.error as e:
             raise ValueError(f"bad gzip page body: {e}") from e
+        if len(out) > expect:
+            raise ValueError(
+                f"gzip page body exceeds its declared {expect} bytes"
+            )
+        if not inflater.eof:
+            raise ValueError("truncated gzip page body")
         if len(out) != expect:
             raise ValueError(
                 f"gzip page decodes to {len(out)} bytes, header says {expect}"
@@ -382,7 +392,7 @@ def _decompress(codec: int, raw: bytes, expect: int) -> bytes:
     if codec == _CODEC_ZSTD:
         from .zstd_codec import decode_zstd
 
-        out = decode_zstd(raw)
+        out = decode_zstd(raw, max_output=expect)
         if len(out) != expect:
             raise ValueError(
                 f"zstd page decodes to {len(out)} bytes, "

@@ -161,7 +161,7 @@ def scan_warc(payload: bytes) -> dict:
         *(bytes([0x50 + i, 0x2A, 0x4D, 0x18]) for i in range(16)),
     ):
         # .warc.zst: concatenated zstd frames, optionally behind the
-        # IIPC dictionary frame — lift it, then hand-decode the rest
+        # IIPC dictionary frame — lift it, then decode the rest
         from .zstd_codec import decode_zstd
 
         dictionary, rest = lift_warc_dictionary(payload)

@@ -1,12 +1,17 @@
-"""Zstandard frame decode, by hand — the FOURTH entropy stack.
+"""Zstandard frame decode: libzstd for plain frames, by hand for
+dictionary frames.
 
 Zstd (RFC 8878, public) is the compression format modern corpora
 actually ship in — Common Crawl's WET/WARC mirrors, parquet's
-fastest-growing codec, the package-manager default — and its entropy
-layer is neither Huffman-only (DEFLATE/bzip2) nor an adaptive range
-coder (LZMA): it is **FSE**, the table-based asymmetric numeral
-system (tANS).  This module implements the full decode path from the
-RFC:
+fastest-growing codec, the package-manager default.  Frames that need
+no dictionary decode through libzstd, which ``pyarrow`` already
+bundles (``pa.CompressedInputStream(..., "zstd")``); CPython 3.11 has
+no zstd module.  Arrow's codec API takes no dictionary, so frames
+decoded against one (``dictionary=``, as in :func:`.warc.scan_warc`)
+run the hand decoder below, which is also the reference the tests
+hold libzstd to.  Its entropy layer is **FSE**, the table-based
+asymmetric numeral system (tANS), and it implements the full decode
+path from the RFC:
 
 - frame header (magic ``0xFD2FB528``, descriptor, single-segment /
   window descriptor, 0/1/2/4/8-byte content size, dictionary-id
@@ -32,13 +37,14 @@ RFC:
   ``literal_length == 0`` shift semantics;
 - sequence execution with overlap-forward match copies, then xxh64
   (hand-rolled, published vectors) verifying the content checksum
-  when the frame carries one.
+  when the frame carries one;
+- zstd dictionaries (:func:`parse_zstd_dictionary`).
 
 Producers: ``pyarrow.Codec('zstd')`` (libzstd via Arrow C++) AND the
 ``zstd`` CLI binary (which writes content checksums by default) —
 two independent producer binaries, plus compression levels that
-exercise predefined vs literal-specific FSE tables.  Pinned in
-``tests/test_zstd_codec.py``.
+exercise predefined vs literal-specific FSE tables.  Both decode
+paths are pinned, byte for byte, in ``tests/test_zstd_codec.py``.
 """
 
 from __future__ import annotations
@@ -940,6 +946,99 @@ def parse_zstd_dictionary(blob: bytes) -> ZstdDict:
     return ZstdDict(dict_id, (table, max_bits), fse, reps, content)
 
 
+def _skip_skippable(payload: bytes, pos: int) -> int:
+    """Offset of the first non-skippable frame at or after ``pos``
+    (``len(payload)`` when only skippable frames remain)."""
+    n = len(payload)
+    while pos < n:
+        if pos + 4 > n:
+            raise ValueError("truncated zstd frame magic")
+        (magic,) = struct.unpack_from("<I", payload, pos)
+        if (magic & 0xFFFFFFF0) != 0x184D2A50:
+            return pos
+        if pos + 8 > n:
+            raise ValueError("truncated skippable frame size")
+        (sz,) = struct.unpack_from("<I", payload, pos + 4)
+        pos += 8 + sz
+        if pos > n:
+            raise ValueError("skippable frame overruns payload")
+    return pos
+
+
+def _frame_header(
+    payload: bytes,
+    pos: int,
+    max_output: int,
+    dictionary: "ZstdDict | None",
+) -> tuple[int, int | None, bool]:
+    """Parse the data-frame header at ``pos`` (magic included) and
+    return ``(block offset, declared content size, checksum flag)``.
+
+    A frame that DECLARES a dictionary-id is refused when no
+    dictionary was provided (decoding anyway can silently produce
+    wrong bytes when the dictionary only overrides the initial repcode
+    cache — the one corruption the in-frame offset fence cannot see),
+    and refused on an id mismatch.  A declared content size above
+    ``max_output`` is refused before anything is decoded."""
+    n = len(payload)
+    (magic,) = struct.unpack_from("<I", payload, pos)
+    if magic != _MAGIC:
+        raise ValueError(f"bad zstd magic {magic:#x}")
+    pos += 4
+    if pos >= n:
+        raise ValueError("missing frame header descriptor")
+    fhd = payload[pos]
+    pos += 1
+    fcs_flag = fhd >> 6
+    single = bool(fhd & 0x20)
+    if fhd & 0x08:
+        raise ValueError("reserved frame-header bit set")
+    checksum = bool(fhd & 0x04)
+    did_flag = fhd & 0x03
+    if not single:
+        if pos >= n:
+            raise ValueError("missing window descriptor")
+        pos += 1  # window size only bounds memory; cap applies anyway
+    declared_did = 0
+    if did_flag:
+        did_size = (0, 1, 2, 4)[did_flag]
+        if pos + did_size > n:
+            raise ValueError("truncated dictionary id")
+        declared_did = int.from_bytes(payload[pos : pos + did_size], "little")
+        pos += did_size
+    if declared_did and dictionary is None:
+        raise ValueError(
+            f"frame requires dictionary {declared_did} "
+            "but none was provided"
+        )
+    if (
+        dictionary is not None
+        and declared_did
+        and dictionary.dict_id
+        and declared_did != dictionary.dict_id
+    ):
+        raise ValueError(
+            f"frame wants dictionary {declared_did}, "
+            f"provided {dictionary.dict_id}"
+        )
+    fcs_size = (1 if single else 0, 2, 4, 8)[fcs_flag]
+    content_size = None
+    if fcs_size:
+        if pos + fcs_size > n:
+            raise ValueError("truncated frame content size")
+        content_size = int.from_bytes(payload[pos : pos + fcs_size], "little")
+        if fcs_size == 2:
+            content_size += 256
+        pos += fcs_size
+    if content_size is not None and content_size > max_output:
+        raise ValueError("declared content size exceeds cap")
+    return pos, content_size, checksum
+
+
+#: libzstd output read per call; the cap is checked between reads
+_CHUNK = 1 << 16
+
+
 def decode_zstd(
     payload: bytes,
     max_output: int = 1 << 28,
@@ -947,95 +1046,74 @@ def decode_zstd(
 ) -> bytes:
     """Decode one or more concatenated zstd frames (skippable frames
     included), verifying the content size and — when the producer
-    wrote one — the xxh64 content checksum.
+    wrote one — the xxh64 content checksum.  Only ``ValueError``
+    escapes; output past ``max_output`` raises.
+
+    Without a dictionary the frames decode through libzstd (Arrow's
+    ``CompressedInputStream``), read ``_CHUNK`` bytes at a time so a
+    bomb stops within one chunk of the cap; the leading skippable
+    frames and the first frame header are walked here first, so an
+    empty payload, a bad magic, a declared dictionary-id and a declared
+    size over the cap raise before libzstd runs.  libzstd refuses
+    windows above 128 MiB.
 
     ``dictionary`` (parsed :class:`ZstdDict` or raw dictionary bytes)
     seeds every data frame's entropy tables, repcodes, and match
-    history, mirroring ``ZSTD_decompress_usingDict``.  A frame that
-    DECLARES a dictionary-id is refused when no dictionary was
-    provided (decoding anyway can silently produce wrong bytes when
-    the dictionary only overrides the initial repcode cache — the one
-    corruption the in-frame offset fence cannot see), and refused on
-    an id mismatch."""
+    history, mirroring ``ZSTD_decompress_usingDict``.  Arrow's codec
+    API takes no dictionary, so these frames decode through the hand
+    decoder (:func:`_decode_zstd_hand`), which is also the reference
+    the tests hold libzstd to."""
+    if dictionary is not None:
+        return _decode_zstd_hand(payload, max_output, dictionary)
+    pos = _skip_skippable(payload, 0)
+    if pos >= len(payload):
+        raise ValueError("no zstd frames in payload")
+    _frame_header(payload, pos, max_output, None)
+    import pyarrow as pa
+
+    parts = []
+    size = 0
+    try:
+        with pa.CompressedInputStream(
+            pa.BufferReader(pa.py_buffer(payload)), "zstd"
+        ) as stream:
+            while size <= max_output:
+                chunk = stream.read(_CHUNK)
+                if not chunk:
+                    return b"".join(parts)
+                size += len(chunk)
+                parts.append(chunk)
+    except (OSError, pa.ArrowException) as exc:
+        raise ValueError(f"bad zstd payload: {exc}") from exc
+    raise ValueError("zstd output exceeds cap")
+
+
+def _decode_zstd_hand(
+    payload: bytes,
+    max_output: int,
+    dictionary: "ZstdDict | bytes | None",
+) -> bytes:
+    """The RFC 8878 decode by hand: frames, blocks, FSE and Huffman
+    tables, sequences, xxh64.  Same contract as :func:`decode_zstd`;
+    ``dictionary=None`` decodes dictionary-less frames."""
     if isinstance(dictionary, (bytes, bytearray, memoryview)):
         dictionary = parse_zstd_dictionary(bytes(dictionary))
     out = bytearray()
-    pos = 0
     n = len(payload)
-    if n < 4:
-        raise ValueError("zstd payload shorter than a magic number")
     saw_frame = False
     # history buffer reused across frames: dictionary content stays
     # seeded at [0, prefix); each frame's output grows past it
     prefix = len(dictionary.content) if dictionary is not None else 0
     fbuf = bytearray(dictionary.content) if dictionary is not None else bytearray()
-    while pos < n:
-        if pos + 4 > n:
-            raise ValueError("truncated zstd frame magic")
-        (magic,) = struct.unpack_from("<I", payload, pos)
-        pos += 4
-        if (magic & 0xFFFFFFF0) == 0x184D2A50:  # skippable frame
-            if pos + 4 > n:
-                raise ValueError("truncated skippable frame size")
-            (sz,) = struct.unpack_from("<I", payload, pos)
-            pos += 4 + sz
-            if pos > n:
-                raise ValueError("skippable frame overruns payload")
-            continue
-        if magic != _MAGIC:
-            raise ValueError(f"bad zstd magic {magic:#x}")
-        saw_frame = True
+    pos = 0
+    while True:
+        pos = _skip_skippable(payload, pos)
         if pos >= n:
-            raise ValueError("missing frame header descriptor")
-        fhd = payload[pos]
-        pos += 1
-        fcs_flag = fhd >> 6
-        single = bool(fhd & 0x20)
-        if fhd & 0x08:
-            raise ValueError("reserved frame-header bit set")
-        checksum = bool(fhd & 0x04)
-        did_flag = fhd & 0x03
-        if not single:
-            if pos >= n:
-                raise ValueError("missing window descriptor")
-            pos += 1  # window size only bounds memory; cap applies anyway
-        declared_did = 0
-        if did_flag:
-            did_size = (0, 1, 2, 4)[did_flag]
-            if pos + did_size > n:
-                raise ValueError("truncated dictionary id")
-            declared_did = int.from_bytes(
-                payload[pos : pos + did_size], "little"
-            )
-            pos += did_size
-        if declared_did and dictionary is None:
-            raise ValueError(
-                f"frame requires dictionary {declared_did} "
-                "but none was provided"
-            )
-        if (
-            dictionary is not None
-            and declared_did
-            and dictionary.dict_id
-            and declared_did != dictionary.dict_id
-        ):
-            raise ValueError(
-                f"frame wants dictionary {declared_did}, "
-                f"provided {dictionary.dict_id}"
-            )
-        fcs_size = (1 if single else 0, 2, 4, 8)[fcs_flag]
-        content_size = None
-        if fcs_size:
-            if pos + fcs_size > n:
-                raise ValueError("truncated frame content size")
-            content_size = int.from_bytes(
-                payload[pos : pos + fcs_size], "little"
-            )
-            if fcs_size == 2:
-                content_size += 256
-            pos += fcs_size
-        if content_size is not None and content_size > max_output:
-            raise ValueError("declared content size exceeds cap")
+            break
+        saw_frame = True
+        pos, content_size, checksum = _frame_header(
+            payload, pos, max_output, dictionary
+        )
         st = _FrameState()
         if dictionary is not None:
             if dictionary.huf is not None:

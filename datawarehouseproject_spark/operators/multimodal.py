@@ -1730,9 +1730,10 @@ def synthesize_zstd_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def extract_zstd_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
     """FULL zstd decode per payload
-    (:func:`..functions.zstd_codec.decode_zstd`): FSE/tANS tables,
-    Huffman literals (both tree descriptions, 1/4 streams),
-    sequences with repcodes, frame/block layers, checksums."""
+    (:func:`..functions.zstd_codec.decode_zstd`): these frames need no
+    dictionary, so they decode through libzstd (Arrow), content size
+    and checksums verified; the hand FSE/Huffman decoder serves
+    dictionary frames and is the tests' reference."""
 
     def loader():
         from ..functions.zstd_codec import decode_zstd

@@ -3479,9 +3479,10 @@ def q_warc_zstd_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenated zstd frames each holding a run of records, behind a
     SKIPPABLE frame (generic ``0x184D2A50`` marker here; the
     dict-trained layout with the ``0x184D2A5D`` dictionary frame is
-    ``warc_zstd_dict_scan``'s fixture).  The scan composes the round-10 hand zstd decoder
-    (``zstd_codec.py`` — FSE/huffman/sequences, frame walk) with the
-    round-8 ISO 28500 record grammar (``warc.py``), and the oracle
+    ``warc_zstd_dict_scan``'s fixture).  The scan composes the zstd
+    decoder (``zstd_codec.py`` — these frames need no dictionary, so
+    libzstd via Arrow; the hand decoder is the tests' reference) with
+    the round-8 ISO 28500 record grammar (``warc.py``), and the oracle
     is IDENTICAL to `warc_record_scan`'s — same record plan, second
     container — so the two containers' aggregates must agree
     hash-exactly."""
@@ -3590,7 +3591,11 @@ def q_zstd_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct entropy stack in the codec family, and the one modern
     corpora actually ship in (Common Crawl mirrors, parquet's
     fastest-growing codec): **FSE/tANS** (``functions/zstd_codec.py``,
-    from RFC 8878).  By hand: normalized-count table descriptions
+    from RFC 8878).  These frames need no dictionary, so the query
+    decodes them through libzstd (Arrow); the hand decoder, which
+    serves dictionary frames (``warc_zstd_dict_scan``) and is the
+    reference ``tests/test_zstd_codec.py`` holds libzstd to
+    byte-for-byte, implements: normalized-count table descriptions
     (the ``value - 1`` convention, less-than-one cells from the
     table's end, 2-bit zero-run repeats), the
     ``(size>>1)+(size>>3)+3`` spread, baseline/nbBits state
@@ -3945,7 +3950,7 @@ def q_tfrecord_compressed_scan(
     the rotated-shards-concatenated layout, so record framing must
     reassemble across member boundaries), and ``.tfrecord.zst``
     file-level zstd.  The scan sniffs the magic, inflates through
-    the hand gzip/zstd decoders (member CRC32+ISIZE / frame xxh64
+    the gzip/zstd decoders (member CRC32+ISIZE / frame xxh64
     verified), THEN verifies both masked CRC32Cs per record and
     wire-decodes every protobuf payload — three checksum layers end
     to end."""
@@ -4444,8 +4449,9 @@ def q_orc_compressed_footer_scan(
     default to a compressed footer, framed as ORC chunk runs
     (3-byte ``(len << 1) | is_original`` headers) whose payloads are
     RAW DEFLATE / snappy / lz4 block / zstd — all four from this
-    repo's codec family (``inflate.py`` over stdlib zlib, and the
-    hand-rolled ``snappy.py``, ``lz4_codec.py``, ``zstd_codec.py``),
+    repo's codec family (``inflate.py`` over stdlib zlib,
+    ``zstd_codec.py`` over libzstd, and the hand-rolled ``snappy.py``
+    and ``lz4_codec.py``),
     composed by
     ``orc_footer.py:_decompress_orc_stream``.  pyarrow writes the
     fixture rotating all four codecs by seed, so one query pins the

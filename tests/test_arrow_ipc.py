@@ -291,3 +291,32 @@ def test_stream_requires_schema_first_and_rejects_garbage():
     for cut in (3, 10, len(good) // 2):
         with pytest.raises(ValueError):
             decode_arrow_stream(good[:cut] + b"\x01\x02\x03")
+
+
+def test_compressed_buffer_bomb_stops_at_prefix_length():
+    """A compressed body buffer whose int64 length prefix says 64
+    bytes but whose lz4 or zstd frame inflates to 512 KiB is refused
+    at the prefix's length, not after inflating."""
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    from datawarehouseproject_spark.functions.arrow_ipc import (
+        decode_arrow_values,
+    )
+
+    n = 1 << 16
+    schema = pa.schema([pa.field("x", pa.int64())])
+    batch = pa.record_batch([pa.array([0] * n, pa.int64())], schema=schema)
+    magics = {"lz4": b"\x04\x22\x4d\x18", "zstd": b"\x28\xb5\x2f\xfd"}
+    for comp, magic in magics.items():
+        buf = io.BytesIO()
+        opts = ipc.IpcWriteOptions(compression=comp)
+        with ipc.new_file(buf, schema, options=opts) as w:
+            w.write_batch(batch)
+        blob = buf.getvalue()
+        assert len(blob) < 4096, comp
+        real = struct.pack("<q", n * 8) + magic
+        assert blob.count(real) == 1, comp
+        bomb = blob.replace(real, struct.pack("<q", 64) + magic)
+        with pytest.raises(ValueError, match="cap"):
+            decode_arrow_values(bomb)

@@ -303,3 +303,30 @@ def test_byte_stream_split_truncation_quarantines():
     # unsupported physical type (byte array = 6)
     with pytest.raises(ValueError, match="unsupported type"):
         _decode_values(b"\x00" * 64, 0, 64, 9, 6, 4, None, 0)
+
+
+def test_compressed_page_bomb_stops_at_declared_size():
+    """A ~2 KiB page body that declares 64 bytes but inflates to
+    megabytes is refused at the declared size, not after inflating."""
+    import gzip
+
+    import pyarrow as pa
+
+    from datawarehouseproject_spark.functions.parquet_pages import (
+        _CODEC_GZIP,
+        _CODEC_ZSTD,
+        _decompress,
+    )
+
+    zeros = b"\x00" * (1 << 24)
+    bombs = {
+        _CODEC_GZIP: (gzip.compress(zeros[: 1 << 21]), "exceeds"),
+        _CODEC_ZSTD: (bytes(pa.Codec("zstd").compress(zeros)), "cap"),
+    }
+    for codec, (body, word) in bombs.items():
+        assert len(body) < 8192, codec
+        with pytest.raises(ValueError, match=word):
+            _decompress(codec, body, 64)
+    # a truncated gzip body still quarantines
+    with pytest.raises(ValueError, match="truncated"):
+        _decompress(_CODEC_GZIP, gzip.compress(b"abc" * 100)[:-12], 300)

@@ -162,3 +162,99 @@ def test_match_offset_fenced_to_current_frame():
     # match, so offset 5 must quarantine
     with pytest.raises(ValueError, match="frame"):
         run(4)
+
+
+# -- libzstd vs the hand decoder -------------------------------------------
+# decode_zstd sends dictionary-less frames through libzstd (Arrow); the
+# hand decoder stays as the independent reference for those bytes.
+
+
+def _hand(payload, max_output=1 << 28):
+    from datawarehouseproject_spark.functions.zstd_codec import (
+        _decode_zstd_hand,
+    )
+
+    return _decode_zstd_hand(payload, max_output, None)
+
+
+def _cli_frames():
+    for args in (["-3"], ["-19"], ["-1", "--no-check"], ["-3", "--long=20"]):
+        for name, d in _shapes().items():
+            p = subprocess.run(
+                [_ZSTD_BIN, "-c", *args], input=d, capture_output=True
+            )
+            assert p.returncode == 0
+            yield args, name, p.stdout
+
+
+def test_libzstd_matches_hand_decoder_on_synth_seeds():
+    for seed in range(200):
+        payload = synth_zstd(seed)
+        assert decode_zstd(payload) == _hand(payload), seed
+
+
+@_needs_cli
+def test_libzstd_matches_hand_decoder_on_cli_frames():
+    for args, name, frame in _cli_frames():
+        want = _hand(frame, 1 << 24)
+        assert decode_zstd(frame, max_output=1 << 24) == want, (args, name)
+        if "--no-check" in args:
+            continue
+        # one flipped content-checksum byte: both paths refuse it (a
+        # flip inside a block may land in padding and decode the same)
+        bad = bytearray(frame)
+        bad[-1] ^= 0x01
+        for decode in (_hand, decode_zstd):
+            with pytest.raises(ValueError, match="checksum"):
+                decode(bytes(bad), 1 << 24)
+
+
+def test_libzstd_path_contract_errors():
+    good = bytes(pa.Codec("zstd").compress(b"abcdef" * 500))
+    skip = struct.pack("<II", 0x184D2A50, 3) + b"abc"
+    with pytest.raises(ValueError, match="no zstd frames"):
+        decode_zstd(b"")
+    with pytest.raises(ValueError, match="no zstd frames"):
+        decode_zstd(skip + skip)
+    with pytest.raises(ValueError):
+        decode_zstd(good + b"junk")
+    with pytest.raises(ValueError):
+        decode_zstd(good + b"\x28\xb5")
+    with pytest.raises(ValueError, match="bad zstd magic"):
+        decode_zstd(skip + b"\x12\x34\x56\x78\x9a")
+
+
+def test_window_above_libzstd_limit_is_a_valueerror():
+    """Window descriptor exponent 18 -> 2**28 bytes, one past libzstd's
+    default decode limit; the hand decoder ignores the window, libzstd
+    refuses it, and the refusal must surface as ValueError."""
+    frame = (
+        struct.pack("<I", 0xFD2FB528)
+        + bytes([0x00, 18 << 3])  # no content size; window descriptor
+        + bytes([0x09, 0x00, 0x00])  # last raw block of 1 byte
+        + b"x"
+    )
+    assert _hand(frame) == b"x"
+    # an escaping OSError or MemoryError is not a ValueError: it fails
+    with pytest.raises(ValueError, match="too much memory"):
+        decode_zstd(frame)
+
+
+def test_bomb_stops_at_cap_without_allocating_it():
+    """64 MiB of zeros, streamed so the frame declares no content size
+    (the declared-size check cannot catch it), is ~2 KiB compressed."""
+    import resource
+
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, "zstd") as out:
+        zeros = b"\x00" * (1 << 20)
+        for _ in range(64):
+            out.write(zeros)
+    bomb = sink.getvalue().to_pybytes()
+    del zeros
+    assert len(bomb) < 4096 and bomb[4] & 0xC0 == 0  # no content size
+    before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    with pytest.raises(ValueError, match="cap"):
+        decode_zstd(bomb, max_output=1 << 16)
+    grown_kib = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - before
+    assert grown_kib < 8 * 1024

@@ -628,29 +628,37 @@ def round11b_kernels() -> None:
         "sec": round(secs, 4),
     }))
 
-    from datawarehouseproject_spark.functions.zstd_codec import decode_zstd
+    from datawarehouseproject_spark.functions.zstd_codec import (
+        _decode_zstd_hand,
+        decode_zstd,
+    )
 
+    # dictionary-less frames: decode_zstd runs libzstd, the hand
+    # decoder is its reference; time both, each labelled
+    zstd_paths = {
+        "hand": lambda p: _decode_zstd_hand(p, 1 << 24, None),
+        "libzstd": lambda p: decode_zstd(p, max_output=1 << 24),
+    }
     z3 = bytes(pa.Codec("zstd", compression_level=3).compress(text))
-    secs, out = _timeit(lambda: decode_zstd(z3, max_output=1 << 24))
-    assert out == text
-    print(json.dumps({
-        "kernel": "zstd_hand_decode",
-        "media": f"{len(text)} bytes text -> {len(z3)} zstd (FSE+huffman)",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
-
     rng11 = np.random.RandomState(4)
     zblob = rng11.randint(0, 256, 400_000, dtype=np.uint8).tobytes()
     zr = bytes(pa.Codec("zstd").compress(zblob))
-    secs, out = _timeit(lambda: decode_zstd(zr, max_output=1 << 24))
-    assert out == zblob
-    print(json.dumps({
-        "kernel": "zstd_hand_decode_incompressible",
-        "media": f"{len(zblob)} random bytes (raw blocks)",
-        "mb_per_s": round(len(zblob) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
+    cases = (
+        ("zstd_decode", text, z3,
+         f"{len(text)} bytes text -> {len(z3)} zstd (FSE+huffman)"),
+        ("zstd_decode_incompressible", zblob, zr,
+         f"{len(zblob)} random bytes (raw blocks)"),
+    )
+    for kernel, plain, frame, media in cases:
+        for path, decode in zstd_paths.items():
+            secs, out = _timeit(decode, frame)
+            assert out == plain
+            print(json.dumps({
+                "kernel": f"{kernel}_{path}",
+                "media": media,
+                "mb_per_s": round(len(plain) / secs / 1e6, 2),
+                "sec": round(secs, 4),
+            }))
 
     tfrs = [synth_tfrecord(s) for s in range(2000)]
     secs, n = _timeit(
