@@ -48,8 +48,8 @@ def scan_bz2(payload: bytes) -> dict:
     arr = np.frombuffer(data, dtype=np.uint8)
     return {
         "n_bytes": len(data),
-        "byte_sum": int(arr.astype(np.int64).sum()),
-        "n_distinct": int(len(np.unique(arr))),
+        "byte_sum": int(arr.sum(dtype=np.int64)),
+        "n_distinct": int(np.count_nonzero(np.bincount(arr, minlength=256))),
         "compressed_bytes": len(payload),
     }
 

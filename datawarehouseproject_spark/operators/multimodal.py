@@ -499,12 +499,11 @@ def extract_image_features(
                 feats["sum_g"].append(int(sums[1]))
                 feats["sum_b"].append(int(sums[2]))
                 errors.append(None)
-            out = pdf[keep_names].reset_index(drop=True)
-            for k, v in feats.items():
-                out[k] = v
+            cols = {k: pdf[k].array for k in keep_names}
+            cols.update(feats)
             if permissive:
-                out["decode_error"] = errors
-            yield out
+                cols["decode_error"] = errors
+            yield pd.DataFrame(cols)
 
     return media.mapInPandas(batches, schema=schema)
 
@@ -864,13 +863,14 @@ def _extract_metadata(
     parser_loader,
     permissive: bool,
 ) -> DataFrame:
-    """Shared shape of all one-row-per-payload metadata extractors
-    (EXIF, ID3, protobuf): Arrow-batched mapInPandas, a dict-returning
-    parser resolved lazily ON THE EXECUTOR (``parser_loader``), and
-    the strict/permissive error contract of
-    :func:`extract_image_features`. Metadata triage reads a few
-    hundred leading bytes per payload — the 100 TB cost is the
-    payload fetch, not the parse."""
+    """Shared shape of every one-row-per-payload extractor, the
+    ``extract_*`` metadata triages and full decodes alike:
+    Arrow-batched mapInPandas, a dict-returning parser resolved lazily
+    ON THE EXECUTOR (``parser_loader``), and the strict/permissive
+    error contract of :func:`extract_image_features`. Each output
+    batch is the input's non-payload columns plus one column per
+    ``feature_schema`` field (and ``decode_error`` when permissive),
+    built in one ``pd.DataFrame`` call."""
     keep = [f for f in media.schema.fields if f.name != "payload"]
     fields = list(keep) + list(feature_schema.fields)
     if permissive:
@@ -897,12 +897,11 @@ def _extract_metadata(
                 for k in feat_names:
                     feats[k].append(meta[k])
                 errors.append(None)
-            out = pdf[keep_names].reset_index(drop=True)
-            for k, v in feats.items():
-                out[k] = v
+            cols = {k: pdf[k].array for k in keep_names}
+            cols.update(feats)
             if permissive:
-                out["decode_error"] = errors
-            yield out
+                cols["decode_error"] = errors
+            yield pd.DataFrame(cols)
 
     return media.mapInPandas(batches, schema=schema)
 
@@ -2868,12 +2867,11 @@ def extract_stream_structure(
                 for k in feat_names:
                     feats[k].append(st[k])
                 errors.append(None)
-            out = pdf[keep_names].reset_index(drop=True)
-            for k, v in feats.items():
-                out[k] = v
+            cols = {k: pdf[k].array for k in keep_names}
+            cols.update(feats)
             if permissive:
-                out["decode_error"] = errors
-            yield out
+                cols["decode_error"] = errors
+            yield pd.DataFrame(cols)
 
     return media.mapInPandas(batches, schema=schema)
 

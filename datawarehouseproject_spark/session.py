@@ -11,11 +11,16 @@ explicitly so the same code runs on local[32] for tests and on a
 - Session timezone pinned to UTC so date/timestamp derivations are
   deterministic across environments.
 - On ``local[...]`` masters, Python workers fork from
-  :mod:`.pydaemon`. Before CPython 3.13, pyspark's stock daemon
-  re-reads ``pyspark.zip``'s central directory 16 times at the start
-  of every task (~150 ms of CPU); the engine daemon re-reads it only
-  when the zip changes. Workers share the driver's filesystem there,
-  so the package's parent directory goes on their ``PYTHONPATH``.
+  :mod:`.pydaemon`, which removes two per-task costs of pyspark's
+  stock daemon. Before CPython 3.13 the stock daemon re-reads
+  ``pyspark.zip``'s central directory 16 times at the start of every
+  task (~150 ms of CPU); the engine daemon re-reads it only when the
+  zip changes. On every version, a reused worker's full
+  ``gc.collect()`` after each task walks its whole long-lived heap
+  (~73k objects, 24-53 ms); the engine daemon freezes that heap at
+  the start of each task, so the collection sees only what the task
+  allocated. Workers share the driver's filesystem there, so the
+  package's parent directory goes on their ``PYTHONPATH``.
 - Generated-code cache sized to the query surface
   (``spark.sql.codegen.cache.maxEntries`` = 8192, Spark's default is
   100). One pass over the 19 TPC-H-style queries makes 253-267
@@ -90,7 +95,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The worker daemon of :func:`get_spark` is a static conf, so
     sessions built elsewhere (the correctness driver,
     ``tools/check_oracle.py --vanilla``) run pyspark's stock daemon:
-    each Python task pays the ``pyspark.zip`` re-read, and results are
+    each Python task pays the ``pyspark.zip`` re-read and a post-task
+    full collection of the worker's whole heap, and results are
     identical either way. The codegen cache bound is static too: those
     sessions keep Spark's 100-entry cache, so their results are
     identical and they just recompile generated classes that a

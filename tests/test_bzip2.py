@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import bz2 as stdbz2
 
+import numpy as np
 import pytest
 
 from datawarehouseproject_spark.functions.bzip2 import (
@@ -21,6 +22,20 @@ def test_fixture_seeds_decode_exactly():
         n = synth_bz2_plan(seed)["n_bytes"]
         want = bytes(((i // 6) * 13 + seed) % 250 for i in range(n))
         assert decode_bz2(synth_bz2(seed)) == want, seed
+
+
+def test_scan_aggregates_match_the_sorting_formulas():
+    # reference: the int64-copy sum and np.unique that scan_bz2 used
+    # before counting distinct bytes with a 256-bin bincount; the
+    # synth seeds plus one plaintext holding every byte value
+    payloads = [synth_bz2(seed) for seed in range(200)]
+    payloads.append(stdbz2.compress(bytes(range(256)) * 4))
+    for seed, payload in enumerate(payloads):
+        arr = np.frombuffer(decode_bz2(payload), dtype=np.uint8)
+        got = scan_bz2(payload)
+        assert got["byte_sum"] == int(arr.astype(np.int64).sum()), seed
+        assert got["n_distinct"] == int(len(np.unique(arr))), seed
+        assert type(got["byte_sum"]) is int and type(got["n_distinct"]) is int
 
 
 def test_stdlib_pin_across_data_shapes_and_levels():

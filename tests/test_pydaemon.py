@@ -1,8 +1,10 @@
 """The engine's Python worker daemon: zip importers re-read their
-archive only when it changes, and Spark's workers really run under it."""
+archive only when it changes, each task runs with the worker's
+long-lived heap frozen, and Spark's workers really run under it."""
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import subprocess
@@ -12,6 +14,7 @@ import zipfile
 import zipimport
 
 import pytest
+from pyspark import daemon
 
 from datawarehouseproject_spark import pydaemon
 
@@ -28,6 +31,13 @@ def _write_zip(path, extra: bool = False) -> None:
         zf.writestr("dwzippkg/sub/mod.py", "X = 1\n")
         if extra:
             zf.writestr("dwzippkg/sub/extra.py", "Y = 2\n" * 64)
+
+
+@pytest.fixture
+def restore_daemon(monkeypatch):
+    """install() rebinds the daemon's task entry point; undo it."""
+    monkeypatch.setattr(daemon, "worker_main", daemon.worker_main)
+    monkeypatch.setattr(pydaemon, "_task_main", pydaemon._task_main)
 
 
 @pytest.fixture
@@ -58,7 +68,7 @@ def _count_reads(monkeypatch, archive: str) -> list[str]:
 
 
 @BEFORE_313
-def test_unchanged_archive_is_not_reread(zip_package, monkeypatch):
+def test_unchanged_archive_is_not_reread(zip_package, monkeypatch, restore_daemon):
     monkeypatch.setattr(
         zipimport.zipimporter, "invalidate_caches",
         zipimport.zipimporter.invalidate_caches,
@@ -82,7 +92,7 @@ def test_unchanged_archive_is_not_reread(zip_package, monkeypatch):
     assert importlib.import_module("dwzippkg.sub.extra").Y == 2
 
 
-def test_from_313_zipimport_is_left_alone(monkeypatch):
+def test_from_313_zipimport_is_left_alone(monkeypatch, restore_daemon):
     original = zipimport.zipimporter.invalidate_caches
     monkeypatch.setattr(
         zipimport.zipimporter, "invalidate_caches", original
@@ -90,6 +100,130 @@ def test_from_313_zipimport_is_left_alone(monkeypatch):
     monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
     pydaemon.install()
     assert zipimport.zipimporter.invalidate_caches is original
+
+
+def test_worker_entry_point_is_installed_from_313_too(monkeypatch, restore_daemon):
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    task_main = daemon.worker_main
+    pydaemon.install()
+    assert daemon.worker_main is pydaemon.worker_main
+    assert pydaemon._task_main is task_main
+    pydaemon.install()  # a second install never wraps the wrapper
+    assert pydaemon._task_main is task_main
+
+
+def test_worker_main_freezes_before_the_task(monkeypatch):
+    seen = []
+
+    def task_main(infile, outfile):
+        seen.append((infile, outfile, gc.get_freeze_count()))
+
+    monkeypatch.setattr(pydaemon, "_task_main", task_main)
+    gc.unfreeze()
+    try:
+        pydaemon.worker_main("in", "out")
+    finally:
+        gc.unfreeze()
+    assert seen[0][:2] == ("in", "out") and seen[0][2] > 0
+
+
+def _single_task_reports(spark, probe, schema: str, enough, most: int) -> list:
+    """Rows of one-task jobs, run until ``enough(rows)`` or ``most``
+    jobs. Spark hands idle workers out oldest first, so a worker runs
+    its next task only after every other idle worker has had one."""
+    rows: list = []
+    while len(rows) < most and not enough(rows):
+        rows += spark.range(1, numPartitions=1).mapInPandas(probe, schema).collect()
+    return rows
+
+
+def test_tasks_run_with_the_long_lived_heap_frozen(spark):
+    def freeze_count(it):  # nested: pickled by value, not by module
+        import gc
+
+        import pandas as pd
+
+        for _ in it:
+            pass
+        yield pd.DataFrame({"n": [gc.get_freeze_count()]})
+
+    got = spark.range(4, numPartitions=2).mapInPandas(freeze_count, "n long")
+    counts = [r.n for r in got.collect()]
+    assert len(counts) == 2 and min(counts) > 0
+
+
+def test_a_cycle_a_task_drops_is_collected_before_the_next_task(spark):
+    def probe(it):
+        import os
+        import sys
+        import weakref
+
+        import pandas as pd
+
+        for _ in it:
+            pass
+        # the previous task's cycle, seen through a weakref the worker kept
+        prev = getattr(sys, "_dw_test_cycle", None)
+
+        class Node:
+            pass
+
+        a, b = Node(), Node()
+        a.other, b.other = b, a
+        sys._dw_test_cycle = (os.getpid(), weakref.ref(a))
+        del a, b
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "prev_pid": [prev[0] if prev else -1],
+            "prev_dead": [prev is not None and prev[1]() is None],
+        })
+
+    def reused_of(rows):
+        return [r for r in rows if r.prev_pid == r.pid]
+
+    rows = _single_task_reports(
+        spark, probe, "pid long, prev_pid long, prev_dead boolean",
+        lambda rows: len(reused_of(rows)) >= 4, 80,
+    )
+    reused = reused_of(rows)
+    if not reused:
+        pytest.skip("no task ran in the worker of an earlier task")
+    assert all(r.prev_dead for r in reused), rows
+
+
+def test_frozen_heap_plateaus_over_many_tasks(spark):
+    def probe(it):
+        import gc
+        import os
+
+        import pandas as pd
+
+        for _ in it:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "n": [gc.get_freeze_count()]})
+
+    def runs(rows):
+        by_pid: dict[int, list[int]] = {}
+        for r in rows:
+            by_pid.setdefault(r.pid, []).append(r.n)
+        # a worker's first task here may be its first ever, which
+        # imports and caches; each later task is one step
+        return [c[1:] for c in by_pid.values() if len(c) >= 3]
+
+    rows = _single_task_reports(
+        spark, probe, "pid long, n long",
+        lambda rows: sum(len(c) - 1 for c in runs(rows)) >= 20, 120,
+    )
+    steps = sum(len(c) - 1 for c in runs(rows))
+    if steps < 20:
+        pytest.skip(f"{len(rows)} tasks over {len({r.pid for r in rows})} workers")
+    # a per-task leak into the frozen heap adds at least one object per step
+    assert all(c[0] > 0 for c in runs(rows)), rows
+    assert sum(c[-1] - c[0] for c in runs(rows)) < steps, rows
 
 
 @BEFORE_313
