@@ -30,7 +30,7 @@ from collections.abc import Iterator
 
 import numpy as np
 
-from .bmp import encode_pixel_array, parse_pixel_array, row_stride, synth_size
+from .bmp import encode_bmp, encode_pixel_array, parse_pixel_array, row_stride, synth_size
 
 _AVIH = struct.Struct("<14I")
 _STRH = struct.Struct("<4s4sIHHIIIIIIII4H")
@@ -145,6 +145,17 @@ def decode_avi(payload: bytes) -> tuple[int, int, np.ndarray]:
         else np.empty((0, height, width, 3), dtype=np.uint8)
     )
     return width, height, stacked
+
+
+def sample_avi_frames(payload: bytes, every_n: int) -> list[dict]:
+    """Every ``every_n``-th frame of :func:`decode_avi`, re-encoded as
+    a standalone BMP (``sample_frames``); ``frame_idx`` is the
+    ORIGINAL stream index (0, n, 2n…)."""
+    w, h, frames = decode_avi(payload)
+    return [
+        {"frame_idx": i, "frame": encode_bmp(w, h, frames[i])}
+        for i in range(0, len(frames), every_n)
+    ]
 
 
 def synth_frame_pixel(seed: int, x: int, y: int, t: int) -> tuple[int, int, int]:

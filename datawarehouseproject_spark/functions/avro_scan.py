@@ -285,6 +285,14 @@ def iter_avro_records(payload: bytes):
             )
 
 
+def avro_record_rows(payload: bytes) -> list[dict]:
+    """:func:`iter_avro_records` numbered by ``rec_idx``, one row per
+    record (``explode_avro_records``)."""
+    return [
+        dict(rec, rec_idx=i) for i, rec in enumerate(iter_avro_records(payload))
+    ]
+
+
 def scan_avro(payload: bytes) -> dict:
     """Scan for the ``avro_container_scan`` query over the fixture
     schema (id long, name string, ratio double, ok boolean, opt

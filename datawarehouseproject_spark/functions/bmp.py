@@ -119,6 +119,26 @@ def decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray]:
     )
 
 
+def channel_features(width: int, height: int, pixels) -> dict:
+    """The ``extract_image_features`` row of any decoded RGB image:
+    size and integer channel sums (exact, so the value oracle needs no
+    float tolerance)."""
+    sums = pixels.astype("int64").sum(axis=(0, 1))  # vectorized channel sums
+    return {
+        "width": width,
+        "height": height,
+        "n_pixels": width * height,
+        "sum_r": int(sums[0]),
+        "sum_g": int(sums[1]),
+        "sum_b": int(sums[2]),
+    }
+
+
+def decode_bmp_features(payload: bytes) -> dict:
+    """:func:`channel_features` of :func:`decode_bmp`."""
+    return channel_features(*decode_bmp(payload))
+
+
 def _parse_palette(payload: bytes, hdr_size: int) -> np.ndarray:
     """Read the color table (BGRX quads after the info header) as a
     ``(256, 3)`` RGB uint8 array.  ``biClrUsed == 0`` means a full

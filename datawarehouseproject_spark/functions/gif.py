@@ -249,6 +249,13 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
     raise ValueError("missing image data")
 
 
+def decode_gif_features(payload: bytes) -> dict:
+    """:func:`..bmp.channel_features` of :func:`decode_gif`."""
+    from .bmp import channel_features
+
+    return channel_features(*decode_gif(payload))
+
+
 def synth_gif_index(seed: int, x: int, y: int) -> int:
     """Deterministic palette index — mirrored in the DuckDB oracle."""
     return (seed * 3 + x * 11 + y * 7) % 256

@@ -585,6 +585,20 @@ def decode_h264_ipcm(payload: bytes) -> dict:
     }
 
 
+def decode_h264_ipcm_sums(payload: bytes) -> dict:
+    """:func:`decode_h264_ipcm` reduced to integer plane sums, the
+    row of ``extract_h264_ipcm_features``."""
+    d = decode_h264_ipcm(payload)
+    return {
+        "width": d["width"],
+        "height": d["height"],
+        "n_mbs": d["n_mbs"],
+        "sum_y": int(d["y"].sum(dtype="int64")),
+        "sum_cb": int(d["cb"].sum(dtype="int64")),
+        "sum_cr": int(d["cr"].sum(dtype="int64")),
+    }
+
+
 def synth_h264_ipcm_params(seed: int) -> tuple[int, int]:
     """(width, height): even, mostly NOT macroblock multiples so SPS
     cropping and partial edge macroblocks are exercised."""

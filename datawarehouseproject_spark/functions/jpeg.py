@@ -1326,6 +1326,13 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
+def decode_jpeg_features(payload: bytes) -> dict:
+    """:func:`..bmp.channel_features` of :func:`decode_jpeg`."""
+    from .bmp import channel_features
+
+    return channel_features(*decode_jpeg(payload))
+
+
 # ---------------------------------------------------------------------------
 # Deterministic synthesis for the oracle-checked registry query.
 # ---------------------------------------------------------------------------

@@ -78,6 +78,12 @@ def decode_xz(payload: bytes, max_output: int = 1 << 28) -> bytes:
             return bytes(out)
 
 
+def decode_xz_text(payload: bytes) -> dict:
+    """:func:`decode_xz` as the ``text`` row of ``extract_xz_decode``
+    (the synthesized plaintext is ASCII)."""
+    return {"text": decode_xz(payload).decode("ascii")}
+
+
 def synth_xz_text_plan(seed: int) -> dict:
     """Plan mirrored in the DuckDB oracle: ``60 + (seed*17) % 200``
     lines; line i is ``'line {i} of doc {seed} value {(seed*31+i*7)%9973}'``.

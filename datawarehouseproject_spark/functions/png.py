@@ -257,6 +257,13 @@ def decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
     return width, height, plte[idx.astype(np.int64)]
 
 
+def decode_png_features(payload: bytes) -> dict:
+    """:func:`..bmp.channel_features` of :func:`decode_png`."""
+    from .bmp import channel_features
+
+    return channel_features(*decode_png(payload))
+
+
 def _unfilter(
     lines: np.ndarray, width: int, height: int, bpp: int = _BPP
 ) -> np.ndarray:

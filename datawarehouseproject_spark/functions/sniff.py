@@ -18,6 +18,9 @@ both avoids that false positive), FLAC, MPEG-1 Layer I's sync
 with layer bits 11 (folded into ``mpeg_audio``), SQLite's 16-byte
 header string, and tar's ``ustar`` magic at offset 257 (tar has NO
 leading magic — the one format here whose signature is interior).
+
+:func:`synth_mixed` makes the unlabeled corpus the sniffer is checked
+against: the format rotates through :data:`SNIFF_ROTATION` by seed.
 """
 
 from __future__ import annotations
@@ -88,3 +91,44 @@ def sniff_media_format(payload: bytes) -> str:
         # block); "ustar " covers the old GNU variant
         return "tar"
     return "unknown"
+
+
+def sniff_fields(payload: bytes) -> dict:
+    """:func:`sniff_media_format` as the ``fmt`` row of
+    ``sniff_media``."""
+    return {"fmt": sniff_media_format(payload)}
+
+
+#: the mixed-corpus rotation for `media_format_sniff`: id % 9 picks
+#: the synthesizer; these labels are the SINGLE source the
+#: synthesizer table derives from (the oracle SQL mirrors them)
+SNIFF_ROTATION = ("jpeg", "png", "gif", "webp", "flac", "tiff", "zip",
+                  "parquet", "sqlite")
+
+
+def synth_mixed(seed: int) -> bytes:
+    """One payload of the MIXED, unlabeled corpus: the format is
+    ``SNIFF_ROTATION[seed % len(SNIFF_ROTATION)]``, made by that
+    format's real synthesizer (``synthesize_mixed_media``)."""
+    from .flac import synth_flac
+    from .gif import synth_gif_anim
+    from .jpeg import synth_jpeg420
+    from .parquet_footer import synth_parquet
+    from .png import synth_png
+    from .sqlite_scan import synth_sqlite
+    from .tiff import synth_tiff
+    from .webp import synth_webp
+    from .zipscan import synth_zip
+
+    by_label = {
+        "jpeg": synth_jpeg420,
+        "png": synth_png,
+        "gif": synth_gif_anim,
+        "webp": synth_webp,
+        "flac": synth_flac,
+        "tiff": synth_tiff,
+        "zip": synth_zip,
+        "parquet": synth_parquet,
+        "sqlite": synth_sqlite,
+    }
+    return by_label[SNIFF_ROTATION[seed % len(SNIFF_ROTATION)]](seed)

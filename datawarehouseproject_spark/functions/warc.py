@@ -117,6 +117,23 @@ def parse_warc_records(data: bytes) -> list[dict]:
     return records
 
 
+def warc_record_rows(payload: bytes) -> list[dict]:
+    """One row per record of a .warc.gz, numbered across its gzip
+    members (``explode_warc_records``). Payload bytes decode as UTF-8
+    with replacement: crawl payloads lie about encodings, and
+    replacement keeps the row."""
+    rows = []
+    for member in split_gzip_members(payload):
+        for rec in parse_warc_records(member):
+            rows.append({
+                "rec_idx": len(rows),
+                "rec_type": rec["type"],
+                "uri": rec["uri"],
+                "text": rec["payload"].decode("utf-8", "replace"),
+            })
+    return rows
+
+
 def lift_warc_dictionary(payload: bytes):
     """The IIPC warc-zstd convention (iipc/warc-specifications):
     a ``.warc.zst`` MAY open with a skippable frame whose magic is

@@ -100,6 +100,21 @@ def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
     return sample_rate, channels, frames
 
 
+def decode_wav_features(payload: bytes) -> dict:
+    """:func:`decode_wav` reduced to the ``extract_audio_features``
+    row: rate and channels from the fmt chunk, frame count, and the
+    signed and absolute amplitude sums over all channels (integers)."""
+    rate, channels, frames = decode_wav(payload)
+    wide = frames.astype("int64")  # vectorized amplitude sums
+    return {
+        "sample_rate": rate,
+        "channels": channels,
+        "n_frames": len(frames),
+        "sum_amplitude": int(wide.sum()),
+        "sum_abs_amplitude": int(abs(wide).sum()),
+    }
+
+
 def decimate(frames, factor: int) -> np.ndarray:
     """Keep every ``factor``-th frame (sample-rate / factor): the
     index mapping ``i*factor`` is mirrored in the DuckDB oracle, so

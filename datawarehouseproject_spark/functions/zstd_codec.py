@@ -1088,6 +1088,12 @@ def decode_zstd(
     raise ValueError("zstd output exceeds cap")
 
 
+def decode_zstd_text(payload: bytes) -> dict:
+    """:func:`decode_zstd` as the ``text`` row of
+    ``extract_zstd_decode`` (the synthesized plaintext is ASCII)."""
+    return {"text": decode_zstd(payload).decode("ascii")}
+
+
 def _decode_zstd_hand(
     payload: bytes,
     max_output: int,

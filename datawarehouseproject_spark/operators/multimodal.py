@@ -1,41 +1,55 @@
 """Multimodal column plumbing: binary payloads + typed metadata.
 
-Treats image/audio/video as opaque ``binary`` columns with a typed
-metadata struct, processed by Arrow-batched ``mapInPandas`` — the
-shape a 100 TB multimodal training pipeline needs from Spark:
+Treats image/audio/video/document/archive payloads as opaque
+``binary`` columns with a typed metadata struct, processed by
+Arrow-batched ``mapInPandas`` — the shape a 100 TB multimodal training
+pipeline needs from Spark:
 
 - payloads stay as bytes end to end (no base64, no driver round-trip);
 - feature extraction is per-batch Python over Arrow buffers;
 - partitioning is by content size so decode work balances.
 
-Decode is REAL for the codec-free formats of each modality, all via
-pure-Python parsers (no codec libs needed) with integer-exact DuckDB
-oracles over synthesized media:
+ONE KERNEL PATH. A format's Python lives in
+``datawarehouseproject_spark.functions.<module>``; this module names it
+by a ``(module, function)`` pair and hands the pair to one of three
+kernels, which import the module inside ``batches`` — on the executor,
+so building a plan imports no codec and a Python worker imports only
+what its job runs:
 
-- image: 24-bit BMP (``extract_image_features``, ``resize_bmp``;
-  :mod:`..functions.bmp`);
-- audio: 16-bit PCM WAV (``extract_audio_features``;
-  :mod:`..functions.wav`);
-- video: uncompressed-DIB AVI (``sample_frames``;
-  :mod:`..functions.avi`), sampled frames re-encoded as BMPs so the
-  image operators compose downstream.
+- :func:`_synthesize_media`: id -> ``(media_id, payload)`` over
+  round-robin-balanced ids (every ``synthesize_*_media``);
+- :func:`_extract_metadata`: one row per payload (the ``extract_*``
+  triages and full decodes, ``sniff_media``);
+- :func:`_explode_rows`: many rows per payload (every ``explode_*``,
+  ``extract_layer1_subband_features``).
 
-The generic byte-statistics path (``decode_stub``) remains for
-arbitrary payloads. Compressed formats decode natively too: PNG
-(DEFLATE + Adam7 + gray/palette, :mod:`..functions.png`), GIF (LZW +
-89a animation triage, :mod:`..functions.gif`), JPEG — baseline,
-subsampled 4:2:0/4:2:2 with restarts, AND progressive SOF2
-(:mod:`..functions.jpeg`), ADPCM audio (:mod:`..functions.adpcm`),
-MPEG-1 Layer I samples (:mod:`..functions.mpeg_audio`), H.264 I_PCM
-pixels (:mod:`..functions.h264`). Structure/metadata triage covers
-MP3/ID3, H.264 NAL/SPS, EXIF + multi-page TIFF, WebP, FLAC, GIF
-animations, ZIP/ZIP64, tar (pax/GNU), gzip, protobuf, and the
-engine's own parquet/ORC footers — fronted by the magic-byte format
-sniffer (``sniff_media``) that routes an unlabeled corpus. The remaining
-decode boundaries are documented per module: MP3 Layer II/III PCM
-(unreproducible ISO tables), H.264 CAVLC/CABAC residuals, VP8
-entropy, TIFF strips — a production pipeline routes those payloads
-to ffmpeg AFTER this triage layer decides what is worth routing.
+Each public name is one explicit binding, e.g. ``synthesize_bmp_media
+= _synthesizer("bmp", "synth_bmp", doc)``, so it stays greppable and
+importable with its own docstring. Both decode kernels share one error
+contract: strict (default) raises ``ValueError("media_id=<id>: ...")``
+— right for synthesized/trusted inputs; ``permissive=True`` keeps the
+payload as a row of NULL features with the message in ``decode_error``
+— right for web-scale corpora (Spark's PERMISSIVE reader mode +
+``_corrupt_record``). Operators that rewrite payloads (resize,
+resample), emit two payloads per id, or reduce a whole decoded clip
+with numpy (``audio_frame_energy``, ``adpcm_roundtrip_features``,
+``image_phash``, ``decode_stub``) keep their own strict loop.
+
+Where bytes are decoded: the image/audio/video decoders (BMP, PNG
+filters + Adam7 + palettes, GIF LZW, baseline/4:2:0/progressive JPEG,
+WAV, IMA ADPCM, MPEG-1 Layer I samples, H.264 I_PCM pixels, DIB AVI)
+and the container walkers (EXIF/TIFF, ID3, WebP, FLAC, ZIP/ZIP64, tar,
+protobuf, parquet/ORC/Arrow/Avro footers and pages, SQLite, Delta,
+Iceberg and Hudi logs) are Python over numpy, with integer-exact
+DuckDB oracles over synthesized media. The archive codecs decode in C
+the runtime already ships: DEFLATE and gzip through the stdlib's zlib,
+bzip2 through bz2, xz through lzma, and zstd frames without a
+dictionary through libzstd (Arrow); LZ4, Snappy and dictionary zstd
+frames decode by hand. The documented decode boundaries — MP3 Layer
+II/III PCM, H.264 CAVLC/CABAC residuals, VP8 entropy, TIFF strips —
+are where a production pipeline routes payloads to ffmpeg, AFTER the
+magic-byte sniffer (``sniff_media``) and this triage layer decide what
+is worth routing.
 """
 
 from __future__ import annotations
@@ -47,6 +61,199 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# ---------------------------------------------------------------------------
+# The kernel path: three kernels, and the factories that bind a public
+# name to a kernel and a ``(module, function)`` pair of
+# ``datawarehouseproject_spark.functions``.
+
+_FUNCTIONS = "datawarehouseproject_spark.functions"
+
+
+def _balanced_ids(ids: DataFrame, id_col: str) -> DataFrame:
+    """Round-robin the id column across the session's parallelism
+    before a per-payload mapInPandas: the documents table is a single
+    small parquet file (1 input split), so without this EVERY
+    synthesized payload is encoded and decoded on ONE Python worker —
+    observed as jpeg_image_features running ~12× slower than its
+    single-thread codec cost. The shuffled rows are bare ids, so the
+    exchange is a few KB; the payload work is what gets spread."""
+    n = ids.sparkSession.sparkContext.defaultParallelism
+    return ids.select(id_col).repartition(n)
+
+
+def _synthesize_media(
+    ids: DataFrame, id_col: str, module: str, fn: str
+) -> DataFrame:
+    """Shared shape of the per-id payload synthesizers: resolve
+    ``functions.<module>.<fn>`` ON THE EXECUTOR, emit (media_id,
+    payload) via Arrow-batched mapInPandas over salt-balanced ids."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import importlib
+
+        synth = getattr(importlib.import_module(f"{_FUNCTIONS}.{module}"), fn)
+        for pdf in it:
+            ids_ = pdf[id_col].astype("int64")
+            yield pd.DataFrame(
+                {
+                    "media_id": ids_.values,
+                    "payload": [synth(int(i)) for i in ids_],
+                }
+            )
+
+    schema = T.StructType(
+        [
+            T.StructField("media_id", T.LongType()),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+    return _balanced_ids(ids, id_col).mapInPandas(batches, schema=schema)
+
+
+def _output_schema(media: DataFrame, feature_schema: T.StructType, permissive: bool):
+    """Output of both decode kernels: the input's non-payload columns,
+    one column per ``feature_schema`` field, then ``decode_error``
+    when permissive. Returns ``(schema, kept names, feature names)``."""
+    keep = [f for f in media.schema.fields if f.name != "payload"]
+    fields = list(keep) + list(feature_schema.fields)
+    if permissive:
+        fields.append(T.StructField("decode_error", T.StringType()))
+    return (
+        T.StructType(fields),
+        [f.name for f in keep],
+        tuple(f.name for f in feature_schema.fields),
+    )
+
+
+def _extract_metadata(
+    media: DataFrame,
+    feature_schema: T.StructType,
+    module: str,
+    fn: str,
+    permissive: bool,
+) -> DataFrame:
+    """ONE ROW PER PAYLOAD, the ``extract_*`` metadata triages and full
+    decodes alike: Arrow-batched mapInPandas around
+    ``functions.<module>.<fn>``, a ``bytes -> dict`` parser resolved ON
+    THE EXECUTOR whose dict holds (at least) every ``feature_schema``
+    field. Strict mode raises ``media_id=<id>: <error>``; permissive
+    mode emits a NULL-feature row with ``decode_error``. Each output
+    batch is built in one ``pd.DataFrame`` call."""
+    schema, keep_names, feat_names = _output_schema(
+        media, feature_schema, permissive
+    )
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import importlib
+
+        parse = getattr(importlib.import_module(f"{_FUNCTIONS}.{module}"), fn)
+        for pdf in it:
+            feats: dict[str, list] = {k: [] for k in feat_names}
+            errors: list[str | None] = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                try:
+                    meta = parse(bytes(p))
+                except ValueError as e:
+                    if not permissive:
+                        raise ValueError(f"media_id={mid}: {e}") from e
+                    for k in feat_names:
+                        feats[k].append(None)
+                    errors.append(str(e))
+                    continue
+                for k in feat_names:
+                    feats[k].append(meta[k])
+                errors.append(None)
+            cols = {k: pdf[k].array for k in keep_names}
+            cols.update(feats)
+            if permissive:
+                cols["decode_error"] = errors
+            yield pd.DataFrame(cols)
+
+    return media.mapInPandas(batches, schema=schema)
+
+
+def _explode_rows(
+    media: DataFrame,
+    row_schema: T.StructType,
+    module: str,
+    fn: str,
+    permissive: bool,
+    args: tuple = (),
+) -> DataFrame:
+    """MANY ROWS PER PAYLOAD: one output row per element of the list
+    ``functions.<module>.<fn>(payload, *args)`` returns, each a dict holding
+    every ``row_schema`` field; the input's non-payload columns repeat
+    on each row. Same columns and error contract as
+    :func:`_extract_metadata`; a quarantined payload is ONE row of NULL
+    fields with ``decode_error``."""
+    schema, keep_names, feat_names = _output_schema(media, row_schema, permissive)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import importlib
+
+        parse = getattr(importlib.import_module(f"{_FUNCTIONS}.{module}"), fn)
+        for pdf in it:
+            take: list[int] = []  # the input row of each output row
+            feats: dict[str, list] = {k: [] for k in feat_names}
+            errors: list[str | None] = []
+            for i, (mid, p) in enumerate(zip(pdf["media_id"], pdf["payload"])):
+                try:
+                    rows = list(parse(bytes(p), *args))
+                    error = None
+                except ValueError as e:
+                    if not permissive:
+                        raise ValueError(f"media_id={mid}: {e}") from e
+                    rows, error = [dict.fromkeys(feat_names)], str(e)
+                take.extend([i] * len(rows))
+                for k in feat_names:
+                    feats[k].extend([r[k] for r in rows])
+                errors.extend([error] * len(rows))
+            cols = {k: pdf[k].array.take(take) for k in keep_names}
+            cols.update(feats)
+            if permissive:
+                cols["decode_error"] = errors
+            yield pd.DataFrame(cols)
+
+    return media.mapInPandas(batches, schema=schema)
+
+
+def _synthesizer(module: str, fn: str, doc: str):
+    """A ``synthesize_*_media(ids, id_col="doc_id")`` name over
+    ``functions.<module>.<fn>`` (``int -> bytes``)."""
+
+    def synthesize(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+        return _synthesize_media(ids, id_col, module, fn)
+
+    synthesize.__doc__ = doc
+    return synthesize
+
+
+def _extractor(module: str, fn: str, feature_schema: T.StructType, doc: str):
+    """An ``extract_*(media, permissive=False)`` name: one
+    ``feature_schema`` row per payload from ``functions.<module>.<fn>``."""
+
+    def extract(media: DataFrame, permissive: bool = False) -> DataFrame:
+        return _extract_metadata(media, feature_schema, module, fn, permissive)
+
+    extract.__doc__ = doc
+    return extract
+
+
+def _exploder(module: str, fn: str, schema: T.StructType, doc: str):
+    """An ``explode_*(media)`` name: ``schema`` is ``media_id`` then the
+    fields of each element of ``functions.<module>.<fn>``'s list; other
+    input columns are dropped. Strict."""
+    row_schema = T.StructType(schema.fields[1:])
+
+    def explode(media: DataFrame) -> DataFrame:
+        return _explode_rows(
+            media.select("media_id", "payload"), row_schema, module, fn, False
+        )
+
+    explode.__doc__ = doc
+    return explode
+
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -183,40 +390,20 @@ def sample_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
     Compressed codecs still need ffmpeg/pyav — swap the decode call
     for production formats.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import decode_avi
-        from ..functions.bmp import encode_bmp
-
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, all_frames = decode_avi(bytes(p))
-                except ValueError as e:
-                    raise ValueError(f"media_id={mid}: {e}") from e
-                for i in range(0, len(all_frames), every_n):
-                    ids.append(int(mid))
-                    idxs.append(i)
-                    frames.append(encode_bmp(w, h, all_frames[i]))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _explode_rows(
+        media.select("media_id", "payload"),
+        T.StructType(FRAME_SCHEMA.fields[1:]),
+        "avi",
+        "sample_avi_frames",
+        False,
+        (every_n,),
+    )
 
 
-def synthesize_avi_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_avi_media = _synthesizer("avi", "synth_avi",
     """id column -> (media_id, payload) of real uncompressed-DIB AVI
     clips (``functions/avi.py:synth_avi``): frame count, size, and
-    every pixel derive from the id by modular arithmetic."""
-
-    def loader():
-        from ..functions.avi import synth_avi
-
-        return synth_avi
-
-    return _synthesize_media(ids, id_col, loader)
+    every pixel derive from the id by modular arithmetic.""")
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -231,16 +418,9 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_wav_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_wav_media = _synthesizer("wav", "synth_wav",
     """id column -> (media_id, payload) of real 16-bit PCM WAV clips
-    (``functions/wav.py:synth_wav``), deterministic per id."""
-
-    def loader():
-        from ..functions.wav import synth_wav
-
-        return synth_wav
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/wav.py:synth_wav``), deterministic per id.""")
 
 
 def resample_wav(media: DataFrame, factor: int) -> DataFrame:
@@ -281,29 +461,13 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     float tolerance; rate/channel metadata come from the actual fmt
     chunk, not the synthesis formula.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.wav import decode_wav
-
-        for pdf in it:
-            out = {k: [] for k in ("media_id", "sample_rate", "channels",
-                                   "n_frames", "sum_amplitude",
-                                   "sum_abs_amplitude")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, channels, frames = decode_wav(bytes(p))
-                except ValueError as e:
-                    raise ValueError(f"media_id={mid}: {e}") from e
-                wide = frames.astype("int64")  # vectorized amplitude sums
-                out["media_id"].append(int(mid))
-                out["sample_rate"].append(rate)
-                out["channels"].append(channels)
-                out["n_frames"].append(len(frames))
-                out["sum_amplitude"].append(int(wide.sum()))
-                out["sum_abs_amplitude"].append(int(abs(wide).sum()))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
+    return _extract_metadata(
+        media.select("media_id", "payload"),
+        T.StructType(AUDIO_FEATURE_SCHEMA.fields[1:]),
+        "wav",
+        "decode_wav_features",
+        False,
+    )
 
 
 #: Feature columns appended to the passthrough (non-payload) columns.
@@ -318,83 +482,53 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-
-def _balanced_ids(ids: DataFrame, id_col: str) -> DataFrame:
-    """Round-robin the id column across the session's parallelism
-    before a per-payload mapInPandas: the documents table is a single
-    small parquet file (1 input split), so without this EVERY
-    synthesized payload is encoded and decoded on ONE Python worker —
-    observed as jpeg_image_features running ~12× slower than its
-    single-thread codec cost. The shuffled rows are bare ids, so the
-    exchange is a few KB; the payload work is what gets spread."""
-    n = ids.sparkSession.sparkContext.defaultParallelism
-    return ids.select(id_col).repartition(n)
+#: image codec -> (functions module, pixel decoder returning
+#: ``(width, height, rows)``, its ``IMAGE_FEATURE_SCHEMA`` row); serves
+#: ``extract_image_features`` and ``image_phash``
+_IMAGE_CODECS = {
+    "bmp": ("bmp", "decode_bmp", "decode_bmp_features"),
+    "png": ("png", "decode_png", "decode_png_features"),
+    "gif": ("gif", "decode_gif", "decode_gif_features"),
+    "jpeg": ("jpeg", "decode_jpeg", "decode_jpeg_features"),
+}
 
 
-def synthesize_bmp_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_bmp_media = _synthesizer("bmp", "synth_bmp",
     """id column -> (media_id, payload) of real 24-bit BMP bytes.
 
     Deterministic synthesis (``functions/bmp.py:synth_bmp``): size and
     every pixel derive from the id by modular arithmetic, so the DuckDB
     oracle can recompute any statistic the decoder extracts. This is
     the test-scaffolding half; the operator under test is the DECODE.
-    """
-
-    def loader():
-        from ..functions.bmp import synth_bmp
-
-        return synth_bmp
-
-    return _synthesize_media(ids, id_col, loader)
+    """)
 
 
-def synthesize_png_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_png_media = _synthesizer("png", "synth_png",
     """id column -> (media_id, payload) of real 8-bit truecolor PNG
     bytes (``functions/png.py:synth_png``): size and every pixel
     derive from the id by modular arithmetic (distinct formulas from
     the BMP family), then pass through filter + DEFLATE encoding —
-    so the oracle-checked decode has to undo real compression."""
-
-    def loader():
-        from ..functions.png import synth_png
-
-        return synth_png
-
-    return _synthesize_media(ids, id_col, loader)
+    so the oracle-checked decode has to undo real compression.""")
 
 
-def synthesize_gif_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_gif_media = _synthesizer("gif", "synth_gif",
     """id column -> (media_id, payload) of real GIF87a bytes
     (``functions/gif.py:synth_gif``): palette indices from modular
     arithmetic over the id, then REAL variable-width LZW encoding —
     the second compressed format, with a different compression
-    algorithm than PNG's DEFLATE."""
-
-    def loader():
-        from ..functions.gif import synth_gif
-
-        return synth_gif
-
-    return _synthesize_media(ids, id_col, loader)
+    algorithm than PNG's DEFLATE.""")
 
 
-def synthesize_jpeg_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_jpeg_media = _synthesizer("jpeg", "synth_jpeg",
     """id column -> (media_id, payload) of real baseline JPEG bytes
     (``functions/jpeg.py:synth_jpeg``): every 8×8 block is a constant
     gray from modular arithmetic over the id, which is exactly the
     construction that survives lossy JPEG bit-exactly (DC-only
     blocks, DC quant step 1, gray ⇒ Cb=Cr=128) — so the decode is
-    value-checkable by the DuckDB oracle like the lossless codecs."""
-
-    def loader():
-        from ..functions.jpeg import synth_jpeg
-
-        return synth_jpeg
-
-    return _synthesize_media(ids, id_col, loader)
+    value-checkable by the DuckDB oracle like the lossless codecs.""")
 
 
-def synthesize_jpeg420_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_jpeg420_media = _synthesizer("jpeg", "synth_jpeg420",
     """id column -> (media_id, payload) of real 4:2:0-subsampled
     JPEGs WITH restart intervals
     (``functions/jpeg.py:synth_jpeg420``) — the profile virtually
@@ -404,19 +538,10 @@ def synthesize_jpeg420_media(ids: DataFrame, id_col: str = "doc_id") -> DataFram
     DC-only (exact under DC quant step 1), gray keeps the
     box-averaged chroma at the constant 128, and nearest-neighbor
     upsampling of a constant is exact — so even the subsampled lossy
-    path is value-checkable by the DuckDB oracle."""
-
-    def loader():
-        from ..functions.jpeg import synth_jpeg420
-
-        return synth_jpeg420
-
-    return _synthesize_media(ids, id_col, loader)
+    path is value-checkable by the DuckDB oracle.""")
 
 
-def synthesize_progressive_jpeg_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_progressive_jpeg_media = _synthesizer("jpeg", "synth_jpeg_progressive",
     """id column -> (media_id, payload) of real PROGRESSIVE (SOF2)
     4:2:0 JPEGs with restart intervals
     (``functions/jpeg.py:synth_jpeg_progressive``) — the web-delivery
@@ -426,14 +551,7 @@ def synthesize_progressive_jpeg_media(
     successive approximation is lossless (first scan sends DC>>1,
     the refinement scan restores bit 0) and every AC scan codes pure
     end-of-band — the decoded pixels equal the synthesis formula
-    EXACTLY and stay value-checkable by the DuckDB oracle."""
-
-    def loader():
-        from ..functions.jpeg import synth_jpeg_progressive
-
-        return synth_jpeg_progressive
-
-    return _synthesize_media(ids, id_col, loader)
+    EXACTLY and stay value-checkable by the DuckDB oracle.""")
 
 
 def extract_image_features(
@@ -458,54 +576,12 @@ def extract_image_features(
     100 TB job (mirrors Spark's PERMISSIVE reader mode +
     ``_corrupt_record``).
     """
-    if codec not in ("bmp", "png", "gif", "jpeg"):
+    if codec not in _IMAGE_CODECS:
         raise ValueError(f"unsupported image codec {codec!r}")
-    keep = [f for f in media.schema.fields if f.name != "payload"]
-    fields = list(keep) + list(IMAGE_FEATURE_SCHEMA.fields)
-    if permissive:
-        fields.append(T.StructField("decode_error", T.StringType()))
-    schema = T.StructType(fields)
-    keep_names = [f.name for f in keep]
-    feat_names = ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if codec == "png":
-            from ..functions.png import decode_png as decode_bmp
-        elif codec == "gif":
-            from ..functions.gif import decode_gif as decode_bmp
-        elif codec == "jpeg":
-            from ..functions.jpeg import decode_jpeg as decode_bmp
-        else:
-            from ..functions.bmp import decode_bmp
-
-        for pdf in it:
-            feats: dict[str, list] = {k: [] for k in feat_names}
-            errors: list[str | None] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, rows = decode_bmp(bytes(p))
-                except ValueError as e:
-                    if not permissive:
-                        raise ValueError(f"media_id={mid}: {e}") from e
-                    for k in feat_names:
-                        feats[k].append(None)
-                    errors.append(str(e))
-                    continue
-                sums = rows.astype("int64").sum(axis=(0, 1))  # vectorized channel sums
-                feats["width"].append(w)
-                feats["height"].append(h)
-                feats["n_pixels"].append(w * h)
-                feats["sum_r"].append(int(sums[0]))
-                feats["sum_g"].append(int(sums[1]))
-                feats["sum_b"].append(int(sums[2]))
-                errors.append(None)
-            cols = {k: pdf[k].array for k in keep_names}
-            cols.update(feats)
-            if permissive:
-                cols["decode_error"] = errors
-            yield pd.DataFrame(cols)
-
-    return media.mapInPandas(batches, schema=schema)
+    module, _, features = _IMAGE_CODECS[codec]
+    return _extract_metadata(
+        media, IMAGE_FEATURE_SCHEMA, module, features, permissive
+    )
 
 
 def resize_bmp(media: DataFrame, width: int, height: int) -> DataFrame:
@@ -631,25 +707,18 @@ def image_phash(media: DataFrame, codec: str = "bmp") -> DataFrame:
     Returns ``(media_id, phash)``; near-dup images then dedup by
     exact hash equality (or Hamming-distance bucketing at scale).
     """
-    if codec not in ("bmp", "png", "gif", "jpeg"):
+    if codec not in _IMAGE_CODECS:
         raise ValueError(f"unsupported image codec {codec!r}")
+    module, decoder, _ = _IMAGE_CODECS[codec]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import importlib
+
         import numpy as np
 
         from ..functions.bmp import resize_nearest
 
-        # same codec dispatch as extract_image_features — the codec
-        # parameter was previously accepted but silently ignored
-        # (every payload was parsed as BMP)
-        if codec == "png":
-            from ..functions.png import decode_png as decode_img
-        elif codec == "gif":
-            from ..functions.gif import decode_gif as decode_img
-        elif codec == "jpeg":
-            from ..functions.jpeg import decode_jpeg as decode_img
-        else:
-            from ..functions.bmp import decode_bmp as decode_img
+        decode_img = getattr(importlib.import_module(f"{_FUNCTIONS}.{module}"), decoder)
 
         for pdf in it:
             ids, hashes = [], []
@@ -730,36 +799,22 @@ def audio_frame_energy(media: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_mp3_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_mp3_media = _synthesizer("mpeg_audio", "synth_mp3",
     """id column -> (media_id, payload) of real MPEG-1 Layer III
     frame sequences behind ID3v2 tags (``functions/mpeg_audio.py``):
     frame count, VBR bitrate ladder, paddings and tag size all derive
     from the id by modular arithmetic, so the oracle can recompute
     every statistic the frame walk extracts — including the total
-    byte length, which validates the 144·kbps/rate arithmetic."""
-
-    def loader():
-        from ..functions.mpeg_audio import synth_mp3
-
-        return synth_mp3
-
-    return _synthesize_media(ids, id_col, loader)
+    byte length, which validates the 144·kbps/rate arithmetic.""")
 
 
-def synthesize_layer1_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_layer1_media = _synthesizer("mpeg_audio", "synth_mpeg1_layer1",
     """id column -> (media_id, payload) of real MPEG-1 Layer I mono
     streams (``functions/mpeg_audio.py:synth_mpeg1_layer1``): frame
     count, sample rate, per-subband allocation/scalefactor/sample
     codes all derive from the id by modular arithmetic, so the
     oracle can recompute every requantized amplitude the decoder
-    extracts."""
-
-    def loader():
-        from ..functions.mpeg_audio import synth_mpeg1_layer1
-
-        return synth_mpeg1_layer1
-
-    return _synthesize_media(ids, id_col, loader)
+    extracts.""")
 
 
 LAYER1_SUBBAND_SCHEMA = T.StructType(
@@ -788,43 +843,10 @@ def extract_layer1_subband_features(
     :func:`extract_image_features`: strict raises with the media_id;
     ``permissive=True`` quarantines the payload as a single
     NULL-feature row with ``decode_error``."""
-    keep = [f for f in media.schema.fields if f.name != "payload"]
-    fields = list(keep) + list(LAYER1_SUBBAND_SCHEMA.fields)
-    if permissive:
-        fields.append(T.StructField("decode_error", T.StringType()))
-    schema = T.StructType(fields)
-    keep_names = [f.name for f in keep]
-    feat_names = tuple(f.name for f in LAYER1_SUBBAND_SCHEMA.fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mpeg_audio import decode_mpeg1_layer1
-
-        for pdf in it:
-            out_rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                mid = row["media_id"]
-                base = {k: row[k] for k in keep_names}
-                try:
-                    decoded = decode_mpeg1_layer1(bytes(row["payload"]))
-                except ValueError as e:
-                    if not permissive:
-                        raise ValueError(f"media_id={mid}: {e}") from e
-                    quarantined = dict(base)
-                    quarantined.update({k: None for k in feat_names})
-                    quarantined["decode_error"] = str(e)
-                    out_rows.append(quarantined)
-                    continue
-                for d in decoded:
-                    r = dict(base)
-                    r.update(d)
-                    if permissive:
-                        r["decode_error"] = None
-                    out_rows.append(r)
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in schema.fields]
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    return _explode_rows(
+        media, LAYER1_SUBBAND_SCHEMA, "mpeg_audio", "decode_mpeg1_layer1",
+        permissive,
+    )
 
 
 EXIF_SCHEMA = T.StructType(
@@ -841,83 +863,20 @@ EXIF_SCHEMA = T.StructType(
 )
 
 
-def synthesize_exif_jpeg_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_exif_jpeg_media = _synthesizer("exif", "synth_jpeg_with_exif",
     """id column -> (media_id, payload) of real 4:2:0 JPEGs carrying
     an EXIF APP1 segment (``functions/exif.py``): TIFF header with
     id-alternating II/MM byte order, IFD0
     (make/model/orientation/resolution/datetime) and the Exif
     sub-IFD (ISO, exposure) — every field modular arithmetic over
-    the id, so the oracle recomputes all of them."""
-
-    def loader():
-        from ..functions.exif import synth_jpeg_with_exif
-
-        return synth_jpeg_with_exif
-
-    return _synthesize_media(ids, id_col, loader)
+    the id, so the oracle recomputes all of them.""")
 
 
-def _extract_metadata(
-    media: DataFrame,
-    feature_schema: T.StructType,
-    parser_loader,
-    permissive: bool,
-) -> DataFrame:
-    """Shared shape of every one-row-per-payload extractor, the
-    ``extract_*`` metadata triages and full decodes alike:
-    Arrow-batched mapInPandas, a dict-returning parser resolved lazily
-    ON THE EXECUTOR (``parser_loader``), and the strict/permissive
-    error contract of :func:`extract_image_features`. Each output
-    batch is the input's non-payload columns plus one column per
-    ``feature_schema`` field (and ``decode_error`` when permissive),
-    built in one ``pd.DataFrame`` call."""
-    keep = [f for f in media.schema.fields if f.name != "payload"]
-    fields = list(keep) + list(feature_schema.fields)
-    if permissive:
-        fields.append(T.StructField("decode_error", T.StringType()))
-    schema = T.StructType(fields)
-    keep_names = [f.name for f in keep]
-    feat_names = tuple(f.name for f in feature_schema.fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parse = parser_loader()
-        for pdf in it:
-            feats: dict[str, list] = {k: [] for k in feat_names}
-            errors: list[str | None] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    meta = parse(bytes(p))
-                except ValueError as e:
-                    if not permissive:
-                        raise ValueError(f"media_id={mid}: {e}") from e
-                    for k in feat_names:
-                        feats[k].append(None)
-                    errors.append(str(e))
-                    continue
-                for k in feat_names:
-                    feats[k].append(meta[k])
-                errors.append(None)
-            cols = {k: pdf[k].array for k in keep_names}
-            cols.update(feats)
-            if permissive:
-                cols["decode_error"] = errors
-            yield pd.DataFrame(cols)
-
-    return media.mapInPandas(batches, schema=schema)
-
-
-def extract_exif_metadata(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_exif_metadata = _extractor("exif", "parse_exif", EXIF_SCHEMA,
     """EXIF metadata triage per JPEG payload: marker walk to APP1,
     II/MM byte-order dispatch, IFD entry decode with
     inline-vs-offset value resolution, Exif sub-IFD recursion
-    (:func:`..functions.exif.parse_exif`)."""
-
-    def loader():
-        from ..functions.exif import parse_exif
-
-        return parse_exif
-
-    return _extract_metadata(media, EXIF_SCHEMA, loader, permissive)
+    (:func:`..functions.exif.parse_exif`).""")
 
 
 ID3_SCHEMA = T.StructType(
@@ -933,31 +892,17 @@ ID3_SCHEMA = T.StructType(
 )
 
 
-def synthesize_id3_mp3_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_id3_mp3_media = _synthesizer("mpeg_audio", "synth_mp3_id3",
     """id column -> (media_id, payload) of MPEG streams behind REAL
     ID3v2.3/v2.4 tags (``functions/mpeg_audio.py:synth_mp3_id3``) —
     version alternates by id so both frame-size codecs (big-endian
-    vs syncsafe) run on every batch."""
-
-    def loader():
-        from ..functions.mpeg_audio import synth_mp3_id3
-
-        return synth_mp3_id3
-
-    return _synthesize_media(ids, id_col, loader)
+    vs syncsafe) run on every batch.""")
 
 
-def extract_id3_tags(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_id3_tags = _extractor("mpeg_audio", "parse_id3", ID3_SCHEMA,
     """ID3v2 tag triage per MP3 payload
     (:func:`..functions.mpeg_audio.parse_id3`): header validation,
-    the v2.3/v2.4 frame-size fork, frame walk, text decode."""
-
-    def loader():
-        from ..functions.mpeg_audio import parse_id3
-
-        return parse_id3
-
-    return _extract_metadata(media, ID3_SCHEMA, loader, permissive)
+    the v2.3/v2.4 frame-size fork, frame walk, text decode.""")
 
 
 PROTO_RECORD_SCHEMA = T.StructType(
@@ -974,32 +919,18 @@ PROTO_RECORD_SCHEMA = T.StructType(
 )
 
 
-def synthesize_proto_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_proto_media = _synthesizer("protowire", "synth_record",
     """id column -> (media_id, payload) of serialized protobuf wire
     records (``functions/protowire.py:synth_record``): varints,
     zigzag, fixed32, strings, a nested message, packed repeated
-    ints, and one deliberately unknown field."""
-
-    def loader():
-        from ..functions.protowire import synth_record
-
-        return synth_record
-
-    return _synthesize_media(ids, id_col, loader)
+    ints, and one deliberately unknown field.""")
 
 
-def extract_proto_records(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_proto_records = _extractor("protowire", "parse_record", PROTO_RECORD_SCHEMA,
     """Protobuf wire-format decode per payload
     (:func:`..functions.protowire.parse_record`): varint/zigzag/
     fixed/length-delimited walk, nested-message recursion, packed
-    repeated scalars, unknown-field skipping."""
-
-    def loader():
-        from ..functions.protowire import parse_record
-
-        return parse_record
-
-    return _extract_metadata(media, PROTO_RECORD_SCHEMA, loader, permissive)
+    repeated scalars, unknown-field skipping.""")
 
 
 ZIP_SCHEMA = T.StructType(
@@ -1013,37 +944,18 @@ ZIP_SCHEMA = T.StructType(
 )
 
 
-def synthesize_zip_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_zip_media = _synthesizer("zipscan", "synth_zip",
     """id column -> (media_id, payload) of ZIP archives written by
     the STDLIB ``zipfile`` producer (``functions/zipscan.py``) — an
     independent writer, so the scanner parses a real third-party
-    byte layout."""
-
-    def loader():
-        from ..functions.zipscan import synth_zip
-
-        return synth_zip
-
-    return _synthesize_media(ids, id_col, loader)
+    byte layout.""")
 
 
-def extract_zip_structure(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_zip_structure = _extractor("zipscan", "scan_zip", ZIP_SCHEMA,
     """ZIP central-directory triage per payload
     (:func:`..functions.zipscan.scan_zip`): EOCD backward scan,
     entry validation, central-header walk. Reads the archive TAIL —
-    member data never decompresses."""
-
-    def loader():
-        from ..functions.zipscan import scan_zip
-
-        def parse(payload: bytes) -> dict:
-            out = scan_zip(payload)
-            out.pop("members")
-            return out
-
-        return parse
-
-    return _extract_metadata(media, ZIP_SCHEMA, loader, permissive)
+    member data never decompresses.""")
 
 
 TAR_SCHEMA = T.StructType(
@@ -1056,34 +968,15 @@ TAR_SCHEMA = T.StructType(
 )
 
 
-def synthesize_tar_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_tar_media = _synthesizer("zipscan", "synth_tar",
     """id column -> (media_id, payload) of ustar archives written by
-    the STDLIB ``tarfile`` producer (``functions/zipscan.py``)."""
-
-    def loader():
-        from ..functions.zipscan import synth_tar
-
-        return synth_tar
-
-    return _synthesize_media(ids, id_col, loader)
+    the STDLIB ``tarfile`` producer (``functions/zipscan.py``).""")
 
 
-def extract_tar_structure(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_tar_structure = _extractor("zipscan", "scan_tar", TAR_SCHEMA,
     """ustar header-walk triage per payload
     (:func:`..functions.zipscan.scan_tar`): octal fields, checksum
-    verification, 512-aligned skips, end-of-archive marker."""
-
-    def loader():
-        from ..functions.zipscan import scan_tar
-
-        def parse(payload: bytes) -> dict:
-            out = scan_tar(payload)
-            out.pop("members")
-            return out
-
-        return parse
-
-    return _extract_metadata(media, TAR_SCHEMA, loader, permissive)
+    verification, 512-aligned skips, end-of-archive marker.""")
 
 
 GZIP_SCHEMA = T.StructType(
@@ -1095,48 +988,22 @@ GZIP_SCHEMA = T.StructType(
 )
 
 
-def synthesize_gzip_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_gzip_media = _synthesizer("zipscan", "synth_gzip",
     """id column -> (media_id, payload) of RFC 1952 gzip members
-    (stdlib zlib producer, FNAME flag set, fixed mtime)."""
-
-    def loader():
-        from ..functions.zipscan import synth_gzip
-
-        return synth_gzip
-
-    return _synthesize_media(ids, id_col, loader)
+    (stdlib zlib producer, FNAME flag set, fixed mtime).""")
 
 
-def extract_gzip_content(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_gzip_content = _extractor("zipscan", "decode_gzip", GZIP_SCHEMA,
     """FULL verified gzip decode per payload
     (:func:`..functions.zipscan.decode_gzip`): header flags, raw
     DEFLATE inflate, CRC32 + ISIZE trailer verification against the
-    recovered bytes."""
-
-    def loader():
-        from ..functions.zipscan import decode_gzip
-
-        def parse(payload: bytes) -> dict:
-            out = decode_gzip(payload)
-            out.pop("content")
-            return out
-
-        return parse
-
-    return _extract_metadata(media, GZIP_SCHEMA, loader, permissive)
+    recovered bytes.""")
 
 
-def synthesize_sitemap_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_sitemap_media = _synthesizer("sitemap_xml", "synth_sitemap",
     """id column -> (media_id, payload) of XML sitemaps written by
     the STDLIB ElementTree producer (``functions/sitemap_xml.py``);
-    the parse side is zero-UDF JVM SQL in `xml_sitemap_scan`."""
-
-    def loader():
-        from ..functions.sitemap_xml import synth_sitemap
-
-        return synth_sitemap
-
-    return _synthesize_media(ids, id_col, loader)
+    the parse side is zero-UDF JVM SQL in `xml_sitemap_scan`.""")
 
 
 PDF_SCHEMA = T.StructType(
@@ -1149,60 +1016,28 @@ PDF_SCHEMA = T.StructType(
 )
 
 
-def synthesize_pdf_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_pdf_media = _synthesizer("pdf_text", "synth_pdf",
     """id column -> (media_id, payload) of classic-xref PDFs with
-    FlateDecode content streams (``functions/pdf_text.py``)."""
-
-    def loader():
-        from ..functions.pdf_text import synth_pdf
-
-        return synth_pdf
-
-    return _synthesize_media(ids, id_col, loader)
+    FlateDecode content streams (``functions/pdf_text.py``).""")
 
 
-def synthesize_pdf_xref_stream_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_pdf_xref_stream_media = _synthesizer("pdf_text", "synth_pdf_xref_stream",
     """id column -> (media_id, payload) of PDF 1.5 files: xref
     STREAM + object stream + PNG-predictor FlateDecode
-    (``functions/pdf_text.py:synth_pdf_xref_stream``)."""
-
-    def loader():
-        from ..functions.pdf_text import synth_pdf_xref_stream
-
-        return synth_pdf_xref_stream
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/pdf_text.py:synth_pdf_xref_stream``).""")
 
 
-def synthesize_pdf_incremental_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_pdf_incremental_media = _synthesizer("pdf_text", "synth_pdf_incremental",
     """id column -> (media_id, payload) of incrementally-updated
     PDFs: base file + appended update section + /Prev chain
-    (``functions/pdf_text.py:synth_pdf_incremental``)."""
-
-    def loader():
-        from ..functions.pdf_text import synth_pdf_incremental
-
-        return synth_pdf_incremental
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/pdf_text.py:synth_pdf_incremental``).""")
 
 
-def extract_pdf_text_features(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_pdf_text_features = _extractor("pdf_text", "extract_pdf_text", PDF_SCHEMA,
     """Full PDF reader walk per payload
     (:func:`..functions.pdf_text.extract_pdf_text`): xref table,
     object tokenizer, page tree, inflated content streams,
-    Tj/'/TJ text operators."""
-
-    def loader():
-        from ..functions.pdf_text import extract_pdf_text
-
-        return extract_pdf_text
-
-    return _extract_metadata(media, PDF_SCHEMA, loader, permissive)
+    Tj/'/TJ text operators.""")
 
 
 ORC_VALUES_SCHEMA = T.StructType(
@@ -1217,32 +1052,18 @@ ORC_VALUES_SCHEMA = T.StructType(
 )
 
 
-def synthesize_orc_values_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_orc_values_media = _synthesizer("orc_pages", "synth_orc_values",
     """id column -> (media_id, payload) of uncompressed ORC files
     written by the INDEPENDENT pyarrow producer
     (``functions/orc_pages.py``), with column shapes chosen to hit
-    all four RLEv2 sub-encodings."""
-
-    def loader():
-        from ..functions.orc_pages import synth_orc_values
-
-        return synth_orc_values
-
-    return _synthesize_media(ids, id_col, loader)
+    all four RLEv2 sub-encodings.""")
 
 
-def extract_orc_values(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_orc_values = _extractor("orc_pages", "scan_orc_values", ORC_VALUES_SCHEMA,
     """Stripe DATA decode per payload
     (:func:`..functions.orc_pages.scan_orc_values`): stripe-footer
     protobuf walk, full RLEv2 integer decode, string LENGTH+DATA
-    reassembly, row counts cross-checked against the footer."""
-
-    def loader():
-        from ..functions.orc_pages import scan_orc_values
-
-        return scan_orc_values
-
-    return _extract_metadata(media, ORC_VALUES_SCHEMA, loader, permissive)
+    reassembly, row counts cross-checked against the footer.""")
 
 
 DEFLATE_SCHEMA = T.StructType(
@@ -1255,35 +1076,16 @@ DEFLATE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_deflate_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_deflate_media = _synthesizer("inflate", "synth_deflate",
     """id column -> (media_id, payload) of raw DEFLATE streams
     written by the STDLIB zlib compressor (levels 0-9 + Z_FIXED
-    rotation — ``functions/inflate.py``)."""
-
-    def loader():
-        from ..functions.inflate import synth_deflate
-
-        return synth_deflate
-
-    return _synthesize_media(ids, id_col, loader)
+    rotation — ``functions/inflate.py``).""")
 
 
-def extract_deflate_content(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_deflate_content = _extractor("inflate", "decode_deflate", DEFLATE_SCHEMA,
     """RFC 1951 inflate per payload through the stdlib zlib
     decompressor (:func:`..functions.inflate.inflate`): bounded
-    output, truncation rejected."""
-
-    def loader():
-        from ..functions.inflate import decode_deflate
-
-        def parse(payload: bytes) -> dict:
-            out = decode_deflate(payload)
-            out.pop("content")
-            return out
-
-        return parse
-
-    return _extract_metadata(media, DEFLATE_SCHEMA, loader, permissive)
+    output, truncation rejected.""")
 
 
 MIME_SCHEMA = T.StructType(
@@ -1302,136 +1104,41 @@ MIME_SCHEMA = T.StructType(
 )
 
 
-def synthesize_email_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_email_media = _synthesizer("mime_mail", "synth_email",
     """id column -> (media_id, payload) of RFC 5322 messages written
     by the STDLIB ``email`` producer (``functions/mime_mail.py``) —
     encoded-word subjects, multipart/mixed, base64 and
-    quoted-printable transfer encodings."""
-
-    def loader():
-        from ..functions.mime_mail import synth_email
-
-        return synth_email
-
-    return _synthesize_media(ids, id_col, loader)
+    quoted-printable transfer encodings.""")
 
 
-def extract_email_metadata(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_email_metadata = _extractor("mime_mail", "parse_mime_message", MIME_SCHEMA,
     """Hand-rolled MIME parse per payload
     (:func:`..functions.mime_mail.parse_mime_message`): header
     unfolding, RFC 2047 decode, boundary split, base64/QP transfer
-    decode — zero shared code with the stdlib producer."""
-
-    def loader():
-        from ..functions.mime_mail import parse_mime_message
-
-        return parse_mime_message
-
-    return _extract_metadata(media, MIME_SCHEMA, loader, permissive)
+    decode — zero shared code with the stdlib producer.""")
 
 
-def synthesize_h264_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_h264_media = _synthesizer("h264", "synth_h264",
     """id column -> (media_id, payload) of valid H.264 Annex B byte
     streams (``functions/h264.py``): SPS (with real exp-Golomb
     dimension/cropping encoding) + PPS + IDR + id-derived non-IDR
     slices, with payload bytes engineered to exercise emulation
-    prevention."""
-
-    def loader():
-        from ..functions.h264 import synth_h264
-
-        return synth_h264
-
-    return _synthesize_media(ids, id_col, loader)
+    prevention.""")
 
 
-def _synthesize_media(ids: DataFrame, id_col: str, synth_loader) -> DataFrame:
-    """Shared shape of the per-id payload synthesizers: resolve the
-    synth function lazily ON THE EXECUTOR, emit (media_id, payload)
-    via Arrow-batched mapInPandas over salt-balanced ids."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        synth = synth_loader()
-        for pdf in it:
-            ids_ = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids_.values,
-                    "payload": [synth(int(i)) for i in ids_],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    return _balanced_ids(ids, id_col).mapInPandas(batches, schema=schema)
-
-
-def synthesize_palette_png_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_palette_png_media = _synthesizer("png", "synth_png_palette",
     """id column -> (media_id, payload) of PALETTE (color type 3)
     PNGs (``functions/png.py:synth_png_palette``): index planes from
     modular arithmetic through a fixed 256-entry PLTE table; every
     2nd seed Adam7-interlaced on top — the icon/web-graphic profile
-    that dominates real PNG corpora by file count."""
-
-    def loader():
-        from ..functions.png import synth_png_palette
-
-        return synth_png_palette
-
-    return _synthesize_media(ids, id_col, loader)
+    that dominates real PNG corpora by file count.""")
 
 
-#: the mixed-corpus rotation for `media_format_sniff`: id % 9 picks
-#: the synthesizer; these labels are the SINGLE source the
-#: synthesizer table derives from (the oracle SQL mirrors them)
-SNIFF_ROTATION = ("jpeg", "png", "gif", "webp", "flac", "tiff", "zip",
-                  "parquet", "sqlite")
-
-
-def synthesize_mixed_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_mixed_media = _synthesizer("sniff", "synth_mixed",
     """id column -> (media_id, payload) of a MIXED, unlabeled corpus:
     the format rotates with id % len(SNIFF_ROTATION) through eight
     real synthesizers — how a crawl actually arrives, and the
-    fixture the sniffer runs against."""
-
-    def loader():
-        from ..functions.flac import synth_flac
-        from ..functions.gif import synth_gif_anim
-        from ..functions.jpeg import synth_jpeg420
-        from ..functions.parquet_footer import synth_parquet
-        from ..functions.png import synth_png
-        from ..functions.sqlite_scan import synth_sqlite
-        from ..functions.tiff import synth_tiff
-        from ..functions.webp import synth_webp
-        from ..functions.zipscan import synth_zip
-
-        by_label = {
-            "jpeg": synth_jpeg420,
-            "png": synth_png,
-            "gif": synth_gif_anim,
-            "webp": synth_webp,
-            "flac": synth_flac,
-            "tiff": synth_tiff,
-            "zip": synth_zip,
-            "parquet": synth_parquet,
-            "sqlite": synth_sqlite,
-        }
-        table = tuple(by_label[label] for label in SNIFF_ROTATION)
-
-        def synth(i: int) -> bytes:
-            return table[i % len(table)](i)
-
-        return synth
-
-    return _synthesize_media(ids, id_col, loader)
+    fixture the sniffer runs against.""")
 
 
 SNIFF_SCHEMA = T.StructType([T.StructField("fmt", T.StringType())])
@@ -1441,31 +1148,13 @@ def sniff_media(media: DataFrame) -> DataFrame:
     """Magic-byte format dispatch per payload
     (:func:`..functions.sniff.sniff_media_format`) — never raises,
     so no permissive mode is needed: unknown IS the answer."""
-
-    def loader():
-        from ..functions.sniff import sniff_media_format
-
-        def parse(payload: bytes) -> dict:
-            return {"fmt": sniff_media_format(payload)}
-
-        return parse
-
-    return _extract_metadata(media, SNIFF_SCHEMA, loader, False)
+    return _extract_metadata(media, SNIFF_SCHEMA, "sniff", "sniff_fields", False)
 
 
-def synthesize_parquet_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_parquet_media = _synthesizer("parquet_footer", "synth_parquet",
     """id column -> (media_id, payload) of REAL parquet files
     written by pyarrow (``functions/parquet_footer.py``) — the
-    independent producer pinning the hand-rolled Thrift reader."""
-
-    def loader():
-        from ..functions.parquet_footer import synth_parquet
-
-        return synth_parquet
-
-    return _synthesize_media(ids, id_col, loader)
+    independent producer pinning the hand-rolled Thrift reader.""")
 
 
 PARQUET_FOOTER_SCHEMA = T.StructType(
@@ -1481,34 +1170,17 @@ PARQUET_FOOTER_SCHEMA = T.StructType(
 )
 
 
-def extract_parquet_footer(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_parquet_footer = _extractor(
+    "parquet_footer", "scan_parquet_footer", PARQUET_FOOTER_SCHEMA,
     """Parquet footer triage per payload: Thrift compact-protocol
     FileMetaData parse
-    (:func:`..functions.parquet_footer.scan_parquet_footer`)."""
-
-    def loader():
-        from ..functions.parquet_footer import scan_parquet_footer
-
-        return scan_parquet_footer
-
-    return _extract_metadata(media, PARQUET_FOOTER_SCHEMA, loader, permissive)
+    (:func:`..functions.parquet_footer.scan_parquet_footer`).""")
 
 
-def synthesize_warc_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_warc_media = _synthesizer("warc", "synth_warc",
     """id column -> (media_id, payload) of spec-conformant .warc.gz
     crawl archives (``functions/warc.py:synth_warc``): one gzip
-    member per record, warcinfo + request/response pairs."""
-
-    def loader():
-        from ..functions.warc import synth_warc
-
-        return synth_warc
-
-    return _synthesize_media(ids, id_col, loader)
+    member per record, warcinfo + request/response pairs.""")
 
 
 WARC_SCAN_SCHEMA = T.StructType(
@@ -1523,67 +1195,31 @@ WARC_SCAN_SCHEMA = T.StructType(
 )
 
 
-def synthesize_warc_zst_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_warc_zst_media = _synthesizer("warc", "synth_warc_zst",
     """id column -> (media_id, payload) of .warc.zst archives — the
     layout Common Crawl actually distributes: zstd frames of records
     behind a skippable dictionary frame
-    (``functions/warc.py:synth_warc_zst``)."""
-
-    def loader():
-        from ..functions.warc import synth_warc_zst
-
-        return synth_warc_zst
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/warc.py:synth_warc_zst``).""")
 
 
-def synthesize_warc_zst_dict_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_warc_zst_dict_media = _synthesizer("warc", "synth_warc_zst_dict",
     """id column -> (media_id, payload) of DICT-TRAINED .warc.zst
     archives: a real ``zstd --train`` dictionary in the IIPC
     ``0x184D2A5D`` skippable frame, record frames compressed with it
     (``functions/warc.py:synth_warc_zst_dict``).  Costs ~30 ms and
     two CLI subprocesses per payload — callers should SAMPLE the id
-    column (the registry query keeps ``doc_id % 16 = 0``)."""
-
-    def loader():
-        from ..functions.warc import synth_warc_zst_dict
-
-        return synth_warc_zst_dict
-
-    return _synthesize_media(ids, id_col, loader)
+    column (the registry query keeps ``doc_id % 16 = 0``).""")
 
 
-def extract_warc_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_warc_scan = _extractor("warc", "scan_warc", WARC_SCAN_SCHEMA,
     """WARC record split per payload: member-by-member gzip decode +
-    record-grammar parse (:func:`..functions.warc.scan_warc`)."""
-
-    def loader():
-        from ..functions.warc import scan_warc
-
-        return scan_warc
-
-    return _extract_metadata(media, WARC_SCAN_SCHEMA, loader, permissive)
+    record-grammar parse (:func:`..functions.warc.scan_warc`).""")
 
 
-def synthesize_warc_text_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_warc_text_media = _synthesizer("warc", "synth_warc_text",
     """id column -> (media_id, payload) of .warc.gz whose response
     payloads are tokenizable text
-    (``functions/warc.py:synth_warc_text``)."""
-
-    def loader():
-        from ..functions.warc import synth_warc_text
-
-        return synth_warc_text
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/warc.py:synth_warc_text``).""")
 
 
 WARC_RECORD_SCHEMA = T.StructType(
@@ -1597,54 +1233,19 @@ WARC_RECORD_SCHEMA = T.StructType(
 )
 
 
-def explode_warc_records(media: DataFrame) -> DataFrame:
+explode_warc_records = _exploder("warc", "warc_record_rows", WARC_RECORD_SCHEMA,
     """One OUTPUT ROW PER WARC RECORD — the handoff from the Python
     record splitter to JVM-side text stages: everything downstream
     (tokenization, filtering, aggregation) runs in whole-stage
     codegen, exactly how a crawl pipeline should split work.  Payload
     bytes decode as UTF-8 with replacement (crawl payloads lie about
-    encodings; replacement keeps the row, never kills the task)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.warc import parse_warc_records, split_gzip_members
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "media_id": [], "rec_idx": [], "rec_type": [],
-                "uri": [], "text": [],
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(p)
-                members = split_gzip_members(payload)
-                idx = 0
-                for m in members:
-                    for rec in parse_warc_records(m):
-                        rows["media_id"].append(int(mid))
-                        rows["rec_idx"].append(idx)
-                        rows["rec_type"].append(rec["type"])
-                        rows["uri"].append(rec["uri"])
-                        rows["text"].append(
-                            rec["payload"].decode("utf-8", "replace")
-                        )
-                        idx += 1
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=WARC_RECORD_SCHEMA)
+    encodings; replacement keeps the row, never kills the task).""")
 
 
-def synthesize_arrow_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_arrow_media = _synthesizer("arrow_ipc", "synth_arrow_ipc",
     """id column -> (media_id, payload) of REAL Arrow IPC files from
     pyarrow's writer (``functions/arrow_ipc.py:synth_arrow_ipc``),
-    multi-batch."""
-
-    def loader():
-        from ..functions.arrow_ipc import synth_arrow_ipc
-
-        return synth_arrow_ipc
-
-    return _synthesize_media(ids, id_col, loader)
+    multi-batch.""")
 
 
 ARROW_SCAN_SCHEMA = T.StructType(
@@ -1659,32 +1260,16 @@ ARROW_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_arrow_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_arrow_scan = _extractor("arrow_ipc", "scan_arrow_ipc", ARROW_SCAN_SCHEMA,
     """Arrow IPC triage per payload: footer flatbuffer -> blocks ->
     per-batch Message flatbuffers
-    (:func:`..functions.arrow_ipc.scan_arrow_ipc`)."""
-
-    def loader():
-        from ..functions.arrow_ipc import scan_arrow_ipc
-
-        return scan_arrow_ipc
-
-    return _extract_metadata(media, ARROW_SCAN_SCHEMA, loader, permissive)
+    (:func:`..functions.arrow_ipc.scan_arrow_ipc`).""")
 
 
-def synthesize_xz_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_xz_media = _synthesizer("xz_scan", "synth_xz",
     """id column -> (media_id, payload) of REAL .xz files from stdlib
     lzma (``functions/xz_scan.py:synth_xz``), check types rotating
-    and odd seeds carrying concatenated streams."""
-
-    def loader():
-        from ..functions.xz_scan import synth_xz
-
-        return synth_xz
-
-    return _synthesize_media(ids, id_col, loader)
+    and odd seeds carrying concatenated streams.""")
 
 
 XZ_SCAN_SCHEMA = T.StructType(
@@ -1698,51 +1283,27 @@ XZ_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_xz_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_xz_scan = _extractor("xz_scan", "scan_xz", XZ_SCAN_SCHEMA,
     """XZ container triage per payload: footer -> index -> block map
     with every skeleton CRC verified
-    (:func:`..functions.xz_scan.scan_xz`)."""
-
-    def loader():
-        from ..functions.xz_scan import scan_xz
-
-        return scan_xz
-
-    return _extract_metadata(media, XZ_SCAN_SCHEMA, loader, permissive)
+    (:func:`..functions.xz_scan.scan_xz`).""")
 
 
 ZSTD_TEXT_SCHEMA = T.StructType([T.StructField("text", T.StringType())])
 
 
-def synthesize_zstd_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_zstd_media = _synthesizer("zstd_codec", "synth_zstd",
     """id column -> (media_id, payload) of REAL zstd frames from the
     libzstd producer (``functions/zstd_codec.py:synth_zstd``), levels
-    rotating 1/3/9/19, odd seeds concatenated two-frame files."""
-
-    def loader():
-        from ..functions.zstd_codec import synth_zstd
-
-        return synth_zstd
-
-    return _synthesize_media(ids, id_col, loader)
+    rotating 1/3/9/19, odd seeds concatenated two-frame files.""")
 
 
-def extract_zstd_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_zstd_decode = _extractor("zstd_codec", "decode_zstd_text", ZSTD_TEXT_SCHEMA,
     """FULL zstd decode per payload
     (:func:`..functions.zstd_codec.decode_zstd`): these frames need no
     dictionary, so they decode through libzstd (Arrow), content size
     and checksums verified; the hand FSE/Huffman decoder serves
-    dictionary frames and is the tests' reference."""
-
-    def loader():
-        from ..functions.zstd_codec import decode_zstd
-
-        def parse(payload: bytes) -> dict:
-            return {"text": decode_zstd(payload).decode("ascii")}
-
-        return parse
-
-    return _extract_metadata(media, ZSTD_TEXT_SCHEMA, loader, permissive)
+    dictionary frames and is the tests' reference.""")
 
 
 LZ4_SCAN_SCHEMA = T.StructType(
@@ -1755,31 +1316,17 @@ LZ4_SCAN_SCHEMA = T.StructType(
 )
 
 
-def synthesize_lz4_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_lz4_media = _synthesizer("lz4_codec", "synth_lz4",
     """id column -> (media_id, payload) of REAL .lz4 frames from the
     pyarrow (reference C) producer
-    (``functions/lz4_codec.py:synth_lz4``)."""
-
-    def loader():
-        from ..functions.lz4_codec import synth_lz4
-
-        return synth_lz4
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/lz4_codec.py:synth_lz4``).""")
 
 
-def extract_lz4_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_lz4_decode = _extractor("lz4_codec", "scan_lz4_frame", LZ4_SCAN_SCHEMA,
     """FULL LZ4 frame decode per payload
     (:func:`..functions.lz4_codec.scan_lz4_frame`): descriptor with
     xxh32-derived header checksum, linked-block history, stored
-    blocks, content checksum — all verified by hand."""
-
-    def loader():
-        from ..functions.lz4_codec import scan_lz4_frame
-
-        return scan_lz4_frame
-
-    return _extract_metadata(media, LZ4_SCAN_SCHEMA, loader, permissive)
+    blocks, content checksum — all verified by hand.""")
 
 
 TFRECORD_SCHEMA = T.StructType(
@@ -1795,48 +1342,24 @@ TFRECORD_SCHEMA = T.StructType(
 )
 
 
-def synthesize_tfrecord_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_tfrecord_media = _synthesizer("tfrecord", "synth_tfrecord",
     """id column -> (media_id, payload) of TFRecord shards whose
     records are protowire protobuf messages
-    (``functions/tfrecord.py:synth_tfrecord``)."""
-
-    def loader():
-        from ..functions.tfrecord import synth_tfrecord
-
-        return synth_tfrecord
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/tfrecord.py:synth_tfrecord``).""")
 
 
-def synthesize_tfrecord_compressed_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_tfrecord_compressed_media = _synthesizer(
+    "tfrecord", "synth_tfrecord_compressed",
     """id column -> (media_id, payload) of COMPRESSED TFRecord
     shards (.tfrecord.gz multi-member / .tfrecord.zst by seed,
-    ``functions/tfrecord.py:synth_tfrecord_compressed``)."""
-
-    def loader():
-        from ..functions.tfrecord import synth_tfrecord_compressed
-
-        return synth_tfrecord_compressed
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/tfrecord.py:synth_tfrecord_compressed``).""")
 
 
-def extract_tfrecord_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_tfrecord_scan = _extractor("tfrecord", "scan_tfrecord", TFRECORD_SCHEMA,
     """TFRecord walk per payload
     (:func:`..functions.tfrecord.scan_tfrecord`): framing + BOTH
     masked CRC32Cs verified per record, then a full protobuf wire
-    decode of every record payload."""
-
-    def loader():
-        from ..functions.tfrecord import scan_tfrecord
-
-        return scan_tfrecord
-
-    return _extract_metadata(media, TFRECORD_SCHEMA, loader, permissive)
+    decode of every record payload.""")
 
 
 ARROW_VALUES_SCHEMA = T.StructType(
@@ -1852,93 +1375,46 @@ ARROW_VALUES_SCHEMA = T.StructType(
 )
 
 
-def synthesize_arrow_stream_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_arrow_stream_media = _synthesizer("arrow_ipc", "synth_arrow_stream",
     """id column -> (media_id, payload) of Arrow IPC STREAMS (the
     footer-less wire format) from the pyarrow writer
-    (``functions/arrow_ipc.py:synth_arrow_stream``)."""
-
-    def loader():
-        from ..functions.arrow_ipc import synth_arrow_stream
-
-        return synth_arrow_stream
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/arrow_ipc.py:synth_arrow_stream``).""")
 
 
-def extract_arrow_stream(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_arrow_stream = _extractor(
+    "arrow_ipc", "decode_arrow_stream", ARROW_VALUES_SCHEMA,
     """Arrow IPC STREAMING decode per payload
     (:func:`..functions.arrow_ipc.decode_arrow_stream`): schema
     message first, schema state carried forward, end-of-stream
-    marker honored — the no-footer wire layout."""
-
-    def loader():
-        from ..functions.arrow_ipc import decode_arrow_stream
-
-        return decode_arrow_stream
-
-    return _extract_metadata(media, ARROW_VALUES_SCHEMA, loader, permissive)
+    marker honored — the no-footer wire layout.""")
 
 
-def synthesize_arrow_values_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_arrow_values_media = _synthesizer("arrow_ipc", "synth_arrow_values",
     """id column -> (media_id, payload) of Arrow IPC files with
     nullable int64/int32/utf8 columns from the pyarrow writer
-    (``functions/arrow_ipc.py:synth_arrow_values``)."""
-
-    def loader():
-        from ..functions.arrow_ipc import synth_arrow_values
-
-        return synth_arrow_values
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/arrow_ipc.py:synth_arrow_values``).""")
 
 
-def extract_arrow_values(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_arrow_values = _extractor(
+    "arrow_ipc", "decode_arrow_values", ARROW_VALUES_SCHEMA,
     """Arrow IPC VALUE decode per payload
     (:func:`..functions.arrow_ipc.decode_arrow_values`): schema type
     resolution, FieldNode/Buffer preorder walk, LSB-first validity
     bitmaps, body-relative buffer bounds — exact sums over non-null
-    slots only."""
-
-    def loader():
-        from ..functions.arrow_ipc import decode_arrow_values
-
-        return decode_arrow_values
-
-    return _extract_metadata(media, ARROW_VALUES_SCHEMA, loader, permissive)
+    slots only.""")
 
 
-def synthesize_arrow_dict_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_arrow_dict_media = _synthesizer("arrow_ipc", "synth_arrow_dict",
     """id column -> (media_id, payload) of Arrow IPC FILES with
     dictionary-encoded utf8/int32 columns
-    (``functions/arrow_ipc.py:synth_arrow_dict``)."""
-
-    def loader():
-        from ..functions.arrow_ipc import synth_arrow_dict
-
-        return synth_arrow_dict
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/arrow_ipc.py:synth_arrow_dict``).""")
 
 
-def synthesize_arrow_dict_stream_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_arrow_dict_stream_media = _synthesizer(
+    "arrow_ipc", "synth_arrow_dict_stream",
     """id column -> (media_id, payload) of Arrow IPC STREAMS whose
     dictionary grows per batch, forcing initial + DELTA dictionary
-    batches (``functions/arrow_ipc.py:synth_arrow_dict_stream``)."""
-
-    def loader():
-        from ..functions.arrow_ipc import synth_arrow_dict_stream
-
-        return synth_arrow_dict_stream
-
-    return _synthesize_media(ids, id_col, loader)
+    batches (``functions/arrow_ipc.py:synth_arrow_dict_stream``).""")
 
 
 NPZ_SCAN_SCHEMA = T.StructType(
@@ -1954,33 +1430,19 @@ NPZ_SCAN_SCHEMA = T.StructType(
 )
 
 
-def synthesize_npz_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_npz_media = _synthesizer("npy_scan", "synth_npz",
     """id column -> (media_id, payload) of REAL .npz containers from
     the numpy producer (``functions/npy_scan.py:synth_npz``): 2-3
     arrays each, dtypes i8/i4/u1, mixed C/Fortran order, STORED and
-    DEFLATE containers rotating."""
-
-    def loader():
-        from ..functions.npy_scan import synth_npz
-
-        return synth_npz
-
-    return _synthesize_media(ids, id_col, loader)
+    DEFLATE containers rotating.""")
 
 
-def extract_npz_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_npz_scan = _extractor("npy_scan", "scan_npz", NPZ_SCAN_SCHEMA,
     """NPY/NPZ tensor read from raw bytes per payload
     (:func:`..functions.npy_scan.scan_npz`): hand-rolled ZIP walk ->
     inflate -> regex-grammar NPY header (no eval) -> struct
     data decode with the fortran-order remap pinned by a
-    position-weighted checksum."""
-
-    def loader():
-        from ..functions.npy_scan import scan_npz
-
-        return scan_npz
-
-    return _extract_metadata(media, NPZ_SCAN_SCHEMA, loader, permissive)
+    position-weighted checksum.""")
 
 
 PICKLE_SCAN_SCHEMA = T.StructType(
@@ -2000,86 +1462,44 @@ PICKLE_SCAN_SCHEMA = T.StructType(
 )
 
 
-def synthesize_pickle_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_pickle_media = _synthesizer("pickle_scan", "synth_pickle",
     """id column -> (media_id, payload) of REAL pickles from the
     stdlib producer (``functions/pickle_scan.py:synth_pickle``),
     protocol rotating 0..5 and every 7th payload carrying a class
-    (global) reference."""
-
-    def loader():
-        from ..functions.pickle_scan import synth_pickle
-
-        return synth_pickle
-
-    return _synthesize_media(ids, id_col, loader)
+    (global) reference.""")
 
 
-def extract_pickle_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_pickle_scan = _extractor("pickle_scan", "scan_pickle", PICKLE_SCAN_SCHEMA,
     """Pickle opcode triage per payload WITHOUT unpickling
     (:func:`..functions.pickle_scan.scan_pickle`): full opcode
     grammar walk, embedded value stats, and the GLOBAL/STACK_GLOBAL
     ``module qualname`` references that make a payload dangerous —
-    surfaced without importing or calling anything."""
-
-    def loader():
-        from ..functions.pickle_scan import scan_pickle
-
-        return scan_pickle
-
-    return _extract_metadata(media, PICKLE_SCAN_SCHEMA, loader, permissive)
+    surfaced without importing or calling anything.""")
 
 
 XZ_TEXT_SCHEMA = T.StructType([T.StructField("text", T.StringType())])
 
 
-def synthesize_xz_text_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_xz_text_media = _synthesizer("lzma_codec", "synth_xz_text",
     """id column -> (media_id, payload) of REAL .xz files from the
     stdlib liblzma producer over a deterministic text plan
     (``functions/lzma_codec.py:synth_xz_text``): check type rotates
-    all four, odd seeds ship as two concatenated streams."""
-
-    def loader():
-        from ..functions.lzma_codec import synth_xz_text
-
-        return synth_xz_text
-
-    return _synthesize_media(ids, id_col, loader)
+    all four, odd seeds ship as two concatenated streams.""")
 
 
-def extract_xz_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
+extract_xz_decode = _extractor("lzma_codec", "decode_xz_text", XZ_TEXT_SCHEMA,
     """FULL .xz decode per payload through liblzma, every stream and
     per-block plaintext check verified
     (:func:`..functions.lzma_codec.decode_xz`); the full-decode
     companion of the triage-only :func:`extract_xz_scan`.  Returns the
     recovered plaintext so the STATS stay JVM-side (the
-    Python-narrow / JVM-wide split of ``pdf_corpus_text_stats``)."""
-
-    def loader():
-        from ..functions.lzma_codec import decode_xz
-
-        def parse(payload: bytes) -> dict:
-            return {"text": decode_xz(payload).decode("ascii")}
-
-        return parse
-
-    return _extract_metadata(media, XZ_TEXT_SCHEMA, loader, permissive)
+    Python-narrow / JVM-wide split of ``pdf_corpus_text_stats``).""")
 
 
-def synthesize_bz2_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_bz2_media = _synthesizer("bzip2", "synth_bz2",
     """id column -> (media_id, payload) of REAL .bz2 streams from the
     stdlib compressor (``functions/bzip2.py:synth_bz2``), levels
-    rotating 1..9."""
-
-    def loader():
-        from ..functions.bzip2 import synth_bz2
-
-        return synth_bz2
-
-    return _synthesize_media(ids, id_col, loader)
+    rotating 1..9.""")
 
 
 BZ2_SCAN_SCHEMA = T.StructType(
@@ -2092,49 +1512,22 @@ BZ2_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_bz2_decode(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_bz2_decode = _extractor("bzip2", "scan_bz2", BZ2_SCAN_SCHEMA,
     """Full bzip2 decode per payload through libbz2, block and
-    stream CRCs verified (:func:`..functions.bzip2.scan_bz2`)."""
-
-    def loader():
-        from ..functions.bzip2 import scan_bz2
-
-        return scan_bz2
-
-    return _extract_metadata(media, BZ2_SCAN_SCHEMA, loader, permissive)
+    stream CRCs verified (:func:`..functions.bzip2.scan_bz2`).""")
 
 
-def synthesize_sqlite_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_sqlite_media = _synthesizer("sqlite_scan", "synth_sqlite",
     """id column -> (media_id, payload) of REAL SQLite databases
     produced by the stdlib sqlite3 engine via ``Connection.serialize``
     (``functions/sqlite_scan.py``) — 512-byte pages growing genuine
-    multi-level table b-trees."""
-
-    def loader():
-        from ..functions.sqlite_scan import synth_sqlite
-
-        return synth_sqlite
-
-    return _synthesize_media(ids, id_col, loader)
+    multi-level table b-trees.""")
 
 
-def synthesize_sqlite_wr_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_sqlite_wr_media = _synthesizer("sqlite_scan", "synth_sqlite_wr",
     """id column -> (media_id, payload) of WITHOUT ROWID SQLite
     databases with a secondary index
-    (``functions/sqlite_scan.py:synth_sqlite_wr``)."""
-
-    def loader():
-        from ..functions.sqlite_scan import synth_sqlite_wr
-
-        return synth_sqlite_wr
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/sqlite_scan.py:synth_sqlite_wr``).""")
 
 
 SQLITE_WR_SCHEMA = T.StructType(
@@ -2150,18 +1543,10 @@ SQLITE_WR_SCHEMA = T.StructType(
 )
 
 
-def extract_sqlite_wr_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_sqlite_wr_scan = _extractor(
+    "sqlite_scan", "scan_sqlite_without_rowid", SQLITE_WR_SCHEMA,
     """WITHOUT ROWID table + secondary-index read per payload
-    (:func:`..functions.sqlite_scan.scan_sqlite_without_rowid`)."""
-
-    def loader():
-        from ..functions.sqlite_scan import scan_sqlite_without_rowid
-
-        return scan_sqlite_without_rowid
-
-    return _extract_metadata(media, SQLITE_WR_SCHEMA, loader, permissive)
+    (:func:`..functions.sqlite_scan.scan_sqlite_without_rowid`).""")
 
 
 SQLITE_SCAN_SCHEMA = T.StructType(
@@ -2178,52 +1563,25 @@ SQLITE_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_sqlite_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_sqlite_scan = _extractor("sqlite_scan", "scan_sqlite", SQLITE_SCAN_SCHEMA,
     """SQLite table read per payload: header parse, sqlite_schema
     walk, table b-tree traversal, record decode
-    (:func:`..functions.sqlite_scan.scan_sqlite`)."""
-
-    def loader():
-        from ..functions.sqlite_scan import scan_sqlite
-
-        return scan_sqlite
-
-    return _extract_metadata(media, SQLITE_SCAN_SCHEMA, loader, permissive)
+    (:func:`..functions.sqlite_scan.scan_sqlite`).""")
 
 
-def synthesize_rle8_bmp_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_rle8_bmp_media = _synthesizer("bmp", "synth_bmp_rle8",
     """id column -> (media_id, payload) of 8-bit palette BI_RLE8 BMPs
     (``functions/bmp.py:synth_bmp_rle8``): banded index planes whose
     zero bands encode as delta escapes, the screenshot/diagram profile
-    that dominates RLE-compressed bitmaps in the wild."""
-
-    def loader():
-        from ..functions.bmp import synth_bmp_rle8
-
-        return synth_bmp_rle8
-
-    return _synthesize_media(ids, id_col, loader)
+    that dominates RLE-compressed bitmaps in the wild.""")
 
 
-def synthesize_parquet_data_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_parquet_data_media = _synthesizer("parquet_pages", "synth_parquet_data",
     """id column -> (media_id, payload) of REAL parquet files written
     by pyarrow with the FULL encoding rotation (V1/V2 data pages,
     dictionary on/off, gzip/uncompressed; multi-row-group, multi-page
     chunks) — the fixture for the data-page VALUE decoder
-    (``functions/parquet_pages.py``)."""
-
-    def loader():
-        from ..functions.parquet_pages import synth_parquet_data
-
-        return synth_parquet_data
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/parquet_pages.py``).""")
 
 
 PARQUET_VALUES_SCHEMA = T.StructType(
@@ -2239,49 +1597,23 @@ PARQUET_VALUES_SCHEMA = T.StructType(
 )
 
 
-def extract_parquet_values(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_parquet_values = _extractor(
+    "parquet_pages", "scan_parquet_values", PARQUET_VALUES_SCHEMA,
     """Parquet data-page VALUE decode per payload: page-header walk +
     RLE/bit-packed levels + PLAIN/dictionary values
-    (:func:`..functions.parquet_pages.scan_parquet_values`)."""
-
-    def loader():
-        from ..functions.parquet_pages import scan_parquet_values
-
-        return scan_parquet_values
-
-    return _extract_metadata(media, PARQUET_VALUES_SCHEMA, loader, permissive)
+    (:func:`..functions.parquet_pages.scan_parquet_values`).""")
 
 
-def synthesize_avro_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_avro_media = _synthesizer("avro_scan", "synth_avro",
     """id column -> (media_id, payload) of Avro object containers,
     codec rotating null/deflate/snappy
-    (``functions/avro_scan.py:synth_avro``)."""
-
-    def loader():
-        from ..functions.avro_scan import synth_avro
-
-        return synth_avro
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/avro_scan.py:synth_avro``).""")
 
 
-def synthesize_iceberg_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_media = _synthesizer("iceberg_scan", "synth_iceberg",
     """id column -> (media_id, payload) of Iceberg table bundles
     (metadata JSON + manifest-list/manifest avro + real parquet,
-    ``functions/iceberg_scan.py:synth_iceberg``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg
-
-        return synth_iceberg
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/iceberg_scan.py:synth_iceberg``).""")
 
 
 ICEBERG_SCAN_SCHEMA = T.StructType(
@@ -2301,18 +1633,9 @@ ICEBERG_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_scan = _extractor("iceberg_scan", "scan_iceberg", ICEBERG_SCAN_SCHEMA,
     """Iceberg snapshot planning + pruned read per payload
-    (:func:`..functions.iceberg_scan.scan_iceberg`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg
-
-        return scan_iceberg
-
-    return _extract_metadata(media, ICEBERG_SCAN_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg`).""")
 
 
 AVRO_SCAN_SCHEMA = T.StructType(
@@ -2328,20 +1651,11 @@ AVRO_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_avro_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_avro_scan = _extractor("avro_scan", "scan_avro", AVRO_SCAN_SCHEMA,
     """Avro container read per payload
     (:func:`..functions.avro_scan.scan_avro`): metadata map, schema
     JSON -> decode plan, per-block codec + sync verification, binary
-    record decode."""
-
-    def loader():
-        from ..functions.avro_scan import scan_avro
-
-        return scan_avro
-
-    return _extract_metadata(media, AVRO_SCAN_SCHEMA, loader, permissive)
+    record decode.""")
 
 
 AVRO_RECORD_SCHEMA = T.StructType(
@@ -2357,7 +1671,7 @@ AVRO_RECORD_SCHEMA = T.StructType(
 )
 
 
-def explode_avro_records(media: DataFrame) -> DataFrame:
+explode_avro_records = _exploder("avro_scan", "avro_record_rows", AVRO_RECORD_SCHEMA,
     """One OUTPUT ROW PER AVRO RECORD — the Python-narrow/JVM-wide
     handoff applied to the row-major container: Python does only the
     byte-level work it must (block framing, codec, binary record
@@ -2365,43 +1679,14 @@ def explode_avro_records(media: DataFrame) -> DataFrame:
     (grouping, aggregation, joins) runs in whole-stage codegen.
     At 100 TB this is the shape an Avro ingest keeps: the decode is
     embarrassingly parallel per file, and the shuffle operates on
-    compact typed columns, never on raw payloads."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avro_scan import iter_avro_records
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "media_id": [], "rec_idx": [], "id": [], "name": [],
-                "ratio": [], "ok": [], "opt": [],
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for idx, rec in enumerate(iter_avro_records(bytes(p))):
-                    rows["media_id"].append(int(mid))
-                    rows["rec_idx"].append(idx)
-                    rows["id"].append(rec["id"])
-                    rows["name"].append(rec["name"])
-                    rows["ratio"].append(rec["ratio"])
-                    rows["ok"].append(rec["ok"])
-                    rows["opt"].append(rec["opt"])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=AVRO_RECORD_SCHEMA)
+    compact typed columns, never on raw payloads.""")
 
 
-def synthesize_parquet_page_index_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_parquet_page_index_media = _synthesizer(
+    "parquet_pageindex", "synth_parquet_page_index",
     """id column -> (media_id, payload) of parquet files carrying
     ColumnIndex/OffsetIndex page statistics
-    (``functions/parquet_pageindex.py:synth_parquet_page_index``)."""
-
-    def loader():
-        from ..functions.parquet_pageindex import synth_parquet_page_index
-
-        return synth_parquet_page_index
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/parquet_pageindex.py:synth_parquet_page_index``).""")
 
 
 PARQUET_PAGE_INDEX_SCHEMA = T.StructType(
@@ -2420,34 +1705,17 @@ PARQUET_PAGE_INDEX_SCHEMA = T.StructType(
 )
 
 
-def extract_parquet_page_index(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_parquet_page_index = _extractor(
+    "parquet_pageindex", "scan_parquet_page_index", PARQUET_PAGE_INDEX_SCHEMA,
     """Page-index scan per payload
     (:func:`..functions.parquet_pageindex.scan_parquet_page_index`):
     ColumnIndex/OffsetIndex decode, cross-checks, split-independent
-    min/max/null aggregates, point-lookup pruning."""
-
-    def loader():
-        from ..functions.parquet_pageindex import scan_parquet_page_index
-
-        return scan_parquet_page_index
-
-    return _extract_metadata(
-        media, PARQUET_PAGE_INDEX_SCHEMA, loader, permissive
-    )
+    min/max/null aggregates, point-lookup pruning.""")
 
 
-def synthesize_ico_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_ico_media = _synthesizer("ico", "synth_ico",
     """id column -> (media_id, payload) of ICO favicon containers
-    (``functions/ico.py``): mixed PNG/DIB entries at formula sizes."""
-
-    def loader():
-        from ..functions.ico import synth_ico
-
-        return synth_ico
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/ico.py``): mixed PNG/DIB entries at formula sizes.""")
 
 
 ICO_SCHEMA = T.StructType(
@@ -2461,45 +1729,20 @@ ICO_SCHEMA = T.StructType(
 )
 
 
-def extract_ico_structure(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_ico_structure = _extractor("ico", "scan_ico", ICO_SCHEMA,
     """ICO directory triage per payload
-    (:func:`..functions.ico.scan_ico`)."""
-
-    def loader():
-        from ..functions.ico import scan_ico
-
-        return scan_ico
-
-    return _extract_metadata(media, ICO_SCHEMA, loader, permissive)
+    (:func:`..functions.ico.scan_ico`).""")
 
 
-def synthesize_orc_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_orc_media = _synthesizer("orc_footer", "synth_orc",
     """id column -> (media_id, payload) of REAL ORC files written by
-    pyarrow with uncompressed tails (``functions/orc_footer.py``)."""
-
-    def loader():
-        from ..functions.orc_footer import synth_orc
-
-        return synth_orc
-
-    return _synthesize_media(ids, id_col, loader)
+    pyarrow with uncompressed tails (``functions/orc_footer.py``).""")
 
 
-def synthesize_orc_compressed_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_orc_compressed_media = _synthesizer("orc_footer", "synth_orc_compressed",
     """id column -> (media_id, payload) of ORC files with COMPRESSED
     tails, codec rotating zlib/snappy/lz4/zstd
-    (``functions/orc_footer.py:synth_orc_compressed``)."""
-
-    def loader():
-        from ..functions.orc_footer import synth_orc_compressed
-
-        return synth_orc_compressed
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/orc_footer.py:synth_orc_compressed``).""")
 
 
 ORC_FOOTER_SCHEMA = T.StructType(
@@ -2513,31 +1756,15 @@ ORC_FOOTER_SCHEMA = T.StructType(
 )
 
 
-def extract_orc_footer(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_orc_footer = _extractor("orc_footer", "scan_orc_footer", ORC_FOOTER_SCHEMA,
     """ORC tail triage per payload: postscript + protobuf footer
-    (:func:`..functions.orc_footer.scan_orc_footer`)."""
-
-    def loader():
-        from ..functions.orc_footer import scan_orc_footer
-
-        return scan_orc_footer
-
-    return _extract_metadata(media, ORC_FOOTER_SCHEMA, loader, permissive)
+    (:func:`..functions.orc_footer.scan_orc_footer`).""")
 
 
-def synthesize_tiff_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_tiff_media = _synthesizer("tiff", "synth_tiff",
     """id column -> (media_id, payload) of MULTI-PAGE TIFFs
     (``functions/tiff.py:synth_tiff``): chained IFDs, alternating
-    byte order per id, word-aligned directories."""
-
-    def loader():
-        from ..functions.tiff import synth_tiff
-
-        return synth_tiff
-
-    return _synthesize_media(ids, id_col, loader)
+    byte order per id, word-aligned directories.""")
 
 
 TIFF_SCHEMA = T.StructType(
@@ -2554,45 +1781,22 @@ TIFF_SCHEMA = T.StructType(
 )
 
 
-def extract_tiff_structure(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_tiff_structure = _extractor("tiff", "scan_tiff", TIFF_SCHEMA,
     """Multi-page TIFF triage per payload: IFD-chain walk with
-    cycle detection (:func:`..functions.tiff.scan_tiff`)."""
-
-    def loader():
-        from ..functions.tiff import scan_tiff
-
-        return scan_tiff
-
-    return _extract_metadata(media, TIFF_SCHEMA, loader, permissive)
+    cycle detection (:func:`..functions.tiff.scan_tiff`).""")
 
 
-def synthesize_webp_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_webp_media = _synthesizer("webp", "synth_webp",
     """id column -> (media_id, payload) of WebP RIFF containers
     (``functions/webp.py``) — the profile rotates per id: lossy VP8,
     lossless VP8L, extended VP8X (with EXIF chunks and RIFF padding
-    on odd sizes)."""
-
-    def loader():
-        from ..functions.webp import synth_webp
-
-        return synth_webp
-
-    return _synthesize_media(ids, id_col, loader)
+    on odd sizes).""")
 
 
-def synthesize_flac_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+synthesize_flac_media = _synthesizer("flac", "synth_flac",
     """id column -> (media_id, payload) of FLAC files with
     STREAMINFO + Vorbis-comment metadata blocks
-    (``functions/flac.py``)."""
-
-    def loader():
-        from ..functions.flac import synth_flac
-
-        return synth_flac
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/flac.py``).""")
 
 
 def synthesize_jpeg_profile_pair_media(
@@ -2640,19 +1844,10 @@ def synthesize_jpeg_profile_pair_media(
     return _balanced_ids(ids, id_col).mapInPandas(batches, schema=schema)
 
 
-def synthesize_gif_anim_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_gif_anim_media = _synthesizer("gif", "synth_gif_anim",
     """id column -> (media_id, payload) of GIF89a ANIMATIONS
     (``functions/gif.py:synth_gif_anim``): NETSCAPE loop extension,
-    per-frame Graphic Control Extensions, dirty-rect frames."""
-
-    def loader():
-        from ..functions.gif import synth_gif_anim
-
-        return synth_gif_anim
-
-    return _synthesize_media(ids, id_col, loader)
+    per-frame Graphic Control Extensions, dirty-rect frames.""")
 
 
 GIF_ANIM_SCHEMA = T.StructType(
@@ -2668,18 +1863,9 @@ GIF_ANIM_SCHEMA = T.StructType(
 )
 
 
-def extract_gif_animation(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_gif_animation = _extractor("gif", "scan_gif_anim", GIF_ANIM_SCHEMA,
     """GIF animation triage per payload: block walk with NO pixel
-    decode (:func:`..functions.gif.scan_gif_anim`)."""
-
-    def loader():
-        from ..functions.gif import scan_gif_anim
-
-        return scan_gif_anim
-
-    return _extract_metadata(media, GIF_ANIM_SCHEMA, loader, permissive)
+    decode (:func:`..functions.gif.scan_gif_anim`).""")
 
 
 WEBP_SCHEMA = T.StructType(
@@ -2709,51 +1895,24 @@ FLAC_SCHEMA = T.StructType(
 )
 
 
-def extract_webp_structure(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_webp_structure = _extractor("webp", "scan_webp", WEBP_SCHEMA,
     """WebP container triage per payload: RIFF chunk walk + the
     image-header bits of VP8/VP8L/VP8X
-    (:func:`..functions.webp.scan_webp`)."""
-
-    def loader():
-        from ..functions.webp import scan_webp
-
-        return scan_webp
-
-    return _extract_metadata(media, WEBP_SCHEMA, loader, permissive)
+    (:func:`..functions.webp.scan_webp`).""")
 
 
-def extract_flac_metadata(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_flac_metadata = _extractor("flac", "scan_flac", FLAC_SCHEMA,
     """FLAC metadata triage per payload: STREAMINFO bit unpacking +
-    Vorbis-comment TITLE (:func:`..functions.flac.scan_flac`)."""
-
-    def loader():
-        from ..functions.flac import scan_flac
-
-        return scan_flac
-
-    return _extract_metadata(media, FLAC_SCHEMA, loader, permissive)
+    Vorbis-comment TITLE (:func:`..functions.flac.scan_flac`).""")
 
 
-def synthesize_h264_ipcm_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_h264_ipcm_media = _synthesizer("h264", "synth_h264_ipcm",
     """id column -> (media_id, payload) of all-I_PCM H.264 streams
     (``functions/h264.py:synth_h264_ipcm``): SPS with cropping, a
     spec-complete PPS, and one IDR slice whose every macroblock is
     I_PCM — RAW byte-aligned YCbCr samples in the bitstream, so the
     pixel decode is LOSSLESS and the modular-formula planes are
-    value-checkable by the DuckDB oracle."""
-
-    def loader():
-        from ..functions.h264 import synth_h264_ipcm
-
-        return synth_h264_ipcm
-
-    return _synthesize_media(ids, id_col, loader)
+    value-checkable by the DuckDB oracle.""")
 
 
 H264_IPCM_SCHEMA = T.StructType(
@@ -2768,32 +1927,13 @@ H264_IPCM_SCHEMA = T.StructType(
 )
 
 
-def extract_h264_ipcm_features(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_h264_ipcm_features = _extractor(
+    "h264", "decode_h264_ipcm_sums", H264_IPCM_SCHEMA,
     """H.264 PIXEL decode per payload (I_PCM profile) via
     Arrow-batched mapInPandas: NAL walk, SPS/PPS parse, IDR slice
     header, macroblock-layer walk, raw sample extraction, SPS crop —
     then integer plane sums (exact, no float tolerance). Same
-    strict/permissive error contract as the other codecs."""
-
-    def loader():
-        from ..functions.h264 import decode_h264_ipcm
-
-        def parse(payload: bytes) -> dict:
-            d = decode_h264_ipcm(payload)
-            return {
-                "width": d["width"],
-                "height": d["height"],
-                "n_mbs": d["n_mbs"],
-                "sum_y": int(d["y"].sum(dtype="int64")),
-                "sum_cb": int(d["cb"].sum(dtype="int64")),
-                "sum_cr": int(d["cr"].sum(dtype="int64")),
-            }
-
-        return parse
-
-    return _extract_metadata(media, H264_IPCM_SCHEMA, loader, permissive)
+    strict/permissive error contract as the other codecs.""")
 
 
 MP3_STRUCTURE_SCHEMA = T.StructType(
@@ -2819,6 +1959,13 @@ H264_STRUCTURE_SCHEMA = T.StructType(
     ]
 )
 
+#: ``extract_stream_structure`` format -> (functions module, scanner,
+#: feature schema)
+_STREAM_FORMATS = {
+    "mp3": ("mpeg_audio", "scan_mp3", MP3_STRUCTURE_SCHEMA),
+    "h264": ("h264", "scan_h264", H264_STRUCTURE_SCHEMA),
+}
+
 
 def extract_stream_structure(
     media: DataFrame, fmt: str, permissive: bool = False
@@ -2834,61 +1981,16 @@ def extract_stream_structure(
     native. Arrow-batched mapInPandas, one pass, no shuffle; same
     strict/permissive error contract as
     :func:`extract_image_features`."""
-    if fmt not in ("mp3", "h264"):
+    if fmt not in _STREAM_FORMATS:
         raise ValueError(f"unsupported stream format {fmt!r}")
-    feat_schema = MP3_STRUCTURE_SCHEMA if fmt == "mp3" else H264_STRUCTURE_SCHEMA
-    keep = [f for f in media.schema.fields if f.name != "payload"]
-    fields = list(keep) + list(feat_schema.fields)
-    if permissive:
-        fields.append(T.StructField("decode_error", T.StringType()))
-    schema = T.StructType(fields)
-    keep_names = [f.name for f in keep]
-    feat_names = [f.name for f in feat_schema.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if fmt == "mp3":
-            from ..functions.mpeg_audio import scan_mp3 as scan
-        else:
-            from ..functions.h264 import scan_h264 as scan
-
-        for pdf in it:
-            feats: dict[str, list] = {k: [] for k in feat_names}
-            errors: list[str | None] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    st = scan(bytes(p))
-                except ValueError as e:
-                    if not permissive:
-                        raise ValueError(f"media_id={mid}: {e}") from e
-                    for k in feat_names:
-                        feats[k].append(None)
-                    errors.append(str(e))
-                    continue
-                for k in feat_names:
-                    feats[k].append(st[k])
-                errors.append(None)
-            cols = {k: pdf[k].array for k in keep_names}
-            cols.update(feats)
-            if permissive:
-                cols["decode_error"] = errors
-            yield pd.DataFrame(cols)
-
-    return media.mapInPandas(batches, schema=schema)
+    module, fn, feat_schema = _STREAM_FORMATS[fmt]
+    return _extract_metadata(media, feat_schema, module, fn, permissive)
 
 
-def synthesize_iceberg_v2_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_v2_media = _synthesizer("iceberg_scan", "synth_iceberg_v2",
     """id column -> (media_id, payload) of Iceberg v2 bundles with a
     partition-spec transform and an equality-delete file
-    (``functions/iceberg_scan.py:synth_iceberg_v2``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_v2
-
-        return synth_iceberg_v2
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_v2``).""")
 
 
 ICEBERG_V2_SCAN_SCHEMA = T.StructType(
@@ -2909,35 +2011,18 @@ ICEBERG_V2_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_v2_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_v2_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_v2", ICEBERG_V2_SCAN_SCHEMA,
     """Transform-aware Iceberg planning + equality-delete
     merge-on-read per payload
-    (:func:`..functions.iceberg_scan.scan_iceberg_v2`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_v2
-
-        return scan_iceberg_v2
-
-    return _extract_metadata(media, ICEBERG_V2_SCAN_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg_v2`).""")
 
 
-def synthesize_delta_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_media = _synthesizer("delta_log", "synth_delta",
     """id column -> (media_id, payload) of Delta Lake table bundles
     (checkpoint parquet + _last_checkpoint + post-checkpoint JSON
     commit + real data parquet,
-    ``functions/delta_log.py:synth_delta``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta
-
-        return synth_delta
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/delta_log.py:synth_delta``).""")
 
 
 DELTA_SCAN_SCHEMA = T.StructType(
@@ -2957,34 +2042,16 @@ DELTA_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_scan = _extractor("delta_log", "scan_delta", DELTA_SCAN_SCHEMA,
     """Delta _delta_log snapshot reconstruction + stats-pruned read
-    per payload (:func:`..functions.delta_log.scan_delta`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta
-
-        return scan_delta
-
-    return _extract_metadata(media, DELTA_SCAN_SCHEMA, loader, permissive)
+    per payload (:func:`..functions.delta_log.scan_delta`).""")
 
 
-def synthesize_avro_complex_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_avro_complex_media = _synthesizer("avro_scan", "synth_avro_complex",
     """id column -> (media_id, payload) of Avro containers whose
     schema exercises the FULL complex-type set: array, map, enum,
     fixed, and a general 3-branch union
-    (``functions/avro_scan.py:synth_avro_complex``)."""
-
-    def loader():
-        from ..functions.avro_scan import synth_avro_complex
-
-        return synth_avro_complex
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/avro_scan.py:synth_avro_complex``).""")
 
 
 AVRO_COMPLEX_SCHEMA = T.StructType(
@@ -3008,33 +2075,16 @@ AVRO_COMPLEX_SCHEMA = T.StructType(
 )
 
 
-def extract_avro_complex_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_avro_complex_scan = _extractor(
+    "avro_scan", "scan_avro_complex", AVRO_COMPLEX_SCHEMA,
     """Complex-type Avro container read per payload
-    (:func:`..functions.avro_scan.scan_avro_complex`)."""
-
-    def loader():
-        from ..functions.avro_scan import scan_avro_complex
-
-        return scan_avro_complex
-
-    return _extract_metadata(media, AVRO_COMPLEX_SCHEMA, loader, permissive)
+    (:func:`..functions.avro_scan.scan_avro_complex`).""")
 
 
-def synthesize_orc_rich_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_orc_rich_media = _synthesizer("orc_pages", "synth_orc_rich",
     """id column -> (media_id, payload) of compressed, nullable,
     dictionary-encoded ORC files written by pyarrow
-    (``functions/orc_pages.py:synth_orc_rich``)."""
-
-    def loader():
-        from ..functions.orc_pages import synth_orc_rich
-
-        return synth_orc_rich
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/orc_pages.py:synth_orc_rich``).""")
 
 
 ORC_RICH_SCHEMA = T.StructType(
@@ -3053,33 +2103,16 @@ ORC_RICH_SCHEMA = T.StructType(
 )
 
 
-def extract_orc_rich_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_orc_rich_scan = _extractor("orc_pages", "scan_orc_rich", ORC_RICH_SCHEMA,
     """Compressed/nullable/dictionary ORC stripe decode per payload
-    (:func:`..functions.orc_pages.scan_orc_rich`)."""
-
-    def loader():
-        from ..functions.orc_pages import scan_orc_rich
-
-        return scan_orc_rich
-
-    return _extract_metadata(media, ORC_RICH_SCHEMA, loader, permissive)
+    (:func:`..functions.orc_pages.scan_orc_rich`).""")
 
 
-def synthesize_delta_partitioned_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_partitioned_media = _synthesizer(
+    "delta_log", "synth_delta_partitioned",
     """id column -> (media_id, payload) of partitioned Delta tables
     with half the add actions stats-less
-    (``functions/delta_log.py:synth_delta_partitioned``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_partitioned
-
-        return synth_delta_partitioned
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_partitioned``).""")
 
 
 DELTA_PART_SCHEMA = T.StructType(
@@ -3095,18 +2128,10 @@ DELTA_PART_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_partitioned_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_partitioned_scan = _extractor(
+    "delta_log", "scan_delta_partitioned", DELTA_PART_SCHEMA,
     """Partition-pruned Delta planning per payload
-    (:func:`..functions.delta_log.scan_delta_partitioned`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_partitioned
-
-        return scan_delta_partitioned
-
-    return _extract_metadata(media, DELTA_PART_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_partitioned`).""")
 
 
 ICEBERG_TT_SCHEMA = T.StructType(
@@ -3128,33 +2153,16 @@ ICEBERG_TT_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_time_travel(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_time_travel = _extractor(
+    "iceberg_scan", "scan_iceberg_time_travel", ICEBERG_TT_SCHEMA,
     """Per-snapshot point lookup over the Iceberg fixture
-    (:func:`..functions.iceberg_scan.scan_iceberg_time_travel`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_time_travel
-
-        return scan_iceberg_time_travel
-
-    return _extract_metadata(media, ICEBERG_TT_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg_time_travel`).""")
 
 
-def synthesize_avro_logical_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_avro_logical_media = _synthesizer("avro_scan", "synth_avro_logical",
     """id column -> (media_id, payload) of Avro containers whose
     schema carries logical-type annotations: date, timestamp-micros,
-    decimal (``functions/avro_scan.py:synth_avro_logical``)."""
-
-    def loader():
-        from ..functions.avro_scan import synth_avro_logical
-
-        return synth_avro_logical
-
-    return _synthesize_media(ids, id_col, loader)
+    decimal (``functions/avro_scan.py:synth_avro_logical``).""")
 
 
 AVRO_LOGICAL_SCHEMA = T.StructType(
@@ -3169,33 +2177,16 @@ AVRO_LOGICAL_SCHEMA = T.StructType(
 )
 
 
-def extract_avro_logical_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_avro_logical_scan = _extractor(
+    "avro_scan", "scan_avro_logical", AVRO_LOGICAL_SCHEMA,
     """Logical-type Avro container read per payload
-    (:func:`..functions.avro_scan.scan_avro_logical`)."""
-
-    def loader():
-        from ..functions.avro_scan import scan_avro_logical
-
-        return scan_avro_logical
-
-    return _extract_metadata(media, AVRO_LOGICAL_SCHEMA, loader, permissive)
+    (:func:`..functions.avro_scan.scan_avro_logical`).""")
 
 
-def synthesize_orc_bloom_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_orc_bloom_media = _synthesizer("orc_pages", "synth_orc_bloom",
     """id column -> (media_id, payload) of ORC files with
     BLOOM_FILTER_UTF8 indexes on both columns
-    (``functions/orc_pages.py:synth_orc_bloom``)."""
-
-    def loader():
-        from ..functions.orc_pages import synth_orc_bloom
-
-        return synth_orc_bloom
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/orc_pages.py:synth_orc_bloom``).""")
 
 
 ORC_BLOOM_SCHEMA = T.StructType(
@@ -3211,35 +2202,17 @@ ORC_BLOOM_SCHEMA = T.StructType(
 )
 
 
-def extract_orc_bloom_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_orc_bloom_scan = _extractor("orc_pages", "scan_orc_bloom", ORC_BLOOM_SCHEMA,
     """ORC bloom-filter membership scan per payload
-    (:func:`..functions.orc_pages.scan_orc_bloom`)."""
-
-    def loader():
-        from ..functions.orc_pages import scan_orc_bloom
-
-        return scan_orc_bloom
-
-    return _extract_metadata(media, ORC_BLOOM_SCHEMA, loader, permissive)
+    (:func:`..functions.orc_pages.scan_orc_bloom`).""")
 
 
-def synthesize_delta_dv_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_dv_media = _synthesizer("delta_log", "synth_delta_dv",
     """id column -> (media_id, payload) of reader-version-3 Delta
     bundles with deletion vectors: checkpoint-carried inline DV,
     stored DVs sharing one ``.bin`` at two offsets, and a DV
     superseded by a later re-add
-    (``functions/delta_log.py:synth_delta_dv``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_dv
-
-        return synth_delta_dv
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_dv``).""")
 
 
 DELTA_DV_SCHEMA = T.StructType(
@@ -3261,34 +2234,16 @@ DELTA_DV_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_dv_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_dv_scan = _extractor("delta_log", "scan_delta_dv", DELTA_DV_SCHEMA,
     """Merge-on-read deletion-vector scan per bundle
-    (:func:`..functions.delta_log.scan_delta_dv`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_dv
-
-        return scan_delta_dv
-
-    return _extract_metadata(media, DELTA_DV_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_dv`).""")
 
 
-def synthesize_delta_cm_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_cm_media = _synthesizer("delta_log", "synth_delta_cm",
     """id column -> (media_id, payload) of reader-version-2 Delta
     bundles with column mapping (name mode on even seeds, id mode
     with a decoy field_id column on odd seeds,
-    ``functions/delta_log.py:synth_delta_cm``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_cm
-
-        return synth_delta_cm
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/delta_log.py:synth_delta_cm``).""")
 
 
 DELTA_CM_SCHEMA = T.StructType(
@@ -3306,95 +2261,43 @@ DELTA_CM_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_cm_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_cm_scan = _extractor("delta_log", "scan_delta_cm", DELTA_CM_SCHEMA,
     """Column-mapped Delta scan per bundle
-    (:func:`..functions.delta_log.scan_delta_cm`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_cm
-
-        return scan_delta_cm
-
-    return _extract_metadata(media, DELTA_CM_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_cm`).""")
 
 
-def synthesize_iceberg_time_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_time_media = _synthesizer("iceberg_scan", "synth_iceberg_time",
     """id column -> (media_id, payload) of Iceberg v2 tables
     partitioned by a TIME transform (hour/day/month/year rotation,
     ``functions/iceberg_scan.py:synth_iceberg_time``); served by the
-    same transform-generic v2 scan."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_time
-
-        return synth_iceberg_time
-
-    return _synthesize_media(ids, id_col, loader)
+    same transform-generic v2 scan.""")
 
 
-def extract_iceberg_time_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_time_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_v2", ICEBERG_V2_SCAN_SCHEMA,
     """Time-transform-partitioned v2 scan per bundle — same plan as
     :func:`extract_iceberg_v2_scan`
     (:func:`..functions.iceberg_scan.scan_iceberg_v2` is
-    transform-generic)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_v2
-
-        return scan_iceberg_v2
-
-    return _extract_metadata(media, ICEBERG_V2_SCAN_SCHEMA, loader, permissive)
+    transform-generic).""")
 
 
-def synthesize_iceberg_seq_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_seq_media = _synthesizer("iceberg_scan", "synth_iceberg_seq",
     """id column -> (media_id, payload) of Iceberg v2 tables whose
     equality delete sits BETWEEN two data generations by sequence
-    number (``functions/iceberg_scan.py:synth_iceberg_seq``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_seq
-
-        return synth_iceberg_seq
-
-    return _synthesize_media(ids, id_col, loader)
+    number (``functions/iceberg_scan.py:synth_iceberg_seq``).""")
 
 
-def extract_iceberg_seq_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_seq_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_v2", ICEBERG_V2_SCAN_SCHEMA,
     """Sequence-aware v2 scan per bundle — same transform-generic
-    plan as :func:`extract_iceberg_v2_scan`."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_v2
-
-        return scan_iceberg_v2
-
-    return _extract_metadata(media, ICEBERG_V2_SCAN_SCHEMA, loader, permissive)
+    plan as :func:`extract_iceberg_v2_scan`.""")
 
 
-def synthesize_orc_scalars_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_orc_scalars_media = _synthesizer("orc_pages", "synth_orc_scalars",
     """id column -> (media_id, payload) of ORC files carrying the
     five remaining scalar shapes — boolean, double,
     timestamp_instant, date, decimal — with per-column nulls
-    (``functions/orc_pages.py:synth_orc_scalars``)."""
-
-    def loader():
-        from ..functions.orc_pages import synth_orc_scalars
-
-        return synth_orc_scalars
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/orc_pages.py:synth_orc_scalars``).""")
 
 
 ORC_SCALARS_SCHEMA = T.StructType(
@@ -3410,34 +2313,17 @@ ORC_SCALARS_SCHEMA = T.StructType(
 )
 
 
-def extract_orc_scalars_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_orc_scalars_scan = _extractor(
+    "orc_pages", "scan_orc_scalars", ORC_SCALARS_SCHEMA,
     """Scalar-type stripe decode per payload
-    (:func:`..functions.orc_pages.scan_orc_scalars`)."""
-
-    def loader():
-        from ..functions.orc_pages import scan_orc_scalars
-
-        return scan_orc_scalars
-
-    return _extract_metadata(media, ORC_SCALARS_SCHEMA, loader, permissive)
+    (:func:`..functions.orc_pages.scan_orc_scalars`).""")
 
 
-def synthesize_avro_evolved_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_avro_evolved_media = _synthesizer("avro_scan", "synth_avro_evolved",
     """id column -> (media_id, payload) of Avro containers written
     under ROTATING writer schemas (v1 even seeds / v2 odd) that must
     both resolve against one reader schema
-    (``functions/avro_scan.py:synth_avro_evolved``)."""
-
-    def loader():
-        from ..functions.avro_scan import synth_avro_evolved
-
-        return synth_avro_evolved
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/avro_scan.py:synth_avro_evolved``).""")
 
 
 AVRO_EVOLVED_SCHEMA = T.StructType(
@@ -3452,33 +2338,16 @@ AVRO_EVOLVED_SCHEMA = T.StructType(
 )
 
 
-def extract_avro_evolved_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_avro_evolved_scan = _extractor(
+    "avro_scan", "scan_avro_evolved", AVRO_EVOLVED_SCHEMA,
     """Reader-schema-resolved container scan per payload
-    (:func:`..functions.avro_scan.scan_avro_evolved`)."""
-
-    def loader():
-        from ..functions.avro_scan import scan_avro_evolved
-
-        return scan_avro_evolved
-
-    return _extract_metadata(media, AVRO_EVOLVED_SCHEMA, loader, permissive)
+    (:func:`..functions.avro_scan.scan_avro_evolved`).""")
 
 
-def synthesize_delta_tt_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_tt_media = _synthesizer("delta_log", "synth_delta_tt",
     """id column -> (media_id, payload) of three-version Delta
     bundles (checkpoint -> replace -> append,
-    ``functions/delta_log.py:synth_delta_tt``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_tt
-
-        return synth_delta_tt
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/delta_log.py:synth_delta_tt``).""")
 
 
 DELTA_TT_SCHEMA = T.StructType(
@@ -3497,64 +2366,30 @@ DELTA_TT_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_tt_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_tt_scan = _extractor(
+    "delta_log", "scan_delta_time_travel", DELTA_TT_SCHEMA,
     """Per-version point lookup over the replay trace
-    (:func:`..functions.delta_log.scan_delta_time_travel`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_time_travel
-
-        return scan_delta_time_travel
-
-    return _extract_metadata(media, DELTA_TT_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_time_travel`).""")
 
 
-def synthesize_iceberg_multi_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_multi_media = _synthesizer("iceberg_scan", "synth_iceberg_multi",
     """id column -> (media_id, payload) of Iceberg v2 tables under a
     TWO-field partition spec (truncate x bucket) laid out so only
     the conjunction prunes
-    (``functions/iceberg_scan.py:synth_iceberg_multi``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_multi
-
-        return synth_iceberg_multi
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_multi``).""")
 
 
-def extract_iceberg_multi_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_multi_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_v2", ICEBERG_V2_SCAN_SCHEMA,
     """Conjunction-pruned v2 scan per bundle — the same
-    transform-generic plan as :func:`extract_iceberg_v2_scan`."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_v2
-
-        return scan_iceberg_v2
-
-    return _extract_metadata(media, ICEBERG_V2_SCAN_SCHEMA, loader, permissive)
+    transform-generic plan as :func:`extract_iceberg_v2_scan`.""")
 
 
-def synthesize_delta_v2cp_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_v2cp_media = _synthesizer("delta_log", "synth_delta_v2cp",
     """id column -> (media_id, payload) of v2-checkpoint Delta
     bundles: UUID-named checkpoint + checkpointMetadata + two
     sidecar parquets holding the add actions
-    (``functions/delta_log.py:synth_delta_v2cp``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_v2cp
-
-        return synth_delta_v2cp
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_v2cp``).""")
 
 
 DELTA_V2CP_SCHEMA = T.StructType(
@@ -3574,33 +2409,15 @@ DELTA_V2CP_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_v2cp_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_v2cp_scan = _extractor("delta_log", "scan_delta_v2cp", DELTA_V2CP_SCHEMA,
     """V2-checkpoint snapshot scan per bundle
-    (:func:`..functions.delta_log.scan_delta_v2cp`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_v2cp
-
-        return scan_delta_v2cp
-
-    return _extract_metadata(media, DELTA_V2CP_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_v2cp`).""")
 
 
-def synthesize_delta_dvcm_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_dvcm_media = _synthesizer("delta_log", "synth_delta_dvcm",
     """id column -> (media_id, payload) of reader-v3 Delta bundles
     with BOTH deletion vectors and name-mode column mapping active
-    (``functions/delta_log.py:synth_delta_dvcm``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_dvcm
-
-        return synth_delta_dvcm
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_dvcm``).""")
 
 
 DELTA_DVCM_SCHEMA = T.StructType(
@@ -3618,33 +2435,15 @@ DELTA_DVCM_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_dvcm_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_dvcm_scan = _extractor("delta_log", "scan_delta_dvcm", DELTA_DVCM_SCHEMA,
     """Composed DV + column-mapping scan per bundle
-    (:func:`..functions.delta_log.scan_delta_dvcm`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_dvcm
-
-        return scan_delta_dvcm
-
-    return _extract_metadata(media, DELTA_DVCM_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_dvcm`).""")
 
 
-def synthesize_iceberg_puffin_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_puffin_media = _synthesizer("iceberg_scan", "synth_iceberg_puffin",
     """id column -> (media_id, payload) of Iceberg tables whose
     deletion vectors live in a REAL Puffin container
-    (``functions/iceberg_scan.py:synth_iceberg_puffin``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_puffin
-
-        return synth_iceberg_puffin
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_puffin``).""")
 
 
 ICEBERG_PUFFIN_SCHEMA = T.StructType(
@@ -3661,33 +2460,16 @@ ICEBERG_PUFFIN_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_puffin_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_puffin_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_puffin", ICEBERG_PUFFIN_SCHEMA,
     """Puffin-DV merge-on-read scan per bundle
-    (:func:`..functions.iceberg_scan.scan_iceberg_puffin`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_puffin
-
-        return scan_iceberg_puffin
-
-    return _extract_metadata(media, ICEBERG_PUFFIN_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg_puffin`).""")
 
 
-def synthesize_delta_cdf_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_cdf_media = _synthesizer("delta_log", "synth_delta_cdf",
     """id column -> (media_id, payload) of CDF-enabled Delta bundles:
     four commits — insert, cdc-file update, derived delete, no-op
-    compaction (``functions/delta_log.py:synth_delta_cdf``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_cdf
-
-        return synth_delta_cdf
-
-    return _synthesize_media(ids, id_col, loader)
+    compaction (``functions/delta_log.py:synth_delta_cdf``).""")
 
 
 DELTA_CDF_SCHEMA = T.StructType(
@@ -3712,34 +2494,16 @@ DELTA_CDF_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_cdf_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_cdf_scan = _extractor("delta_log", "scan_delta_cdf", DELTA_CDF_SCHEMA,
     """Change-data-feed read per bundle
-    (:func:`..functions.delta_log.scan_delta_cdf`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_cdf
-
-        return scan_delta_cdf
-
-    return _extract_metadata(media, DELTA_CDF_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_cdf`).""")
 
 
-def synthesize_iceberg_str_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_str_media = _synthesizer("iceberg_scan", "synth_iceberg_str",
     """id column -> (media_id, payload) of Iceberg tables with a
     STRING partition key under a two-field
     ``(truncate[2], bucket[8])`` spec
-    (``functions/iceberg_scan.py:synth_iceberg_str``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_str
-
-        return synth_iceberg_str
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_str``).""")
 
 
 ICEBERG_STR_SCHEMA = T.StructType(
@@ -3757,33 +2521,16 @@ ICEBERG_STR_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_str_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_str_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_str", ICEBERG_STR_SCHEMA,
     """String-key transform-pruned Iceberg scan per bundle
-    (:func:`..functions.iceberg_scan.scan_iceberg_str`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_str
-
-        return scan_iceberg_str
-
-    return _extract_metadata(media, ICEBERG_STR_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg_str`).""")
 
 
-def synthesize_orc_nested_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_orc_nested_media = _synthesizer("orc_pages", "synth_orc_nested",
     """id column -> (media_id, payload) of nested-type ORC files
     (struct + list + map, compression rotating by id) written by
-    pyarrow (``functions/orc_pages.py:synth_orc_nested``)."""
-
-    def loader():
-        from ..functions.orc_pages import synth_orc_nested
-
-        return synth_orc_nested
-
-    return _synthesize_media(ids, id_col, loader)
+    pyarrow (``functions/orc_pages.py:synth_orc_nested``).""")
 
 
 ORC_NESTED_SCHEMA = T.StructType(
@@ -3810,34 +2557,16 @@ ORC_NESTED_SCHEMA = T.StructType(
 )
 
 
-def extract_orc_nested_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_orc_nested_scan = _extractor("orc_pages", "scan_orc_nested", ORC_NESTED_SCHEMA,
     """Nested-type ORC decode per payload
-    (:func:`..functions.orc_pages.scan_orc_nested`)."""
-
-    def loader():
-        from ..functions.orc_pages import scan_orc_nested
-
-        return scan_orc_nested
-
-    return _extract_metadata(media, ORC_NESTED_SCHEMA, loader, permissive)
+    (:func:`..functions.orc_pages.scan_orc_nested`).""")
 
 
-def synthesize_iceberg_dec_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_dec_media = _synthesizer("iceberg_scan", "synth_iceberg_dec",
     """id column -> (media_id, payload) of Iceberg tables with a
     DECIMAL(9,2) partition key under a two-field
     ``(truncate[500], bucket[8])`` spec
-    (``functions/iceberg_scan.py:synth_iceberg_dec``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_dec
-
-        return synth_iceberg_dec
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_dec``).""")
 
 
 ICEBERG_DEC_SCHEMA = T.StructType(
@@ -3855,33 +2584,16 @@ ICEBERG_DEC_SCHEMA = T.StructType(
 )
 
 
-def extract_iceberg_dec_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_iceberg_dec_scan = _extractor(
+    "iceberg_scan", "scan_iceberg_dec", ICEBERG_DEC_SCHEMA,
     """Decimal-key transform-pruned Iceberg scan per bundle
-    (:func:`..functions.iceberg_scan.scan_iceberg_dec`)."""
-
-    def loader():
-        from ..functions.iceberg_scan import scan_iceberg_dec
-
-        return scan_iceberg_dec
-
-    return _extract_metadata(media, ICEBERG_DEC_SCHEMA, loader, permissive)
+    (:func:`..functions.iceberg_scan.scan_iceberg_dec`).""")
 
 
-def synthesize_delta_cdf_cm_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_cdf_cm_media = _synthesizer("delta_log", "synth_delta_cdf_cm",
     """id column -> (media_id, payload) of CDF-enabled Delta bundles
     on a name-mapped (reader v2) table
-    (``functions/delta_log.py:synth_delta_cdf_cm``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_cdf_cm
-
-        return synth_delta_cdf_cm
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_cdf_cm``).""")
 
 
 DELTA_CDF_CM_SCHEMA = T.StructType(
@@ -3890,18 +2602,10 @@ DELTA_CDF_CM_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_cdf_cm_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_cdf_cm_scan = _extractor(
+    "delta_log", "scan_delta_cdf_cm", DELTA_CDF_CM_SCHEMA,
     """Composed change-data-feed + column-mapping read per bundle
-    (:func:`..functions.delta_log.scan_delta_cdf_cm`)."""
-
-    def loader():
-        from ..functions.delta_log import scan_delta_cdf_cm
-
-        return scan_delta_cdf_cm
-
-    return _extract_metadata(media, DELTA_CDF_CM_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.scan_delta_cdf_cm`).""")
 
 
 ICEBERG_FILES_SCHEMA = T.StructType(
@@ -3918,76 +2622,20 @@ ICEBERG_FILES_SCHEMA = T.StructType(
 )
 
 
-def explode_iceberg_files(media: DataFrame) -> DataFrame:
+explode_iceberg_files = _exploder(
+    "iceberg_scan", "list_iceberg_files", ICEBERG_FILES_SCHEMA,
     """ONE OUTPUT ROW PER MANIFEST ENTRY — the ``files`` metadata
     table (:func:`..functions.iceberg_scan.list_iceberg_files`).
     Python does only the manifest-layer byte decode and emits typed
     columns; no data parquet is ever opened, so at 100 TB this costs
-    manifest bytes, not table bytes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.iceberg_scan import list_iceberg_files
-
-        cols = [f.name for f in ICEBERG_FILES_SCHEMA.fields]
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for entry in list_iceberg_files(bytes(p)):
-                    rows["media_id"].append(int(mid))
-                    for k, v in entry.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=ICEBERG_FILES_SCHEMA)
+    manifest bytes, not table bytes.""")
 
 
-def synthesize_iceberg_inspect_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_inspect_media = _synthesizer("iceberg_scan", "synth_iceberg_inspect",
     """id column -> (media_id, payload) of three-snapshot Iceberg
     tables (append/append/overwrite, odd seeds rolled back) with NO
     data parquet in the bundle
-    (``functions/iceberg_scan.py:synth_iceberg_inspect``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_inspect
-
-        return synth_iceberg_inspect
-
-    return _synthesize_media(ids, id_col, loader)
-
-
-def _explode_rows(
-    media: DataFrame, schema, module_name: str, fn_name: str
-) -> DataFrame:
-    """Shared mapInPandas explode for the table-ops views: one
-    output row per list element of the named ``functions.<module>``
-    reader.  Metadata bytes only — the inspection bundles carry no
-    data parquet, so a reader that tried to open one would fail
-    loudly in every row."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import importlib
-
-        mod = importlib.import_module(
-            f"datawarehouseproject_spark.functions.{module_name}"
-        )
-        fn = getattr(mod, fn_name)
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for entry in fn(bytes(p)):
-                    rows["media_id"].append(int(mid))
-                    for k, v in entry.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
-
-
-def _explode_inspect(media: DataFrame, schema, fn_name: str) -> DataFrame:
-    return _explode_rows(media, schema, "iceberg_scan", fn_name)
+    (``functions/iceberg_scan.py:synth_iceberg_inspect``).""")
 
 
 ICEBERG_SNAPSHOTS_SCHEMA = T.StructType(
@@ -4039,36 +2687,28 @@ ICEBERG_PARTITIONS_SCHEMA = T.StructType(
 )
 
 
-def explode_iceberg_snapshots(media: DataFrame) -> DataFrame:
+explode_iceberg_snapshots = _exploder(
+    "iceberg_scan", "iceberg_snapshots_table", ICEBERG_SNAPSHOTS_SCHEMA,
     """One row per snapshot — ``tbl.snapshots``
-    (:func:`..functions.iceberg_scan.iceberg_snapshots_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_SNAPSHOTS_SCHEMA, "iceberg_snapshots_table"
-    )
+    (:func:`..functions.iceberg_scan.iceberg_snapshots_table`).""")
 
 
-def explode_iceberg_history(media: DataFrame) -> DataFrame:
+explode_iceberg_history = _exploder(
+    "iceberg_scan", "iceberg_history_table", ICEBERG_HISTORY_SCHEMA,
     """One row per snapshot-log entry — ``tbl.history``
-    (:func:`..functions.iceberg_scan.iceberg_history_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_HISTORY_SCHEMA, "iceberg_history_table"
-    )
+    (:func:`..functions.iceberg_scan.iceberg_history_table`).""")
 
 
-def explode_iceberg_manifests(media: DataFrame) -> DataFrame:
+explode_iceberg_manifests = _exploder(
+    "iceberg_scan", "iceberg_manifests_table", ICEBERG_MANIFESTS_SCHEMA,
     """One row per current-snapshot manifest — ``tbl.manifests``
-    (:func:`..functions.iceberg_scan.iceberg_manifests_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_MANIFESTS_SCHEMA, "iceberg_manifests_table"
-    )
+    (:func:`..functions.iceberg_scan.iceberg_manifests_table`).""")
 
 
-def explode_iceberg_partitions(media: DataFrame) -> DataFrame:
+explode_iceberg_partitions = _exploder(
+    "iceberg_scan", "iceberg_partitions_table", ICEBERG_PARTITIONS_SCHEMA,
     """One row per live partition — ``tbl.partitions``
-    (:func:`..functions.iceberg_scan.iceberg_partitions_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_PARTITIONS_SCHEMA, "iceberg_partitions_table"
-    )
+    (:func:`..functions.iceberg_scan.iceberg_partitions_table`).""")
 
 
 ICEBERG_REFS_SCHEMA = T.StructType(
@@ -4099,36 +2739,22 @@ ICEBERG_ALL_MANIFESTS_SCHEMA = T.StructType(
 )
 
 
-def explode_iceberg_refs(media: DataFrame) -> DataFrame:
+explode_iceberg_refs = _exploder(
+    "iceberg_scan", "iceberg_refs_table", ICEBERG_REFS_SCHEMA,
     """One row per branch/tag with per-ref live totals —
-    ``tbl.refs`` (:func:`..functions.iceberg_scan.iceberg_refs_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_REFS_SCHEMA, "iceberg_refs_table"
-    )
+    ``tbl.refs`` (:func:`..functions.iceberg_scan.iceberg_refs_table`).""")
 
 
-def explode_iceberg_all_manifests(media: DataFrame) -> DataFrame:
+explode_iceberg_all_manifests = _exploder(
+    "iceberg_scan", "iceberg_all_manifests_table", ICEBERG_ALL_MANIFESTS_SCHEMA,
     """One row per (snapshot, manifest) — ``tbl.all_manifests``
-    (:func:`..functions.iceberg_scan.iceberg_all_manifests_table`)."""
-    return _explode_inspect(
-        media, ICEBERG_ALL_MANIFESTS_SCHEMA,
-        "iceberg_all_manifests_table",
-    )
+    (:func:`..functions.iceberg_scan.iceberg_all_manifests_table`).""")
 
 
-def synthesize_delta_history_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_delta_history_media = _synthesizer("delta_log", "synth_delta_history",
     """id column -> (media_id, payload) of checkpoint-less Delta
     logs with commitInfo on every commit and tombstones
-    (``functions/delta_log.py:synth_delta_history``)."""
-
-    def loader():
-        from ..functions.delta_log import synth_delta_history
-
-        return synth_delta_history
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/delta_log.py:synth_delta_history``).""")
 
 
 DELTA_HISTORY_SCHEMA = T.StructType(
@@ -4153,39 +2779,22 @@ DELTA_VACUUM_SCHEMA = T.StructType(
 )
 
 
-def _explode_delta(media: DataFrame, schema, fn_name: str) -> DataFrame:
-    return _explode_rows(media, schema, "delta_log", fn_name)
-
-
-def explode_delta_history(media: DataFrame) -> DataFrame:
+explode_delta_history = _exploder(
+    "delta_log", "delta_history_table", DELTA_HISTORY_SCHEMA,
     """One row per commit — ``DESCRIBE HISTORY``
-    (:func:`..functions.delta_log.delta_history_table`)."""
-    return _explode_delta(
-        media, DELTA_HISTORY_SCHEMA, "delta_history_table"
-    )
+    (:func:`..functions.delta_log.delta_history_table`).""")
 
 
-def explode_delta_vacuum(media: DataFrame) -> DataFrame:
+explode_delta_vacuum = _exploder(
+    "delta_log", "delta_vacuum_candidates", DELTA_VACUUM_SCHEMA,
     """One row per tombstone — ``VACUUM DRY RUN``
-    (:func:`..functions.delta_log.delta_vacuum_candidates`)."""
-    return _explode_delta(
-        media, DELTA_VACUUM_SCHEMA, "delta_vacuum_candidates"
-    )
+    (:func:`..functions.delta_log.delta_vacuum_candidates`).""")
 
 
-def synthesize_iceberg_expire_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_iceberg_expire_media = _synthesizer("iceberg_scan", "synth_iceberg_expire",
     """id column -> (media_id, payload) of 5-snapshot Iceberg tables
     with partially-pinned history
-    (``functions/iceberg_scan.py:synth_iceberg_expire``)."""
-
-    def loader():
-        from ..functions.iceberg_scan import synth_iceberg_expire
-
-        return synth_iceberg_expire
-
-    return _synthesize_media(ids, id_col, loader)
+    (``functions/iceberg_scan.py:synth_iceberg_expire``).""")
 
 
 ICEBERG_EXPIRE_SCHEMA = T.StructType(
@@ -4199,13 +2808,11 @@ ICEBERG_EXPIRE_SCHEMA = T.StructType(
 )
 
 
-def explode_iceberg_expire(media: DataFrame) -> DataFrame:
+explode_iceberg_expire = _exploder(
+    "iceberg_scan", "iceberg_expire_snapshots_plan", ICEBERG_EXPIRE_SCHEMA,
     """One row per snapshot with GC disposition —
     ``expire_snapshots`` dry run (:func:`..functions.iceberg_scan.
-    iceberg_expire_snapshots_plan`)."""
-    return _explode_inspect(
-        media, ICEBERG_EXPIRE_SCHEMA, "iceberg_expire_snapshots_plan"
-    )
+    iceberg_expire_snapshots_plan`).""")
 
 
 DELTA_DETAIL_SCHEMA = T.StructType(
@@ -4220,33 +2827,16 @@ DELTA_DETAIL_SCHEMA = T.StructType(
 )
 
 
-def extract_delta_detail(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_delta_detail = _extractor(
+    "delta_log", "delta_detail_table", DELTA_DETAIL_SCHEMA,
     """One summary row per table — ``DESCRIBE DETAIL``
-    (:func:`..functions.delta_log.delta_detail_table`)."""
-
-    def loader():
-        from ..functions.delta_log import delta_detail_table
-
-        return delta_detail_table
-
-    return _extract_metadata(media, DELTA_DETAIL_SCHEMA, loader, permissive)
+    (:func:`..functions.delta_log.delta_detail_table`).""")
 
 
-def synthesize_hudi_media(
-    ids: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+synthesize_hudi_media = _synthesizer("hudi_scan", "synth_hudi",
     """id column -> (media_id, payload) of Apache Hudi COPY_ON_WRITE
     table bundles (timeline + file slices + write stats,
-    ``functions/hudi_scan.py:synth_hudi``)."""
-
-    def loader():
-        from ..functions.hudi_scan import synth_hudi
-
-        return synth_hudi
-
-    return _synthesize_media(ids, id_col, loader)
+    ``functions/hudi_scan.py:synth_hudi``).""")
 
 
 HUDI_SCAN_SCHEMA = T.StructType(
@@ -4265,15 +2855,17 @@ HUDI_SCAN_SCHEMA = T.StructType(
 )
 
 
-def extract_hudi_scan(
-    media: DataFrame, permissive: bool = False
-) -> DataFrame:
+extract_hudi_scan = _extractor("hudi_scan", "scan_hudi", HUDI_SCAN_SCHEMA,
     """Hudi COW timeline + file-slice snapshot readout per payload
-    (:func:`..functions.hudi_scan.scan_hudi`)."""
+    (:func:`..functions.hudi_scan.scan_hudi`).""")
 
-    def loader():
-        from ..functions.hudi_scan import scan_hudi
 
-        return scan_hudi
-
-    return _extract_metadata(media, HUDI_SCAN_SCHEMA, loader, permissive)
+# Every binding above was built by a factory as ``synthesize``,
+# ``extract`` or ``explode``; give it its public name, for help() and
+# tracebacks.
+for _name, _binding in list(globals().items()):
+    if getattr(_binding, "__qualname__", "").startswith(
+        ("_synthesizer.", "_extractor.", "_exploder.")
+    ):
+        _binding.__name__ = _binding.__qualname__ = _name
+del _name, _binding

@@ -64,6 +64,10 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
+#: epoch seconds of the event time, the column the state function reads
+_EPOCH = "__epoch_s"
+
+
 def sessionize(
     events: DataFrame, gap_seconds: int = 1800, ts_col: str = "ts"
 ) -> DataFrame:
@@ -74,31 +78,43 @@ def sessionize(
     an event beyond the gap closes it. Streaming-only (state +
     timeouts); the batch twin for tests is a window/lag plan in
     :func:`sessionize_batch`.
+
+    The gap is event time: a ``gap_seconds`` watermark on ``ts_col``
+    and an event-time timeout at ``last event + gap``, so an open
+    session closes once the watermark passes its end. Processing-time
+    timeouts would keep an ``availableNow`` query scheduling batches
+    while any session is open, so it would never terminate. The
+    function reads epoch seconds cast on the JVM side and returns
+    UTC-aware timestamps: pandas sees Spark timestamps as naive
+    session-local times, which would shift every timeout by the
+    session time zone's offset.
     """
+
+    def sessions(closed):
+        return pd.DataFrame(
+            {
+                "user_id": [c[0] for c in closed],
+                "session_start": [pd.Timestamp(c[1], unit="s", tz="UTC") for c in closed],
+                "session_end": [pd.Timestamp(c[2], unit="s", tz="UTC") for c in closed],
+                "n_events": [c[3] for c in closed],
+            }
+        )
 
     def fn(key, pdf_iter, state: GroupState):
         (user_id,) = key
         if state.hasTimedOut:
             start, last, n = state.get
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="s")],
-                    "session_end": [pd.Timestamp(last, unit="s")],
-                    "n_events": [n],
-                }
-            )
+            yield sessions([(user_id, start, last, n)])
             return
-        rows = pd.concat(list(pdf_iter)).sort_values("ts")
+        rows = pd.concat(list(pdf_iter)).sort_values(_EPOCH)
         out = []
         if state.exists:
             start, last, n = state.get
         else:
             start = last = None
             n = 0
-        for t in rows["ts"]:
-            sec = t.timestamp()
+        for sec in rows[_EPOCH]:
             if start is None:
                 start, last, n = sec, sec, 1
             elif sec - last > gap_seconds:
@@ -107,23 +123,19 @@ def sessionize(
             else:
                 last, n = sec, n + 1
         state.update((float(start), float(last), int(n)))
-        state.setTimeoutDuration(gap_seconds * 1000)
+        state.setTimeoutTimestamp(int((last + gap_seconds) * 1000))
         if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [o[0] for o in out],
-                    "session_start": [pd.Timestamp(o[1], unit="s") for o in out],
-                    "session_end": [pd.Timestamp(o[2], unit="s") for o in out],
-                    "n_events": [o[3] for o in out],
-                }
-            )
+            yield sessions(out)
 
+    events = events.withWatermark(ts_col, f"{gap_seconds} seconds").withColumn(
+        _EPOCH, F.col(ts_col).cast("double")
+    )
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
         outputStructType=SESSION_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

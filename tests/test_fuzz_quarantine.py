@@ -45,6 +45,7 @@ def _cases():
         parquet_pageindex,
         parquet_pages,
         png,
+        protowire,
         sqlite_scan,
         tiff,
         warc,
@@ -347,6 +348,21 @@ def _cases():
             arrow_ipc.synth_arrow_dict_stream,
             arrow_ipc.decode_arrow_stream,
         ),
+        # the parse functions the extract_* operators call directly
+        ("deflate_decode", inflate.synth_deflate, inflate.decode_deflate),
+        ("id3", mpeg_audio.synth_mp3_id3, mpeg_audio.parse_id3),
+        ("proto", protowire.synth_record, protowire.parse_record),
+        ("xz_text", lzma_codec.synth_xz_text, lzma_codec.decode_xz_text),
+        ("zstd_text", zstd_codec.synth_zstd, zstd_codec.decode_zstd_text),
+        (
+            "h264_ipcm_sums",
+            h264.synth_h264_ipcm,
+            h264.decode_h264_ipcm_sums,
+        ),
+        ("bmp_features", bmp.synth_bmp, bmp.decode_bmp_features),
+        ("png_features", png.synth_png, png.decode_png_features),
+        ("gif_features", gif.synth_gif, gif.decode_gif_features),
+        ("jpeg_features", jpeg.synth_jpeg420, jpeg.decode_jpeg_features),
     ]
 
 
@@ -378,3 +394,27 @@ def test_mutation_and_truncation_only_raise_valueerror(name, synth, scan):
             scan(bytes(payload[:cut]))
         except ValueError:
             pass
+
+
+def test_every_permissive_parser_is_fuzzed(multimodal_kernel_calls):
+    """A parser an operator runs with ``permissive=True`` must be in
+    :func:`_cases`, or a non-ValueError escape from it goes unseen."""
+    import importlib
+
+    fuzzed = {scan for _, _, scan in _cases()}
+    permissive = {
+        (module, fn)
+        for calls in multimodal_kernel_calls.values()
+        for _, module, fn, is_permissive in calls
+        if is_permissive
+    }
+    assert len(permissive) > 60
+    missing = [
+        f"{module}.{fn}"
+        for module, fn in sorted(permissive)
+        if getattr(
+            importlib.import_module(f"datawarehouseproject_spark.functions.{module}"),
+            fn,
+        ) not in fuzzed
+    ]
+    assert missing == []
