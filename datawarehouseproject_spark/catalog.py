@@ -241,13 +241,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_dtype == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test-data table present under ``sf_dir``."""
-    cat = Catalog(spark, sf_dir)
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        if os.path.exists(cat.path(name)):
-            out[name] = cat.table(name)
-    return out

@@ -122,3 +122,22 @@ def decode_adpcm(payload: bytes) -> np.ndarray:
         index = _clamp_idx(index + INDEX_TABLE[nib & 7])
         out[i] = predictor
     return out
+
+
+def wav_roundtrip_features(payload: bytes) -> dict:
+    """The ``adpcm_roundtrip_features`` row of a WAV payload: take
+    channel 0, encode it to 4-bit ADPCM, decode back, and report the
+    sample count, the compressed size, the amplitude sum of the
+    reconstruction and its max absolute error against the original."""
+    from .wav import decode_wav
+
+    _, _, frames = decode_wav(payload)
+    mono = frames[:, 0].astype(np.int64)
+    enc = encode_adpcm(mono)
+    rec = decode_adpcm(enc).astype(np.int64)
+    return {
+        "n_samples": int(mono.size),
+        "encoded_bytes": len(enc),
+        "sum_amplitude": int(rec.sum()),
+        "max_abs_error": int(np.abs(rec - mono).max()) if mono.size else 0,
+    }

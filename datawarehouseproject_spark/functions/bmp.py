@@ -139,6 +139,26 @@ def decode_bmp_features(payload: bytes) -> dict:
     return channel_features(*decode_bmp(payload))
 
 
+PHASH_W, PHASH_H = 7, 9  # 63 bits — fits signed BIGINT exactly
+
+
+def average_hash(width: int, height: int, pixels) -> dict:
+    """The ``image_phash`` row of any decoded RGB image: nearest-
+    neighbor resample to a fixed 7×9 grid, integer grayscale
+    ``(r+g+b) div 3``, threshold each cell at the integer mean
+    ``sum div 63``, pack the bits little-endian (row-major, y*W+x)."""
+    grid = resize_nearest(pixels, PHASH_W, PHASH_H).astype(np.int64)
+    gray = grid.sum(axis=2) // 3  # integer grayscale per cell
+    mean = int(gray.sum()) // (PHASH_W * PHASH_H)
+    bits = (gray >= mean).reshape(-1).astype(np.int64)
+    return {"phash": int((bits << np.arange(PHASH_W * PHASH_H)).sum())}
+
+
+def decode_bmp_phash(payload: bytes) -> dict:
+    """:func:`average_hash` of :func:`decode_bmp`."""
+    return average_hash(*decode_bmp(payload))
+
+
 def _parse_palette(payload: bytes, hdr_size: int) -> np.ndarray:
     """Read the color table (BGRX quads after the info header) as a
     ``(256, 3)`` RGB uint8 array.  ``biClrUsed == 0`` means a full

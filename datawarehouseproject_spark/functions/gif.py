@@ -256,6 +256,13 @@ def decode_gif_features(payload: bytes) -> dict:
     return channel_features(*decode_gif(payload))
 
 
+def decode_gif_phash(payload: bytes) -> dict:
+    """:func:`..bmp.average_hash` of :func:`decode_gif`."""
+    from .bmp import average_hash
+
+    return average_hash(*decode_gif(payload))
+
+
 def synth_gif_index(seed: int, x: int, y: int) -> int:
     """Deterministic palette index — mirrored in the DuckDB oracle."""
     return (seed * 3 + x * 11 + y * 7) % 256

@@ -1333,6 +1333,13 @@ def decode_jpeg_features(payload: bytes) -> dict:
     return channel_features(*decode_jpeg(payload))
 
 
+def decode_jpeg_phash(payload: bytes) -> dict:
+    """:func:`..bmp.average_hash` of :func:`decode_jpeg`."""
+    from .bmp import average_hash
+
+    return average_hash(*decode_jpeg(payload))
+
+
 # ---------------------------------------------------------------------------
 # Deterministic synthesis for the oracle-checked registry query.
 # ---------------------------------------------------------------------------
@@ -1342,13 +1349,6 @@ def synth_jpeg_size(seed: int) -> tuple[int, int]:
     """12..33 × 10..34, mostly non-multiples of 8 so edge-block
     padding/cropping is exercised on every run."""
     return 12 + (seed % 4) * 7, 10 + (seed % 5) * 6
-
-
-def synth_jpeg_block_value(seed: int, bx: int, by: int) -> int:
-    """Gray value of the 8×8 block at block coords (bx, by) —
-    mirrored verbatim in the DuckDB oracle as
-    ``(seed*7 + (x//8)*13 + (y//8)*29) % 256``."""
-    return (seed * 7 + bx * 13 + by * 29) % 256
 
 
 def synth_jpeg_pixels(seed: int, width: int, height: int) -> np.ndarray:

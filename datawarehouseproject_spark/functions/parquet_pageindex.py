@@ -8,8 +8,8 @@ between the row groups and the footer and addressed from each
 ColumnChunk's ``column_index_offset/length`` (fields 6/7) and
 ``offset_index_offset/length`` (fields 4/5).  A reader that consults
 them prunes pages server-side before any decompression — the
-row-group-level min/max skipping this repo's versioned tables already
-do, pushed one level deeper.
+file-level min/max skipping this repo's Delta tables already do,
+pushed two levels deeper.
 
 Wire structs (parquet.thrift):
 

@@ -264,6 +264,13 @@ def decode_png_features(payload: bytes) -> dict:
     return channel_features(*decode_png(payload))
 
 
+def decode_png_phash(payload: bytes) -> dict:
+    """:func:`..bmp.average_hash` of :func:`decode_png`."""
+    from .bmp import average_hash
+
+    return average_hash(*decode_png(payload))
+
+
 def _unfilter(
     lines: np.ndarray, width: int, height: int, bpp: int = _BPP
 ) -> np.ndarray:

@@ -371,33 +371,6 @@ def common_neighbor_candidates(
     )
 
 
-def edge_support(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
-    """Per-edge triangle support: (lo, hi, support) for every edge
-    that closes ≥1 triangle, via the degree-ORIENTED triangle join
-    (:func:`triangle_enumeration`) — each triangle contributes one
-    count to each of its three edges, so support falls out of an
-    explode + groupBy on the enumerated triples. Inherits the
-    O(sqrt(m)) wedge bound; edges in no triangle are absent (callers
-    coalesce to 0)."""
-    tri = triangle_enumeration(edges, src=src, dst=dst)
-    pairs = tri.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("node_a").alias("lo"), F.col("node_b").alias("hi")
-                ),
-                F.struct(
-                    F.col("node_a").alias("lo"), F.col("node_c").alias("hi")
-                ),
-                F.struct(
-                    F.col("node_b").alias("lo"), F.col("node_c").alias("hi")
-                ),
-            )
-        ).alias("e")
-    ).select("e.lo", "e.hi")
-    return pairs.groupBy("lo", "hi").agg(F.count("*").alias("support"))
-
-
 def k_truss(
     edges: DataFrame,
     k: int,

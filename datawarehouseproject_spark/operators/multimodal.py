@@ -32,8 +32,9 @@ payload as a row of NULL features with the message in ``decode_error``
 — right for web-scale corpora (Spark's PERMISSIVE reader mode +
 ``_corrupt_record``). Operators that rewrite payloads (resize,
 resample), emit two payloads per id, or reduce a whole decoded clip
-with numpy (``audio_frame_energy``, ``adpcm_roundtrip_features``,
-``image_phash``, ``decode_stub``) keep their own strict loop.
+with numpy (``audio_frame_energy``, ``decode_stub``) keep their own
+strict loop; ``audio_frame_energy`` raises the same
+``media_id=<id>: ...`` message.
 
 Where bytes are decoded: the image/audio/video decoders (BMP, PNG
 filters + Adam7 + palettes, GIF LZW, baseline/4:2:0/progressive JPEG,
@@ -482,14 +483,14 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-#: image codec -> (functions module, pixel decoder returning
-#: ``(width, height, rows)``, its ``IMAGE_FEATURE_SCHEMA`` row); serves
-#: ``extract_image_features`` and ``image_phash``
+#: image codec -> (functions module, its ``image_phash`` row, its
+#: ``IMAGE_FEATURE_SCHEMA`` row); serves ``extract_image_features`` and
+#: ``image_phash``
 _IMAGE_CODECS = {
-    "bmp": ("bmp", "decode_bmp", "decode_bmp_features"),
-    "png": ("png", "decode_png", "decode_png_features"),
-    "gif": ("gif", "decode_gif", "decode_gif_features"),
-    "jpeg": ("jpeg", "decode_jpeg", "decode_jpeg_features"),
+    "bmp": ("bmp", "decode_bmp_phash", "decode_bmp_features"),
+    "png": ("png", "decode_png_phash", "decode_png_features"),
+    "gif": ("gif", "decode_gif_phash", "decode_gif_features"),
+    "jpeg": ("jpeg", "decode_jpeg_phash", "decode_jpeg_features"),
 }
 
 
@@ -636,31 +637,13 @@ def adpcm_roundtrip_features(media: DataFrame) -> DataFrame:
     compressed size, amplitude sum of the reconstruction, and the
     max absolute reconstruction error vs the original.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions.adpcm import decode_adpcm, encode_adpcm
-        from ..functions.wav import decode_wav
-
-        for pdf in it:
-            out = {k: [] for k in ("media_id", "n_samples", "encoded_bytes",
-                                   "sum_amplitude", "max_abs_error")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, _, frames = decode_wav(bytes(p))
-                mono = frames[:, 0].astype(np.int64)
-                enc = encode_adpcm(mono)
-                rec = decode_adpcm(enc).astype(np.int64)
-                out["media_id"].append(int(mid))
-                out["n_samples"].append(int(mono.size))
-                out["encoded_bytes"].append(len(enc))
-                out["sum_amplitude"].append(int(rec.sum()))
-                out["max_abs_error"].append(
-                    int(np.abs(rec - mono).max()) if mono.size else 0
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=ADPCM_FEATURE_SCHEMA)
+    return _extract_metadata(
+        media.select("media_id", "payload"),
+        T.StructType(ADPCM_FEATURE_SCHEMA.fields[1:]),
+        "adpcm",
+        "wav_roundtrip_features",
+        False,
+    )
 
 
 def resize_png(media: DataFrame, width: int, height: int) -> DataFrame:
@@ -692,9 +675,6 @@ def resize_png(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.mapInPandas(batches, schema=schema)
 
 
-PHASH_W, PHASH_H = 7, 9  # 63 bits — fits signed BIGINT exactly
-
-
 def image_phash(media: DataFrame, codec: str = "bmp") -> DataFrame:
     """Perceptual average-hash per image — the content-based IMAGE
     dedup key (byte-level dedup misses re-encodes; aHash survives
@@ -709,39 +689,14 @@ def image_phash(media: DataFrame, codec: str = "bmp") -> DataFrame:
     """
     if codec not in _IMAGE_CODECS:
         raise ValueError(f"unsupported image codec {codec!r}")
-    module, decoder, _ = _IMAGE_CODECS[codec]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import importlib
-
-        import numpy as np
-
-        from ..functions.bmp import resize_nearest
-
-        decode_img = getattr(importlib.import_module(f"{_FUNCTIONS}.{module}"), decoder)
-
-        for pdf in it:
-            ids, hashes = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, _, rows = decode_img(bytes(p))
-                grid = resize_nearest(rows, PHASH_W, PHASH_H).astype(np.int64)
-                gray = grid.sum(axis=2) // 3  # integer grayscale per cell
-                mean = int(gray.sum()) // (PHASH_W * PHASH_H)
-                bits = (gray >= mean).reshape(-1)  # row-major, y*W+x
-                h = int(
-                    (bits.astype(np.int64) << np.arange(PHASH_W * PHASH_H)).sum()
-                )
-                ids.append(int(mid))
-                hashes.append(h)
-            yield pd.DataFrame({"media_id": ids, "phash": hashes})
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("phash", T.LongType()),
-        ]
+    module, phash, _ = _IMAGE_CODECS[codec]
+    return _extract_metadata(
+        media.select("media_id", "payload"),
+        T.StructType([T.StructField("phash", T.LongType())]),
+        module,
+        phash,
+        False,
     )
-    return media.mapInPandas(batches, schema=schema)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -777,7 +732,10 @@ def audio_frame_energy(media: DataFrame) -> DataFrame:
         for pdf in it:
             mids, idxs, energies = [], [], []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, _, frames = decode_wav(bytes(p))
+                try:
+                    _, _, frames = decode_wav(bytes(p))
+                except ValueError as e:
+                    raise ValueError(f"media_id={mid}: {e}") from e
                 e = np.abs(frames.astype(np.int64)).sum(axis=1)
                 n = len(e)
                 mids.extend([int(mid)] * n)

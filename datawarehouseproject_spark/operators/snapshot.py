@@ -32,14 +32,3 @@ def daily_snapshot(
         F.col("MAX_PRICE"),
         F.col("MIN_PRICE"),
     )
-
-
-def write_snapshot(snapshot: DataFrame, path: str) -> None:
-    """Append today's partition with dynamic partition overwrite.
-
-    Requires ``spark.sql.sources.partitionOverwriteMode=dynamic``
-    (set by :func:`..session.get_spark`): only the DATE_SK partitions
-    present in ``snapshot`` are replaced — the upsert (S8) semantics
-    without a row-level merge.
-    """
-    snapshot.write.mode("overwrite").partitionBy("DATE_SK").parquet(path)

@@ -37,6 +37,11 @@ LEDGER_SCHEMA = T.StructType(
 RUNNING, SUCCESS, FAIL, WAITING = "RUNNING", "SUCCESS", "FAIL", "WAITING"
 
 
+def utc_now() -> datetime.datetime:
+    """The ledger's clock: naive UTC, as START_TIME/END_TIME store it."""
+    return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+
+
 class RunLedger:
     """Append-only process log with the reference's guard queries."""
 
@@ -60,8 +65,9 @@ class RunLedger:
     ) -> None:
         """Append one run record; dict messages stored as JSON (the
         reference dumps row-count dicts into MESSAGE,
-        load_staging.py:42-45)."""
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        load_staging.py:42-45). ``start``/``end`` default to now; a
+        stage passes the :func:`utc_now` it began at as ``start``."""
+        now = utc_now()
         msg = json.dumps(message) if isinstance(message, dict) else message
         row = [(process, start or now, end or now, status, msg)]
         self.spark.createDataFrame(row, LEDGER_SCHEMA).coalesce(1).write.mode(

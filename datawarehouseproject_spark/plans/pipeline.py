@@ -32,7 +32,7 @@ from ..operators.rollups import monthly_rollup, quarterly_rollup
 from ..operators.scd2 import scd2_apply
 from ..operators.snapshot import daily_snapshot
 from ..sources.parquet import overwrite_atomic
-from .ledger import RunLedger, SUCCESS
+from .ledger import RunLedger, SUCCESS, utc_now
 
 
 class Pipeline:
@@ -74,6 +74,7 @@ class Pipeline:
 
         from pyspark.sql import Observation
 
+        start = utc_now()
         # unique name per run: listener registrations are per-name and
         # a reused name throws (benign but noisy) on the second run
         obs = Observation(f"clean_{uuid.uuid4().hex[:8]}")
@@ -82,7 +83,9 @@ class Pipeline:
         )
         self.cat.write(out, "products_transform", "staging")
         if self.ledger:
-            self.ledger.log("clean", SUCCESS, {"rows_out": obs.get["rows_out"]})
+            self.ledger.log(
+                "clean", SUCCESS, {"rows_out": obs.get["rows_out"]}, start=start
+            )
         return self.cat.table("products_transform", "staging")
 
     # ---------------- stage 3: SCD2 (staging history) ----------------
@@ -103,6 +106,7 @@ class Pipeline:
         - the new current set atomically replaces the ``IS_CURRENT=1``
           partition directory via the temp-path swap.
         """
+        start = utc_now()
         hist_path = self.cat.path("products_expired", "staging")
         cur_path = os.path.join(hist_path, "IS_CURRENT=1")
         current = (
@@ -124,7 +128,7 @@ class Pipeline:
         new_current = res.history.filter(F.col("EXPIRED_AT") == open_ts)
         overwrite_atomic(new_current, cur_path)
         if self.ledger:
-            self.ledger.log("transform_scd2", SUCCESS, metrics)
+            self.ledger.log("transform_scd2", SUCCESS, metrics, start=start)
         return metrics
 
     # ---------------- stage 4: dims (warehouse) ----------------
@@ -238,6 +242,7 @@ class Pipeline:
         only dedups same-day reruns)."""
         if self.ledger and self.ledger.succeeded_for("pipeline", for_date):
             return {"skipped": 1}
+        start = utc_now()
         staging = self.clean(raw)
         metrics = self.scd2(staging, now=now)
         self.load_dims()
@@ -245,6 +250,6 @@ class Pipeline:
         self.load_marts()
         if self.ledger:
             self.ledger.log(
-                "pipeline", SUCCESS, {**metrics, "for_date": str(for_date)}
+                "pipeline", SUCCESS, {**metrics, "for_date": str(for_date)}, start=start
             )
         return metrics

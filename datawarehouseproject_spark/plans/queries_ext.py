@@ -1122,22 +1122,22 @@ def q_jpeg_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "time-travel", "versioned-table", "snapshot"),
 )
 def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot time travel on a versioned table
-    (``sources/versioned.py`` — the lakehouse commit pattern:
-    immutable ``v{N}`` directories + an atomically swapped manifest,
-    i.e. Delta/Iceberg's mechanism reduced to filesystem
-    essentials). The query commits two versions of a daily revenue
-    rollup (an early-month load, then the full backfill), reads BOTH
+    """Snapshot time travel on a versioned table: a Delta table
+    (``sources/delta_native.py``) whose every commit is a new
+    ``_delta_log`` version over immutable data files. The query
+    commits two versions of a daily revenue rollup (an early-month
+    load, then the full backfill, as an overwrite), reads BOTH
     snapshots back by version number, and diffs them — the
     what-changed-between-runs audit every reproducible training
     pipeline needs ("which feature rows differ from what the model
-    saw?"). Readers of v1 are never affected by the v2 commit: the
-    writer creates new files only, and the commit is one manifest
-    rename — no swap window at all, unlike rewrite-in-place. The
+    saw?"). Readers of version 0 are never affected by the version-1
+    commit: the overwrite adds new files and tombstones the old ones
+    in the log, and the commit is one exclusive link of the version's
+    JSON — no swap window at all, unlike rewrite-in-place. The
     oracle recomputes both snapshots from the raw events and the
     same full-outer diff."""
     _utc(spark)
-    from ..sources.versioned import read_version, write_version
+    from ..sources.delta_native import read_delta, write_delta
 
     root = _scratch("versioned_revenue")
     ev = _t(spark, sf_dir, "events")
@@ -1150,10 +1150,10 @@ def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue")
         )
     )
-    write_version(daily.filter(F.dayofmonth("day") <= 15), root)
-    write_version(daily, root)
-    v1 = read_version(spark, root, version=1)
-    v2 = read_version(spark, root, version=2)
+    write_delta(daily.filter(F.dayofmonth("day") <= 15), root, mode="overwrite")
+    write_delta(daily, root, mode="overwrite")
+    v1 = read_delta(spark, root, version=0)
+    v2 = read_delta(spark, root, version=1)
     a, b = v1.alias("a"), v2.alias("b")
     return a.join(b, F.col("a.day") == F.col("b.day"), "full_outer").select(
         F.coalesce(F.col("b.day"), F.col("a.day")).alias("day"),
@@ -7614,16 +7614,16 @@ def q_versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert / update / delete with before/after values — unchanged
     days are NOT emitted, which is the entire point of a CDF.
 
-    Engine path: two real commits through the CAS log
-    (``sources/versioned.py``), both snapshots read back BY VERSION
-    NUMBER, one full-outer join on the key. The oracle recomputes
+    Engine path: two real overwrite commits to a Delta table
+    (``sources/delta_native.py``), both snapshots read back BY
+    VERSION NUMBER, one full-outer join on the key. The oracle recomputes
     both versions from raw events and the same classification. At
     100 TB the diff cost is bounded by the two snapshots' key
     cardinality, not the fact table — and a production system would
     store per-commit row deltas to skip even that (documented
     trade)."""
     _utc(spark)
-    from ..sources.versioned import read_version, write_version
+    from ..sources.delta_native import read_delta, write_delta
 
     root = _scratch("versioned_cdf")
     ev = _t(spark, sf_dir, "events")
@@ -7641,12 +7641,12 @@ def q_versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("ts").alias("day"))
         .agg(F.sum(dec).cast("double").alias("revenue"))
     )
-    write_version(v1, root)
-    write_version(v2, root)
-    r1 = read_version(spark, root, version=1).select(
+    write_delta(v1, root, mode="overwrite")
+    write_delta(v2, root, mode="overwrite")
+    r1 = read_delta(spark, root, version=0).select(
         F.col("day").alias("day1"), F.col("revenue").alias("revenue_before")
     )
-    r2 = read_version(spark, root, version=2).select(
+    r2 = read_delta(spark, root, version=1).select(
         F.col("day").alias("day2"), F.col("revenue").alias("revenue_after")
     )
     cdf = r1.join(r2, F.col("day1") == F.col("day2"), "full_outer").select(
@@ -7679,43 +7679,38 @@ def q_versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "data-skipping", "versioned-table", "stats"),
 )
 def q_data_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILE-LEVEL DATA SKIPPING on a versioned table — the min/max
+    """FILE-LEVEL DATA SKIPPING on a Delta table — the min/max
     stats prune that makes a 100 TB time-range query read a sliver
-    instead of the table (Delta/Iceberg's add-file stats, reduced to
-    filesystem essentials in ``sources/versioned.py``). The commit
-    path lifts per-file min/max for the chosen columns out of the
-    parquet FOOTERS the write already produced (zero extra data I/O)
-    into a ``_stats.json`` manifest inside the immutable snapshot
-    dir; the pruned reader opens only files whose range intersects
-    the predicate. The write clusters by ``repartitionByRange`` on
-    the skip column so files carry TIGHT disjoint ranges — the same
-    reason production tables Z-order/cluster on their hot filter
-    keys: stats are only as good as the layout.
+    instead of the table. The commit (``sources/delta_native.py``)
+    lifts per-file min/max out of the parquet FOOTERS the write
+    already produced (zero extra data I/O) into each add action's
+    stats; ``read_delta(where={column: (lower, upper)})`` opens only
+    the files whose range meets the predicate. The write clusters by
+    ``repartitionByRange`` on the skip column so files carry TIGHT
+    disjoint ranges — the same reason production tables
+    Z-order/cluster on their hot filter keys: stats are only as good
+    as the layout.
 
     Pruning is conservative (a superset of matching files; the exact
     predicate still runs and pushes into the parquet scan), so value
     equality with the plain full-scan oracle proves no row was
     skipped that shouldn't be. `tests/test_versioned.py` pins the
-    other half — that files WERE skipped, and that stats-less
-    snapshots fall back to a full scan."""
+    other half — that files WERE skipped, and that files without
+    stats are kept."""
     _utc(spark)
-    from ..sources.versioned import read_version_pruned, write_version
+    import datetime as _dt
+
+    from ..sources.delta_native import read_delta, write_delta
 
     root = _scratch("orders_skip")
     orders = _t(spark, sf_dir, "orders")
-    write_version(
-        orders.repartitionByRange(8, "o_orderdate"),
-        root,
-        stats_columns=("o_orderdate",),
-    )
-    import datetime as _dt
-
-    pruned, _scanned, _total = read_version_pruned(
+    write_delta(orders.repartitionByRange(8, "o_orderdate"), root)
+    pruned = read_delta(
         spark,
         root,
-        "o_orderdate",
-        lower=_dt.datetime(1995, 1, 1),
-        upper=_dt.datetime(1996, 1, 1),
+        where={
+            "o_orderdate": (_dt.datetime(1995, 1, 1), _dt.datetime(1996, 1, 1))
+        },
     )
     lo, hi = F.lit("1995-01-01").cast("timestamp"), F.lit(
         "1996-01-01"

@@ -13,7 +13,7 @@ lose it. Tables land under ``spark.sql.warehouse.dir``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -52,12 +52,3 @@ def write_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Join two tables bucketed on the same key/count — planner emits
-    no Exchange (verify with ``.explain``; tested in
-    tests/test_bucketed.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on)

@@ -48,9 +48,13 @@ Scale posture: the data write is a normal distributed
 ``df.write.parquet``; only the COMMIT is driver-side — one parquet
 footer read per new file for stats and one JSON link, the same
 shape every production Delta writer has (the driver finalizes, the
-cluster writes).  Reads prune like any parquet scan: the log replay
-yields live file paths, and Spark's own pushdown applies below them.
-Commit atomicity = exclusive hard-link of the ``<version>.json``
+cluster writes).  Staging writes store timestamps as INT64 micros
+(INT96 has no footer min/max), so add-stats cover them too, in
+ISO-8601.  Reads prune at the log layer — by ``partitionValues``,
+and by add-stats for a ``(lower, upper)`` range on a data column —
+then Spark's own pushdown applies below the live files.  Data files
+are hard-linked into place, never over an existing file.  Commit
+atomicity = exclusive hard-link of the ``<version>.json``
 (create-if-absent, never rename-over) — a lost race removes its own
 staged data files before raising, so no orphans outlive a conflict
 (ADVICE r13).  Object stores need a coordinating commit service,
@@ -58,9 +62,14 @@ which is out of scope here and fenced by the link semantics."""
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+import decimal
 import json
 import os
 import re
+import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 _LOG = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CP_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
+_CONF_LOCK = threading.Lock()
 
 
 def _log_info(path: str) -> tuple[int, int | None, set[int]]:
@@ -281,35 +291,84 @@ def _replay_full(path: str, version: int | None):
     return live, snap["meta"]["schemaString"], snap["pcols"]
 
 
+def _stat_scalar(v):
+    """A footer statistic or a range bound as an ORDER-PRESERVING JSON
+    scalar: dates and timestamps (naive = UTC) go to ISO-8601, Decimal
+    to its string; None for binary (writer-dependent) and the rest."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return v.isoformat()
+    if isinstance(v, (datetime.date, decimal.Decimal)):
+        return str(v)
+    return None
+
+
 def _file_stats(table_path: str, rel: str) -> str:
     """numRecords + per-column min/max lifted from the parquet
     footer (row-group stats aggregated) — one footer read per new
     file, driver-side, exactly a production writer's commit cost."""
-    import pyarrow.parquet as pq
+    from .parquet import footer_min_max
 
-    md = pq.ParquetFile(os.path.join(table_path, rel)).metadata
+    rows, bounds = footer_min_max(os.path.join(table_path, rel))
     mins: dict = {}
     maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            name = col.path_in_schema
-            if st is None or not st.has_min_max or "." in name:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                continue  # binary stats are writer-dependent; skip
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
+    for name, (lo, hi) in bounds.items():
+        lo, hi = _stat_scalar(lo), _stat_scalar(hi)
+        if lo is not None and hi is not None:
+            mins[name], maxs[name] = lo, hi
     return json.dumps(
-        {"numRecords": md.num_rows, "minValues": mins,
-         "maxValues": maxs},
-        default=str,
+        {"numRecords": rows, "minValues": mins, "maxValues": maxs}
     )
+
+
+def _pad_date(s):
+    """ISO date -> its midnight instant, so a date compares exactly
+    with a timestamp."""
+    if isinstance(s, str) and len(s) == 10 and s[4] == s[7] == "-":
+        return s + "T00:00:00"
+    return s
+
+
+def _keep_file(stats_raw, column: str, lo, hi, key=_pad_date) -> bool:
+    """True unless an add's stats PROVE that no row has ``column`` in
+    [``lo``, ``hi``] (:func:`_stat_scalar`-encoded, None = open). A
+    file without stats for the column is kept, and so is one whose
+    stats do not compare with the bound; ``key`` maps both to
+    comparable values."""
+    st = json.loads(stats_raw) if isinstance(stats_raw, str) else {}
+    fmin = st.get("minValues", {}).get(column)
+    fmax = st.get("maxValues", {}).get(column)
+    if fmin is None or fmax is None:
+        return True
+
+    def below(a, b) -> bool:  # a < b, when the two compare at all
+        a, b = key(a), key(b)
+        num = (int, float)
+        same = type(a) is type(b) or isinstance(a, num) and isinstance(b, num)
+        return same and a < b
+
+    return not (lo is not None and below(fmax, lo)
+                or hi is not None and below(hi, fmin))
+
+
+@contextlib.contextmanager
+def _timestamp_stats(spark: SparkSession):
+    """Write timestamps as INT64 micros during a staging write: Spark's
+    default INT96 has no footer min/max, so it could get no add-stats."""
+    key = "spark.sql.parquet.outputTimestampType"
+    with _CONF_LOCK:  # concurrent writers share the session conf
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "TIMESTAMP_MICROS")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def _stage_and_place(
@@ -318,15 +377,16 @@ def _stage_and_place(
     tag: str = "",
 ) -> list[tuple[str, dict]]:
     """Distributed parquet write into a staging dir, then
-    deterministic rename into the table root (Hive layout under
-    partitioning).  ``tag`` disambiguates file names when one commit
+    deterministic placement (:func:`_place`) into the table root (Hive
+    layout under partitioning).  ``tag`` disambiguates file names when one commit
     stages multiple times (OPTIMIZE groups).  Returns
     [(relative path, partitionValues)]."""
     staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:12]}")
     writer = df.write
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    with _timestamp_stats(df.sparkSession):
+        writer.parquet(staging)
     placed = []
     i = 0
     for dirpath, _dnames, fnames in sorted(os.walk(staging)):
@@ -352,14 +412,27 @@ def _stage_and_place(
                 os.makedirs(
                     os.path.join(path, reldir), exist_ok=True
                 )
-            os.rename(os.path.join(dirpath, name),
-                      os.path.join(path, rel))
+            rel = _place(os.path.join(dirpath, name), path, rel)
             placed.append((rel, pvals))
             i += 1
-    import shutil
-
     shutil.rmtree(staging)
     return placed
+
+
+def _place(src: str, path: str, rel: str) -> str:
+    """Hard-link ``src`` into the table as ``rel``, suffixed ``-<n>``
+    while that name is taken (a concurrent writer of the same version,
+    or a crashed one's leftover): never replacing a file, a losing
+    writer's cleanup removes only its own. Returns the name used."""
+    base, ext = os.path.splitext(rel)
+    n = 0
+    while True:
+        try:
+            os.link(src, os.path.join(path, rel))
+            return rel
+        except FileExistsError:
+            n += 1
+            rel = f"{base}-{n}{ext}"
 
 
 def _add_line(path: str, rel: str, pvals: dict,
@@ -562,7 +635,8 @@ def write_delta_split(
         )
     data_schema = df.drop(split_col).schema
     staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:12]}")
-    df.write.partitionBy(split_col).parquet(staging)
+    with _timestamp_stats(df.sparkSession):
+        df.write.partitionBy(split_col).parquet(staging)
     # ADVICE r14: everything from here to the last commit runs under
     # try/finally so a failed validation/place/commit never leaves
     # the .staging-* directory inside the table root
@@ -572,8 +646,6 @@ def write_delta_split(
             data_schema, staging,
         )
     finally:
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -616,8 +688,7 @@ def _place_and_commit_splits(
         version = idx
         placed: list[tuple[str, dict]] = []
         for i, src in enumerate(by_value.get(str(value), [])):
-            rel = f"part-{version:05d}-{i:05d}.parquet"
-            os.rename(src, os.path.join(path, rel))
+            rel = _place(src, path, f"part-{version:05d}-{i:05d}.parquet")
             placed.append((rel, {}))
         lines = [json.dumps({"commitInfo": {
             "operation": "WRITE",
@@ -778,13 +849,15 @@ def read_delta(
     layer.  Replay starts from the newest checkpoint when one covers
     the requested version.
 
-    ``where`` = {partition column: string value} prunes files AT THE
-    LOG LAYER via each add action's ``partitionValues`` — the whole
-    point of a partitioned Delta table at 100 TB: the reader never
-    lists, opens, or plans the other partitions' files.  Keys must
-    be declared partition columns (a typo would silently scan
-    everything).  Partition column values come back from the Hive
-    directory layout (``basePath``), same as any partitioned scan.
+    ``where`` prunes files AT THE LOG LAYER — the reader never lists,
+    opens, or plans the files it drops.  ``{partition column: value}``
+    keeps the files whose ``partitionValues`` equal ``str(value)``
+    (values come back from the Hive layout via ``basePath``).
+    ``{data column: (lower, upper)}`` (inclusive, None = open) is
+    STATS-BASED FILE SKIPPING: a file is dropped only when its
+    add-stats prove no row falls in the range, so the caller still
+    applies its exact predicate.  Keys must be columns of the table
+    (a typo would silently scan everything).
 
     PROTOCOL fence: the reader honors reader version 1 and reader
     version 3 with readerFeatures ⊆ {deletionVectors} — deletion
@@ -816,19 +889,27 @@ def read_delta(
         json.loads(snap["meta"]["schemaString"])
     )
     bodies = snap["live"]
-    if where:
-        for k in where:
-            if k not in pcols:
-                raise ValueError(
-                    f"{k!r} is not a partition column of this table"
-                )
-        bodies = {
-            rel: body for rel, body in bodies.items()
-            if all(
-                body.get("partitionValues", {}).get(k) == str(v)
-                for k, v in where.items()
+    types = {f.name: f.dataType for f in schema.fields}
+    for k, v in (where or {}).items():
+        ranged = isinstance(v, (tuple, list))
+        if k in pcols and not ranged:
+            bodies = {
+                rel: body for rel, body in bodies.items()
+                if body.get("partitionValues", {}).get(k) == str(v)
+            }
+        elif k in types and ranged and len(v) == 2:
+            key = decimal.Decimal if isinstance(
+                types[k], T.DecimalType) else _pad_date
+            lo, hi = (_stat_scalar(b) for b in v)
+            bodies = {
+                rel: body for rel, body in bodies.items()
+                if _keep_file(body.get("stats"), k, lo, hi, key)
+            }
+        else:
+            raise ValueError(
+                f"{k!r} is not a partition column of this table (a "
+                "data column takes a (lower, upper) range)"
             )
-        }
     return _scan_live(spark, path, bodies, schema, pcols)
 
 

@@ -370,39 +370,18 @@ def _footer_bounds(full: str, ice_schema: dict):
     bytes}) from the parquet footer, for the int/long columns —
     one driver-side footer read per new file, the same commit cost
     the Delta writer pays."""
-    import pyarrow.parquet as pq
+    from .parquet import footer_min_max
 
-    md = pq.ParquetFile(full).metadata
-    by_name = {
-        f["name"]: f for f in ice_schema["fields"]
-        if f["type"] in ("int", "long")
-    }
-    mins: dict[str, int] = {}
-    maxs: dict[str, int] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            name = col.path_in_schema
-            if st is None or not st.has_min_max or name not in by_name:
-                continue
-            lo, hi = st.min, st.max
-            if not isinstance(lo, int) or isinstance(lo, bool):
-                continue
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-    lower = {
-        by_name[n]["id"]: _single_value_bytes(v, by_name[n]["type"])
-        for n, v in mins.items()
-    }
-    upper = {
-        by_name[n]["id"]: _single_value_bytes(v, by_name[n]["type"])
-        for n, v in maxs.items()
-    }
-    return md.num_rows, lower, upper
+    nrec, bounds = footer_min_max(full)
+    lower: dict[int, bytes] = {}
+    upper: dict[int, bytes] = {}
+    for f in ice_schema["fields"]:
+        lo, hi = bounds.get(f["name"], (None, None))
+        if f["type"] in ("int", "long") and isinstance(lo, int) \
+                and not isinstance(lo, bool):
+            lower[f["id"]] = _single_value_bytes(lo, f["type"])
+            upper[f["id"]] = _single_value_bytes(hi, f["type"])
+    return nrec, lower, upper
 
 
 def _encode_entry(

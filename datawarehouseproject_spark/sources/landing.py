@@ -72,11 +72,3 @@ def write_landing_csv(df: DataFrame, path: str, single_file: bool = False) -> No
     """
     out = df.coalesce(1) if single_file else df
     out.write.mode("overwrite").option("header", True).csv(path)
-
-
-def column_intersection(df: DataFrame, target_schema: T.StructType) -> DataFrame:
-    """Schema reconciliation: keep only columns the target declares
-    (the reference's DESCRIBE ∩ CSV-header step,
-    load_staging.py:62-65,144-156)."""
-    keep = [f.name for f in target_schema.fields if f.name in df.columns]
-    return df.select(*keep)

@@ -7,6 +7,9 @@ temp-path swap (the SCD2 history). The swap keeps a reader-consistent
 table at all times and makes re-runs idempotent; on a production
 filesystem/catalog this is the standard staging-dir + atomic-rename
 (or metastore pointer-swap) commit.
+
+:func:`footer_min_max` is the one footer-statistics walk behind the
+Delta add-stats and the Iceberg manifest bounds.
 """
 
 from __future__ import annotations
@@ -125,3 +128,39 @@ def upsert_partitions(
     Relies on ``spark.sql.sources.partitionOverwriteMode=dynamic``
     (set in :func:`..session.get_spark`)."""
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+
+
+def footer_min_max(full: str) -> tuple[int, dict]:
+    """``(row count, {column: (min, max)})`` from one parquet file's
+    footer: row-group min/max folded per top-level column, no data
+    read. A row group where the column is all null bounds nothing and
+    is passed over; any other row group without min/max (INT96
+    timestamps, over-long binaries) leaves the column unbounded, so a
+    bound always covers every value in the file. Values are pyarrow's
+    statistic scalars, unencoded."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(full).metadata
+    bounds: dict = {}
+    unbounded: set = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            name = col.path_in_schema
+            if "." in name or name in unbounded:
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                if st is None or not st.has_null_count \
+                        or st.null_count != g.num_rows:
+                    unbounded.add(name)
+                    bounds.pop(name, None)
+                continue
+            lo, hi = st.min, st.max
+            if name in bounds:
+                blo, bhi = bounds[name]
+                lo = lo if lo < blo else blo
+                hi = hi if hi > bhi else bhi
+            bounds[name] = (lo, hi)
+    return md.num_rows, bounds

@@ -23,8 +23,8 @@ def multimodal_kernel_calls():
     called with the three kernels replaced by recorders (no Spark):
     ``{public name: [(kernel, module, fn, permissive), ...]}``, one
     entry per call. Extractors run permissive where they can;
-    ``extract_image_features`` and ``extract_stream_structure`` run
-    once per codec/format."""
+    ``extract_image_features``, ``image_phash`` and
+    ``extract_stream_structure`` run once per codec/format."""
     import inspect
     from unittest import mock
 
@@ -43,7 +43,8 @@ def multimodal_kernel_calls():
     names = [
         n for n in dir(mm)
         if n.startswith(("synthesize_", "extract_", "explode_"))
-        or n in ("sniff_media", "sample_frames")
+        or n in ("sniff_media", "sample_frames", "image_phash",
+                 "adpcm_roundtrip_features")
     ]
     with mock.patch.multiple(
         mm,
@@ -56,7 +57,7 @@ def multimodal_kernel_calls():
             start = len(log)
             params = inspect.signature(op).parameters
             kwargs = {"permissive": True} if "permissive" in params else {}
-            if name == "extract_image_features":
+            if name in ("extract_image_features", "image_phash"):
                 for codec in ("bmp", "png", "gif", "jpeg"):
                     op(mock.MagicMock(), codec=codec, **kwargs)
             elif name == "extract_stream_structure":

@@ -56,3 +56,20 @@ def test_compression_ratio_is_4x():
     samples = np.zeros(1000, dtype=np.int16)
     encoded = encode_adpcm(samples)
     assert len(encoded) - 6 == 500  # 2 samples/byte vs 2 bytes/sample
+
+
+def test_adpcm_roundtrip_features_names_the_truncated_payload(spark):
+    """A WAV payload the decoder rejects fails the job with its
+    media_id in front of the decoder's message."""
+    from pyspark.errors import PythonException
+
+    from datawarehouseproject_spark.functions.wav import synth_wav
+    from datawarehouseproject_spark.operators.multimodal import (
+        adpcm_roundtrip_features,
+    )
+
+    media = spark.createDataFrame(
+        [(3, synth_wav(3)[:30])], "media_id long, payload binary"
+    )
+    with pytest.raises(PythonException, match="media_id=3: truncated fmt chunk"):
+        adpcm_roundtrip_features(media).collect()

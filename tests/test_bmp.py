@@ -181,3 +181,19 @@ def test_image_phash_invariant_to_reencode_and_upscale(spark):
             assert upscaled[seed] == base[seed], seed
     # distinct images get distinct hashes here
     assert len(set(base.values())) == len(base)
+
+
+def test_image_phash_names_the_truncated_payload(spark):
+    """A payload the decoder rejects fails the job with its media_id
+    in front of the decoder's message, like every extract_* operator
+    in strict mode."""
+    from pyspark.errors import PythonException
+
+    from datawarehouseproject_spark.functions.png import synth_png
+    from datawarehouseproject_spark.operators.multimodal import image_phash
+
+    media = spark.createDataFrame(
+        [(5, synth_png(5)[:60])], "media_id long, payload binary"
+    )
+    with pytest.raises(PythonException, match="media_id=5: truncated PNG chunk"):
+        image_phash(media, codec="png").collect()

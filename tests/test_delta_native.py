@@ -117,6 +117,9 @@ def test_partitioned_write_and_log_pruning(spark, tmp_path):
     assert files and all("/p=3/" in f for f in files)
     with pytest.raises(ValueError, match="not a partition column"):
         read_delta(spark, root, where={"typo": 1})
+    # a range on a partition column keeps every file (add-stats hold
+    # no partition values) rather than matching none
+    assert read_delta(spark, root, where={"p": (2, 4)}).count() == 1000
     # drifting layout on append rejects
     with pytest.raises(ValueError, match="partition_by drift"):
         write_delta(df, root, mode="append", now_ms=2,
@@ -949,3 +952,31 @@ def test_write_delta_split_rejects_empty_split_and_cleans_staging(
     assert leftovers == []
     # nothing was committed either
     assert not os.path.exists(os.path.join(root, "_delta_log"))
+
+
+def test_timestamp_column_add_stats_record_min_max(spark, tmp_path):
+    """Spark writes INT96 timestamps by default, whose footers carry
+    no min/max. The staging write switches to INT64 micros for the
+    write only, so a timestamp column gets add-stats — as ISO-8601
+    strings, whose order is chronological — and the session's setting
+    comes back unchanged."""
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key, None)
+    root = _tbl(tmp_path)
+    df = spark.range(3).select(
+        F.col("id"),
+        F.expr("timestampadd(HOUR, CAST(id AS INT), "
+               "timestamp'2024-03-01 10:00:00')").alias("ts"),
+        F.expr("date_add(date'2024-03-01', CAST(id AS INT))").alias("d"),
+    )
+    write_delta(df.coalesce(1), root, now_ms=1)
+    with open(os.path.join(root, "_delta_log", f"{0:020d}.json")) as fh:
+        (add,) = [json.loads(ln)["add"] for ln in fh if '"add"' in ln]
+    st = json.loads(add["stats"])
+    assert st["minValues"]["ts"] == "2024-03-01T10:00:00"
+    assert st["maxValues"]["ts"] == "2024-03-01T12:00:00"
+    assert st["minValues"]["d"] == "2024-03-01"
+    assert st["maxValues"]["d"] == "2024-03-03"
+    assert spark.conf.get(key, None) == before
+    assert sorted(r["ts"] for r in read_delta(spark, root).collect()) == \
+        sorted(r["ts"] for r in df.collect())

@@ -126,6 +126,18 @@ def test_once_per_day_guard(spark, warehouse):
     assert m3 == {"rows_input": 3, "rows_inserted": 0, "rows_updated": 0}
 
 
+def test_ledger_records_real_stage_start_times(warehouse):
+    """Every stage record spans its stage: START_TIME is taken when the
+    stage begins, so it is strictly before END_TIME."""
+    _, pipe, _, _ = warehouse
+    rows = pipe.ledger._read().collect()
+    for process in ("clean", "transform_scd2", "pipeline"):
+        recs = [r for r in rows if r["PROCESS"] == process]
+        assert recs, process
+        for r in recs:
+            assert r["START_TIME"] < r["END_TIME"], (process, r)
+
+
 def test_scd2_closed_partition_untouched(spark, tmp_path):
     """The daily SCD2 job is O(current): rows expired earlier live in
     the IS_CURRENT=0 partition and their files are never rewritten —

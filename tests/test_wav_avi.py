@@ -245,3 +245,21 @@ def test_audio_frame_energy_matches_direct_decode(spark):
         for i, e in enumerate(np.abs(frames.astype(np.int64)).sum(axis=1)):
             want[(mid, i)] = int(e)
     assert got == want
+
+
+def test_audio_frame_energy_names_the_truncated_payload(spark):
+    """A WAV payload the decoder rejects fails the job with its
+    media_id in front of the decoder's message."""
+    from pyspark.errors import PythonException
+
+    from datawarehouseproject_spark.functions.wav import synth_wav
+    from datawarehouseproject_spark.operators.multimodal import (
+        audio_frame_energy,
+    )
+
+    media = spark.createDataFrame(
+        [(4, synth_wav(4)), (3, synth_wav(3)[:30])],
+        "media_id long, payload binary",
+    )
+    with pytest.raises(PythonException, match="media_id=3: truncated fmt chunk"):
+        audio_frame_energy(media).collect()
