@@ -52,8 +52,9 @@ cluster writes).  Staging writes store timestamps as INT64 micros
 (INT96 has no footer min/max), so add-stats cover them too, in
 ISO-8601.  Reads prune at the log layer — by ``partitionValues``,
 and by add-stats for a ``(lower, upper)`` range on a data column —
-then Spark's own pushdown applies below the live files.  Data files
-are hard-linked into place, never over an existing file.  Commit
+then Spark's own pushdown applies below the live files.  Data file
+names carry their staging write's unique id, so no writer lands on
+another's file.  Commit
 atomicity = exclusive hard-link of the ``<version>.json``
 (create-if-absent, never rename-over) — a lost race removes its own
 staged data files before raising, so no orphans outlive a conflict
@@ -78,6 +79,8 @@ _LOG = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CP_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 _CONF_LOCK = threading.Lock()
+# id(session) -> [Delta writes in flight, its timestamp conf before them]
+_TS_WRITERS: dict[int, list] = {}
 
 
 def _log_info(path: str) -> tuple[int, int | None, set[int]]:
@@ -357,18 +360,30 @@ def _keep_file(stats_raw, column: str, lo, hi, key=_pad_date) -> bool:
 @contextlib.contextmanager
 def _timestamp_stats(spark: SparkSession):
     """Write timestamps as INT64 micros during a staging write: Spark's
-    default INT96 has no footer min/max, so it could get no add-stats."""
+    default INT96 has no footer min/max, so it could get no add-stats.
+    The setting is the session's (no writer option reaches it), so
+    concurrent Delta writes on one session share it: the first sets
+    it, the last restores it, and no write waits for another.  While
+    any of them runs, the session's other parquet writes also store
+    INT64 micros."""
     key = "spark.sql.parquet.outputTimestampType"
-    with _CONF_LOCK:  # concurrent writers share the session conf
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "TIMESTAMP_MICROS")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+    with _CONF_LOCK:
+        entry = _TS_WRITERS.get(id(spark))
+        if entry is None:
+            entry = _TS_WRITERS[id(spark)] = [0, spark.conf.get(key, None)]
+            spark.conf.set(key, "TIMESTAMP_MICROS")
+        entry[0] += 1
+    try:
+        yield
+    finally:
+        with _CONF_LOCK:
+            entry[0] -= 1
+            if not entry[0]:
+                del _TS_WRITERS[id(spark)]
+                if entry[1] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, entry[1])
 
 
 def _stage_and_place(
@@ -376,12 +391,15 @@ def _stage_and_place(
     partition_by: list[str] | None,
     tag: str = "",
 ) -> list[tuple[str, dict]]:
-    """Distributed parquet write into a staging dir, then
-    deterministic placement (:func:`_place`) into the table root (Hive
-    layout under partitioning).  ``tag`` disambiguates file names when one commit
-    stages multiple times (OPTIMIZE groups).  Returns
-    [(relative path, partitionValues)]."""
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:12]}")
+    """Distributed parquet write into a staging dir, then a rename
+    into the table root (Hive layout under partitioning).  File names
+    carry the staging write's unique id, so two writers of one
+    version (or a crashed writer's leftovers) never share a name.
+    ``tag`` orders the file names when one commit stages multiple
+    times (OPTIMIZE groups).  Returns [(relative path,
+    partitionValues)]."""
+    uid = uuid.uuid4().hex[:12]
+    staging = os.path.join(path, f".staging-{uid}")
     writer = df.write
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -406,33 +424,18 @@ def _stage_and_place(
         for name in sorted(fnames):
             if not name.endswith(".parquet"):
                 continue
-            rel = f"part-{version:05d}-{i:05d}{tag}.parquet"
+            rel = f"part-{version:05d}-{i:05d}{tag}-{uid}.parquet"
             if reldir != ".":
                 rel = f"{reldir}/{rel}"
                 os.makedirs(
                     os.path.join(path, reldir), exist_ok=True
                 )
-            rel = _place(os.path.join(dirpath, name), path, rel)
+            os.rename(os.path.join(dirpath, name),
+                      os.path.join(path, rel))
             placed.append((rel, pvals))
             i += 1
     shutil.rmtree(staging)
     return placed
-
-
-def _place(src: str, path: str, rel: str) -> str:
-    """Hard-link ``src`` into the table as ``rel``, suffixed ``-<n>``
-    while that name is taken (a concurrent writer of the same version,
-    or a crashed one's leftover): never replacing a file, a losing
-    writer's cleanup removes only its own. Returns the name used."""
-    base, ext = os.path.splitext(rel)
-    n = 0
-    while True:
-        try:
-            os.link(src, os.path.join(path, rel))
-            return rel
-        except FileExistsError:
-            n += 1
-            rel = f"{base}-{n}{ext}"
 
 
 def _add_line(path: str, rel: str, pvals: dict,
@@ -606,7 +609,7 @@ def write_delta_split(
     This stages ONCE via a Hive ``partitionBy(split_col)`` write,
     then places each staged split and commits it under its own
     version — the resulting log (one append commit per value, files
-    named ``part-<version>-<i>.parquet``, adds carrying real
+    named ``part-<version>-<i>-<id>.parquet``, adds carrying real
     size/stats, checkpoints at ``checkpoint_every`` multiples) and
     the replayed row set are the same as the loop's. ``split_col``
     is layout-only and does NOT land in the data files, exactly like
@@ -634,7 +637,8 @@ def write_delta_split(
             "to an existing table via write_delta)"
         )
     data_schema = df.drop(split_col).schema
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:12]}")
+    uid = uuid.uuid4().hex[:12]
+    staging = os.path.join(path, f".staging-{uid}")
     with _timestamp_stats(df.sparkSession):
         df.write.partitionBy(split_col).parquet(staging)
     # ADVICE r14: everything from here to the last commit runs under
@@ -643,7 +647,7 @@ def write_delta_split(
     try:
         return _place_and_commit_splits(
             df, path, split_col, values, now_ms, checkpoint_every,
-            data_schema, staging,
+            data_schema, staging, uid,
         )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -651,7 +655,7 @@ def write_delta_split(
 
 def _place_and_commit_splits(
     df, path, split_col, values, now_ms, checkpoint_every,
-    data_schema, staging,
+    data_schema, staging, uid,
 ) -> int:
     by_value: dict[str, list[str]] = {}
     for dirpath, _dnames, fnames in sorted(os.walk(staging)):
@@ -688,7 +692,8 @@ def _place_and_commit_splits(
         version = idx
         placed: list[tuple[str, dict]] = []
         for i, src in enumerate(by_value.get(str(value), [])):
-            rel = _place(src, path, f"part-{version:05d}-{i:05d}.parquet")
+            rel = f"part-{version:05d}-{i:05d}-{uid}.parquet"
+            os.rename(src, os.path.join(path, rel))
             placed.append((rel, {}))
         lines = [json.dumps({"commitInfo": {
             "operation": "WRITE",
@@ -847,7 +852,9 @@ def read_delta(
     then a schema-pinned parquet scan over exactly those files, so
     Catalyst's pushdown/pruning applies untouched below the log
     layer.  Replay starts from the newest checkpoint when one covers
-    the requested version.
+    the requested version.  A version that needs a vacuumed file
+    raises ``ValueError`` here, before any scan — a silent partial
+    read would be a reproducibility bug.
 
     ``where`` prunes files AT THE LOG LAYER — the reader never lists,
     opens, or plans the files it drops.  ``{partition column: value}``
@@ -898,7 +905,9 @@ def read_delta(
                 if body.get("partitionValues", {}).get(k) == str(v)
             }
         elif k in types and ranged and len(v) == 2:
-            key = decimal.Decimal if isinstance(
+            # a float bound by its shortest repr: 0.1, not the
+            # double's 0.1000000000000000055…
+            key = (lambda s: decimal.Decimal(str(s))) if isinstance(
                 types[k], T.DecimalType) else _pad_date
             lo, hi = (_stat_scalar(b) for b in v)
             bodies = {
@@ -909,6 +918,12 @@ def read_delta(
             raise ValueError(
                 f"{k!r} is not a partition column of this table (a "
                 "data column takes a (lower, upper) range)"
+            )
+    for rel in bodies:
+        if not os.path.exists(os.path.join(path, rel)):
+            raise ValueError(
+                f"delta version {snap['version']} not available: "
+                f"{rel!r} is missing (vacuumed)"
             )
     return _scan_live(spark, path, bodies, schema, pcols)
 
@@ -986,8 +1001,8 @@ def _scan_live(spark, path: str, bodies: dict[str, dict],
     ``mapInPandas`` on the executors — the driver never materializes
     a bitmap, mirroring how delta-spark ships DV descriptors to
     tasks.  Join key is the file BASENAME: ``_stage_and_place``
-    names embed version+index+tag, so basenames are unique
-    table-wide even under Hive partitioning."""
+    names embed version+index+tag+staging id, so basenames are
+    unique table-wide even under Hive partitioning."""
     from pyspark.sql import functions as F
 
     names = [f.name for f in schema.fields]
@@ -1898,8 +1913,13 @@ def vacuum_delta(
     ``already_gone``, never an error — the loud failure is reserved
     for a LIVE path that is missing (real corruption).  Replays from
     the checkpoint when one exists (the checkpoint carries the
-    still-tombstoned removes).  ``dry_run=True`` (the default) only
-    reports."""
+    still-tombstoned removes).  UNTRACKED data files — a ``.parquet``
+    under the table root (outside ``_``/``.`` directories such as the
+    log and staging) that no retained log action names, e.g. the
+    placed files of a writer that died before its commit — go too
+    once their mtime is past the same horizon (real Delta's rule: the
+    window protects a writer still about to commit).
+    ``dry_run=True`` (the default) only reports."""
     if not isinstance(retention_hours, int) \
             or isinstance(retention_hours, bool) or retention_hours < 0:
         raise ValueError("retention_hours malformed")
@@ -1953,6 +1973,21 @@ def vacuum_delta(
                 if isinstance(act, dict) and "add" in act \
                         and isinstance(act["add"], dict):
                     note(act["add"])
+    # every file a retained version reads is live or tombstoned: the
+    # replay never drops a tombstone and checkpoints carry them all
+    untracked = []
+    for dirpath, dnames, fnames in os.walk(path):
+        dnames[:] = [d for d in dnames if d[0] not in "_."]
+        for n in fnames:
+            full = os.path.join(dirpath, n)
+            rel = os.path.relpath(full, path).replace(os.sep, "/")
+            if n.endswith(".parquet") and n[0] not in "_." \
+                    and rel not in live and rel not in tombstones \
+                    and os.path.getmtime(full) * 1000 <= horizon:
+                untracked.append(full)
+    for full in untracked:
+        if not dry_run:
+            os.remove(full)
     on_disk = sorted(
         n for n in os.listdir(path)
         if n.startswith("deletion_vector_") and n.endswith(".bin")
@@ -1968,6 +2003,8 @@ def vacuum_delta(
         "eligible": len(eligible),
         "deleted": deleted,
         "already_gone": already_gone,
+        "untracked": len(untracked),
+        "untracked_deleted": 0 if dry_run else len(untracked),
         "dv_bins": len(on_disk),
         "dv_eligible": len(dv_eligible),
         "dv_deleted": dv_deleted,

@@ -137,7 +137,11 @@ def footer_min_max(full: str) -> tuple[int, dict]:
     is passed over; any other row group without min/max (INT96
     timestamps, over-long binaries) leaves the column unbounded, so a
     bound always covers every value in the file. Values are pyarrow's
-    statistic scalars, unencoded."""
+    statistic scalars, unencoded; an INT32/INT64-backed decimal, whose
+    statistic pyarrow cannot lift, is scaled from the raw integers."""
+    import decimal
+    import json
+
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(full).metadata
@@ -157,7 +161,16 @@ def footer_min_max(full: str) -> tuple[int, dict]:
                     unbounded.add(name)
                     bounds.pop(name, None)
                 continue
-            lo, hi = st.min, st.max
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                lt = json.loads(st.logical_type.to_json())
+                if lt.get("Type") != "Decimal":
+                    unbounded.add(name)
+                    bounds.pop(name, None)
+                    continue
+                lo, hi = (decimal.Decimal(v).scaleb(-lt["scale"])
+                          for v in (st.min_raw, st.max_raw))
             if name in bounds:
                 blo, bhi = bounds[name]
                 lo = lo if lo < blo else blo

@@ -14,8 +14,6 @@ import json
 import os
 
 import pytest
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from datawarehouseproject_spark.sources import delta_native as D
@@ -107,15 +105,16 @@ def test_vacuum_retains_last_k(spark, tmp_path):
     assert set(_data_files(path)) == kept
     assert read_delta(spark, path, version=3).count() == 4
     assert read_delta(spark, path, version=2).count() == 3
-    with pytest.raises((AnalysisException, Py4JJavaError)):
-        read_delta(spark, path, version=0).count()
+    with pytest.raises(ValueError, match="not available"):
+        read_delta(spark, path, version=0)
 
 
 def test_uncommitted_orphan_invisible_and_nonblocking(spark, tmp_path):
     """A writer that dies after placing its data files but before its
     commit leaves files no log action names: readers never see them,
-    and the next commit is NOT blocked even though the orphan holds
-    the very file name that commit stages first."""
+    the next commit is NOT blocked (its file names carry its own
+    staging id), and once the orphan is older than the retention
+    window VACUUM deletes it while every committed version reads."""
     path = str(tmp_path / "t")
     write_delta(spark.range(3), path)
     staged = str(tmp_path / "orphan")
@@ -127,12 +126,25 @@ def test_uncommitted_orphan_invisible_and_nonblocking(spark, tmp_path):
     assert read_delta(spark, path).count() == 3
     with pytest.raises(ValueError, match="does not exist"):
         read_delta(spark, path, version=1)
-    # the orphan does not block the next commit, which takes a free
-    # name instead of the orphan's
-    assert write_delta(spark.range(7), path, mode="overwrite") == 1
-    assert read_delta(spark, path, version=1).count() == 7
+    # the orphan does not block the next commit
+    assert write_delta(spark.range(7), path) == 1
+    assert read_delta(spark, path, version=1).count() == 10
     assert "part-00001-00000.parquet" not in _live(path)
-    assert os.path.exists(orphan)
+    # inside the retention window the orphan may be a writer about to
+    # commit, so it stays
+    young = vacuum_delta(path, retention_hours=0, now_ms=HOUR_MS,
+                         dry_run=False)
+    assert young["untracked"] == 0 and os.path.exists(orphan)
+    dry = vacuum_delta(path, retention_hours=0, now_ms=10**13)
+    assert dry["untracked"] == 1 and os.path.exists(orphan)
+    res = vacuum_delta(path, retention_hours=0, now_ms=10**13,
+                       dry_run=False)
+    assert res["untracked_deleted"] == 1 and res["deleted"] == 0
+    assert not os.path.exists(orphan)  # the orphan is gone...
+    assert _data_files(path) == _live(path)
+    # ...and nothing committed was dropped
+    assert read_delta(spark, path, version=0).count() == 3
+    assert read_delta(spark, path, version=1).count() == 10
 
 
 def test_concurrent_writers_cas_exactly_one_winner(spark, tmp_path):
@@ -141,7 +153,6 @@ def test_concurrent_writers_cas_exactly_one_winner(spark, tmp_path):
     raises and removes its own data files (it does not retry at
     N+1). Every winner's rows are in the table under the version it
     won, no loser's rows are, and no file outlives its commit."""
-    import sys
     import threading
 
     path = str(tmp_path / "t")
@@ -163,17 +174,16 @@ def test_concurrent_writers_cas_exactly_one_winner(spark, tmp_path):
             errors.append(e)
 
     threads = [threading.Thread(target=writer, args=(i,)) for i in range(n_writers)]
-    switch = sys.getswitchinterval()
-    sys.setswitchinterval(1e-4)
-    try:
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=300)
-    finally:
-        sys.setswitchinterval(switch)
+    ts_key = "spark.sql.parquet.outputTimestampType"
+    ts_before = spark.conf.get(ts_key, None)
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
     assert not any(t.is_alive() for t in threads)
     assert not errors
+    # the last writer out restored the session's timestamp setting
+    assert spark.conf.get(ts_key, None) == ts_before
     assert won and len(won) + len(lost) == n_writers
     # every committed version has exactly one writer
     assert sorted(won.values()) == list(range(_latest(path) + 1))
@@ -303,8 +313,8 @@ def test_compact_then_vacuum_drops_small_file_snapshots(spark, tmp_path):
     res = vacuum_delta(path, retention_hours=1, now_ms=2 * HOUR_MS,
                        dry_run=False)
     assert res["deleted"] == 6
-    with pytest.raises((AnalysisException, Py4JJavaError)):
-        read_delta(spark, path, version=0).count()
+    with pytest.raises(ValueError, match="not available"):
+        read_delta(spark, path, version=0)
     assert read_delta(spark, path).count() == 50
     # exactly one data file remains on disk
     assert _data_files(path) == _live(path) and len(_live(path)) == 1
@@ -406,3 +416,18 @@ def test_data_skipping_timestamp_column(spark, tmp_path):
         & (F.col("ts") < F.lit("2024-07-01").cast("timestamp"))
     )
     assert got.count() == 30
+
+
+def test_data_skipping_decimal_column_float_bounds(spark, tmp_path):
+    """Float bounds on a decimal column compare by their decimal
+    value: 0.1 keeps a file whose max is 0.10, and 0.3 one whose min
+    is 0.30, as Spark's ``k >= 0.1 AND k <= 0.3`` matches both."""
+    path = str(tmp_path / "t")
+    k = (F.col("id") / 100).cast("decimal(10,2)").alias("k")
+    for lo, hi in ((0, 10), (11, 29), (30, 40), (50, 60)):
+        write_delta(spark.range(lo, hi + 1).select(k).coalesce(1), path)
+    pruned = read_delta(spark, path, where={"k": (0.1, 0.3)})
+    assert _n_files(pruned) == 3  # only the [0.50, 0.60] file goes
+    pred = (F.col("k") >= 0.1) & (F.col("k") <= 0.3)
+    assert pruned.filter(pred).count() == 21
+    assert read_delta(spark, path).filter(pred).count() == 21
